@@ -95,8 +95,11 @@ def main():
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", required=True, type=float)
     ap.add_argument("--trace", required=True, choices=("0", "1"))
-    ap.add_argument("--cores", type=int, default=min(4, os.cpu_count() or 1),
-                    help="local[k] task slots (default min(4, nproc))")
+    # two task slots leave the other CPUs to the driver, JIT and GC threads;
+    # at local[4] on 4 vCPUs those threads compete with the tasks and runs
+    # spread more (see README)
+    ap.add_argument("--cores", type=int, default=min(2, os.cpu_count() or 1),
+                    help="local[k] task slots (default min(2, nproc))")
     a = ap.parse_args()
 
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):

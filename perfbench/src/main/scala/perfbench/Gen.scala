@@ -111,10 +111,10 @@ object Gen {
   /** Designed make-up of the corpus (counts are the same for every seed,
     * so a pass always checks the same number of pairs and labels).
     */
-  val DupGroupSizes: Seq[(Int, Int)] = Seq(2 -> 60, 3 -> 20, 5 -> 6, 12 -> 2) // size -> groups
-  val PairFamilies = 80        // base + one variant
-  val TripleFamilies = 25      // base + two variants
-  val PairFamiliesWithCopy = 15 // base + variant + exact copy of the variant
+  val DupGroupSizes: Seq[(Int, Int)] = Seq(2 -> 12, 3 -> 4, 5 -> 1, 12 -> 1) // size -> groups
+  val PairFamilies = 16        // base + one variant
+  val TripleFamilies = 5       // base + two variants
+  val PairFamiliesWithCopy = 3 // base + variant + exact copy of the variant
 
   /** Zipf(1) sampler over the vocabulary. */
   private final class Zipf(n: Int) {

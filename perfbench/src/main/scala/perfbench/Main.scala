@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
   *
   *   --workload <name> --seed <n> --seconds <s> --trace <0|1>
   *   --launch-ms <epoch ms the run was launched> --work <dir> --out <dir>
-  *   [--cores <k>]  (local[k], default min(4, available processors))
+  *   [--cores <k>]  (local[k], default min(2, available processors))
   *
   * Untraced runs report the end-to-end metrics; traced runs the per-layer
   * metrics, the self time of each span kind and the tracing overhead, and
@@ -29,7 +29,7 @@ object Main {
     def get(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     Args(get("workload"), get("seed").toLong, get("seconds").toDouble, get("trace") == "1",
       get("launch-ms").toLong, Paths.get(get("work")), Paths.get(get("out")),
-      m.get("cores").map(_.toInt).getOrElse(math.min(4, Runtime.getRuntime.availableProcessors())))
+      m.get("cores").map(_.toInt).getOrElse(math.min(2, Runtime.getRuntime.availableProcessors())))
   }
 
   def main(argv: Array[String]): Unit = {
@@ -65,7 +65,13 @@ object Main {
     println(result)
   }
 
+  /** Heap in use after a full GC. Spark's ContextCleaner releases the
+    * broadcasts and shuffles of dropped plans only once a GC has shown
+    * them unreachable, so a second GC follows its cleaning pass.
+    */
   private def heapAfterGcMiB(): Double = {
+    System.gc()
+    Thread.sleep(250)
     System.gc()
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
@@ -95,13 +101,14 @@ object Main {
         val t = System.nanoTime()
         w.tr.span("op", 0)(w.run())
         val dt = (System.nanoTime() - t) / 1e9
-        System.err.println(f"perfbench: ${w.name} op ${ops + 1} took $dt%.3f s")
         wall += dt
         walls += dt
         ops += 1
         lat ++= w.latencySamplesMs
         alternate.foreach(_())
-        peak = math.max(peak, heapAfterGcMiB())
+        val heap = heapAfterGcMiB()
+        peak = math.max(peak, heap)
+        System.err.println(f"perfbench: ${w.name} op $ops took $dt%.3f s, heap after GC $heap%.1f MiB")
         failed += w.check()
         attempted += w.attemptedPerOp
       }
@@ -133,9 +140,7 @@ object Main {
     finished.foreach(e => System.err.println(s"CHECK FAILED: $e"))
     result(finished.isEmpty, l.attempted, l.failed, Seq(
       ("setup_s", setupS, "s"),
-      // the rate of the median operation: one operation stalled by the
-      // host cannot move it, as it would move a rate over the whole loop
-      ("records_per_s", w.recordsPerOp / median(l.opWalls), "records/s"),
+      ("records_per_s", w.recordsPerOp * l.ops / l.opWalls.sum, "records/s"),
       ("latency_ms_p50", median(l.latencies), "ms"),
       ("peak_heap_mib", l.peakHeap, "MiB")))
   }
@@ -167,9 +172,10 @@ object Main {
     sc.addSparkListener(listener)
     listener.drain(sc); listener.reset()
     // untraced and traced operations alternate, so the JIT's warm-up trend
-    // falls on both halves alike
+    // falls on both halves alike; the bus is drained before tracing stops,
+    // so the traced operation's last events are still counted
     val t = loop(w, a.seconds, minOps = 4,
-      alternate = Some { () => tr.enabled = false; listener.drain(sc) })
+      alternate = Some { () => listener.drain(sc); tr.enabled = false })
     tr.enabled = false
     val m = mutable.LinkedHashMap.empty[String, (Double, String)]
     val traced = t.opWalls.indices.filter(_ % 2 == 1).map(t.opWalls)
@@ -215,9 +221,10 @@ object Main {
         c.setup()
         tr.enabled = true
         c.run()
+        listener.drain(sc)
+        tr.enabled = false
         c.check()
       } catch { case e: CheckFailed => error = error.orElse(Some(e.getMessage)) }
-      listener.drain(sc)
       layerMetrics(c, 1, listener).foreach { case (k, v) => if (!m.contains(k)) m(k) = v }
     }
     tr.enabled = false

@@ -80,7 +80,8 @@ final class Tracer(val runId: String) {
 
 /** Engine counters from Spark's own listener events, counted while tracing
   * is on. Spark delivers events on its listener bus thread, so [[drain]]
-  * waits for a marker job before the counters are read.
+  * waits for a marker job before the counters are read; the marker job's
+  * own stages and tasks are not counted.
   */
 final class EngineListener(tr: Tracer) extends SparkListener {
   var jobs = 0L; var stages = 0L; var tasks = 0L
@@ -90,6 +91,7 @@ final class EngineListener(tr: Tracer) extends SparkListener {
   private val taskRun = mutable.HashMap.empty[(Int, Int), mutable.ArrayBuffer[Long]]
   private val skews = mutable.ArrayBuffer.empty[Double]
   @volatile private var markerSeen: String = ""
+  private val markerStages = mutable.HashSet.empty[Int]
 
   def reset(): Unit = synchronized {
     jobs = 0; stages = 0; tasks = 0; runMs = 0; cpuNs = 0; shuffleRead = 0
@@ -99,7 +101,7 @@ final class EngineListener(tr: Tracer) extends SparkListener {
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val m = Option(e.properties).flatMap(p => Option(p.getProperty("perfbench.marker")))
     m match {
-      case Some(v) => markerSeen = v
+      case Some(v) => markerStages ++= e.stageIds; markerSeen = v
       case None if tr.enabled => jobs += 1; jobTimes += tr.fromEpoch(e.time)
       case None =>
     }
@@ -108,7 +110,7 @@ final class EngineListener(tr: Tracer) extends SparkListener {
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
     val si = e.stageInfo
     val run = taskRun.remove((si.stageId, si.attemptNumber())).getOrElse(mutable.ArrayBuffer.empty)
-    if (run.nonEmpty && tr.enabled) {
+    if (run.nonEmpty && tr.enabled && !markerStages(si.stageId)) {
       stages += 1
       for (s <- si.submissionTime; c <- si.completionTime) tr.add("stage", 3, tr.fromEpoch(s), tr.fromEpoch(c))
       if (run.length >= 2) {
@@ -120,7 +122,7 @@ final class EngineListener(tr: Tracer) extends SparkListener {
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
-    if (m != null && tr.enabled) {
+    if (m != null && tr.enabled && !markerStages(e.stageId)) {
       tasks += 1
       runMs += m.executorRunTime; cpuNs += m.executorCpuTime
       shuffleRead += m.shuffleReadMetrics.totalBytesRead

@@ -290,7 +290,7 @@ final class Roundtrip(spark: SparkSession, seed: Long, work: Path, tr: Tracer)
 final class Dedup(spark: SparkSession, seed: Long, work: Path, tr: Tracer)
     extends Workload(spark, seed, work, tr) {
   val name = "corpus_dedup"
-  val Docs = 5000
+  val Docs = 1000
   lazy val corpus: Gen.Corpus = Gen.corpus(seed, Docs)
   private val dir = work.resolve("corpus").toString
   private var lastPairs: Array[Row] = _
@@ -300,7 +300,7 @@ final class Dedup(spark: SparkSession, seed: Long, work: Path, tr: Tracer)
   val passes = mutable.ArrayBuffer.empty[(Double, Long, Double, Long, (Double, Double))]
 
   def recordsPerOp: Long = Docs
-  def warmUpOps: Int = 2
+  def warmUpOps: Int = 3
 
   def setup(): Unit = {
     val schema = StructType(Seq(

@@ -2,16 +2,16 @@
 """Steadiness evidence: two sets of runs of one commit, compared against the
 bounds in BENCHMARK.json.
 
-    python3 perfbench/steadiness.py [--runs 10] [--sets 2] [--workloads a,b]
+    python3 perfbench/steadiness.py [--runs 10] [--workloads a,b]
 
-Each set runs every workload `--runs` times untraced, each run with its own
-seed (set 1 uses seeds 1..runs, set 2 seeds 101..100+runs). For every
+Two sets each run every workload `--runs` times untraced, each run with its
+own seed (set 1 uses seeds 1..runs, set 2 seeds 101..100+runs). For every
 end-to-end metric it reports, per set, the median and the spread (distance
 between the first and third quartile as a share of the median), and the
 drift of the second set's median from the first's in the worse direction.
-A metric passes when its spread stays within its bound (setup_s exempt)
-and its drift stays within its bound; the share of failed operations must
-be identical in every run. Raw results go to perfbench/out/steadiness.json.
+A metric passes when the spread of each set and the drift stay within its
+bound (spreads above a third of the bound are flagged); the share of failed
+operations must be identical in every run. Raw results go to perfbench/out/steadiness.json.
 Exit code 0 when everything passes.
 """
 import argparse
@@ -24,6 +24,7 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+SETS = 2
 
 
 def run_once(workload, seed, seconds):
@@ -46,17 +47,16 @@ def main():
         bench = json.load(fh)
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--runs", type=int, default=10)
-    ap.add_argument("--sets", type=int, default=2)
     ap.add_argument("--workloads", default=",".join(w["name"] for w in bench["workloads"]))
     a = ap.parse_args()
 
     results = {}  # workload -> [set] -> [run result]
-    for s in range(a.sets):
+    for s in range(SETS):
         for w in a.workloads.split(","):
             for i in range(a.runs):
                 seed = 100 * s + i + 1
                 r = run_once(w, seed, bench["run_seconds"])
-                results.setdefault(w, [[] for _ in range(a.sets)])[s].append(r)
+                results.setdefault(w, [[] for _ in range(SETS)])[s].append(r)
                 vals = " ".join(f"{k}={v['value']:.4g}" for k, v in r["metrics"].items())
                 print(f"set {s + 1} {w} seed {seed}: correct={r['correct']} "
                       f"failed={r['failed']}/{r['attempted']} {vals}", flush=True)
@@ -67,7 +67,7 @@ def main():
     ok = True
     print()
     print(f"{'workload':24s} {'metric':16s} {'bound':>6s} " +
-          " ".join(f"{'median' + str(s + 1):>12s} {'spread' + str(s + 1):>8s}" for s in range(a.sets)) +
+          " ".join(f"{'median' + str(s + 1):>12s} {'spread' + str(s + 1):>8s}" for s in range(SETS)) +
           f" {'drift':>7s}  verdict")
     for w, sets in results.items():
         shares = {Fraction(r["failed"], r["attempted"]) for runs in sets for r in runs}
@@ -82,9 +82,9 @@ def main():
                 meds.append(statistics.median(vals))
                 spreads.append(spread(vals) if len(vals) >= 2 else 0.0)
             sign = 1 if m["better"] == "lower" else -1
-            drift = max(0.0, sign * (meds[-1] - meds[0]) / meds[0])
-            good = drift <= bound and (name == "setup_s" or max(spreads) <= bound)
-            steady = name == "setup_s" or max(spreads) <= bound / 3
+            drift = max(0.0, sign * (meds[1] - meds[0]) / meds[0])
+            good = drift <= bound and max(spreads) <= bound
+            steady = max(spreads) <= bound / 3
             ok = ok and good
             print(f"{w:24s} {name:16s} {bound:6.2f} " +
                   " ".join(f"{med:12.5g} {sp:8.4f}" for med, sp in zip(meds, spreads)) +
