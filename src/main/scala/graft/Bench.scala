@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Repo root for the probe script + sidecar (round-9 ADVICE: a hardcoded
     // absolute path silently degraded the probe bracket to null on any
     // other checkout location). Env override, then cwd if it looks like the
@@ -13,25 +11,7 @@ object Bench {
         .filter(d => java.nio.file.Files.exists(
           java.nio.file.Paths.get(d, "tools", "host_probe.py"))))
       .getOrElse("/root/repo")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false") // pinned, matches Verify
-      // Round 21 (guide §2: partitioning sized by data, not constants):
-      // let AQE choose the output partitioning of plans that feed a
-      // cache. Spark defaults this OFF purely for partitioning-stability
-      // conservatism; with it on, cached builders (rep graphs, IVF/PQ
-      // indexes, chunk tables) materialize with AQE-coalesced partition
-      // counts instead of a fixed spark.sql.shuffle.partitions, so their
-      // many downstream stages stop paying 32 tasks per tiny cached
-      // scan. Measured (same-boot filtered A/B over the 16 cache-heavy
-      // rows, two rounds): 77.2/62.6 s off vs 51.8/51.1 s on, no row
-      // regressed; rows without caches are unaffected. Scale-neutral:
-      // at production sizes AQE targets advisoryPartitionSizeInBytes.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // Per-query isolation (round-6 verdict #1): the persist-heavy LSH /
     // cluster / IVF queries leave cached DFs and localCheckpoint RDDs
     // behind for their lazily-returned results; in a shared session that
@@ -59,7 +39,7 @@ object Bench {
     //        in-loop checkpoint truncation); the signal is a sample whose
     //        ev EXPLODES relative to its siblings — that is a mid-query
     //        eviction/recompute of a persisted stage, the in-suite
-    //        interaction fresh-JVM TimeQuery structurally cannot show.
+    //        interaction a fresh-JVM `Dev time` structurally cannot show.
     val dropped = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -298,17 +278,10 @@ object Bench {
     // restricts the run to a comma-separated subset INSIDE the exact Bench
     // harness (settle wait, ev channel, blocking cleanup, whole-set passes)
     // — the in-suite state interactions being adjudicated are structurally
-    // invisible to fresh-JVM TimeQuery. A filtered run is NOT suite
+    // invisible to a fresh-JVM `Dev time`. A filtered run is NOT suite
     // evidence: it skips the sidecar entirely (no runs-series append) and
     // tags its stdout line "filtered".
-    val only: Set[String] = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    // Fail loud on unknown names (round-11 review): a typo'd query name
-    // would silently shrink the experiment's query set and the A/B's
-    // conclusions would be drawn from the wrong evidence.
-    val unknown = only.diff(SparkEntry.all.map(_.name).toSet)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_ONLY names not declared in SparkEntry: ${unknown.mkString(", ")}")
+    val only = Harness.only(SparkEntry.all.map(_.name))
     val toRun: Seq[Q] =
       if (only.isEmpty) SparkEntry.all else SparkEntry.all.filter(q => only(q.name))
     def median(xs: Seq[Double]): Double = {
@@ -357,7 +330,7 @@ object Bench {
     // dir (round-10 ADVICE: WarmDir's `distinct` flag was discarded, so with
     // no sf0.001 sibling the canary ran the first stream_* query on the
     // timed dir itself and left its caches warm for that query's timed
-    // sample — the exact condition TimeQuery skips). Skipping re-admits the
+    // sample — the exact condition `Dev time` skips). Skipping re-admits the
     // r9 warm-up-in-median distortion for such layouts, so the decision is
     // recorded in the sidecar (`stream_canary`) instead of being silent.
     val (warmDir, warmDistinct) = WarmDir.resolve(sfDir)
@@ -386,7 +359,7 @@ object Bench {
     val extra: Map[String, Seq[Sample]] =
       (1 until repeats).flatMap(_ => repeatSet.map { q =>
         val first = firsts.collectFirst { case (n, s) if n == q.name => s.head }.get
-        q.name -> time(q, alsoBracket = first.sec >= bracketFloor)
+        q.name -> time(q, alsoBracket = first.sec < 0.0 || first.sec >= bracketFloor)
       }).groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
     val samples = firsts.map { case (k, first) =>
       k -> (first ++ extra.getOrElse(k, Seq.empty))

@@ -13,10 +13,9 @@ import graft.functions.{DotProduct, SortedLongIntersectCount}
   * from SQL, so `spark.sql("SELECT graft_dot(a, b) ...")` works anywhere
   * the Scala `VectorOps` API does.
   *
-  * Wire it with
+  * `Harness.session` installs it; elsewhere wire it with
   *   spark.sql.extensions=graft.GraftExtensions
-  * or programmatically via `SparkSession.builder.withExtensions(new
-  * GraftExtensions)`. Registration is idempotent per session.
+  * Registration is idempotent per session.
   *
   * `graft_intersect_count` wraps each input in sort_array(array_distinct)
   * before the sorted-merge scan: the raw SortedLongIntersectCount assumes

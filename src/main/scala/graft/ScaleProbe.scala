@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling probe: runs the REAL declared queries on a base scale and on an
   * N×-larger staged copy of the same data (tools/make_sf1.py — key-shifted
   * unions, joins stay consistent), and reports wall-clock scaling ratios.
@@ -322,26 +320,14 @@ object ScaleProbe {
     * loud, same rationale as Bench.
     */
   private def toRun: Seq[String] = {
-    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = only.diff(Probes.toSet)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_ONLY names not in ScaleProbe.Probes: ${unknown.mkString(", ")}")
+    val only = Harness.only(Probes)
     if (only.isEmpty) Probes else Probes.filter(only)
   }
 
   def main(args: Array[String]): Unit = {
     val Array(baseDir, bigDir, factorStr) = args.take(3)
     val factor = factorStr.toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
 
     def run(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (round 22, r20 verdict #4): measure the HDFS-backed (default)
   * vs RocksDB state-store providers on the declared stateful streaming
   * rows, at a base dir and optionally a staged N× dir (tools/make_sf1.py),
@@ -23,15 +21,7 @@ object StateStoreProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val queries = if (args.length > 1) args.drop(1).toSeq else Default
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     def run(q: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(q)(spark, sfDir).count()
@@ -45,7 +35,6 @@ object StateStoreProbe {
     for (q <- queries) {
       val hdfs = Seq(run(q), run(q))
       spark.conf.set(Key, Provider)
-      val t0 = System.nanoTime()
       val rocksFirst = run(q) // includes one-time JNI/provider init
       val rocks = Seq(run(q), run(q))
       spark.conf.unset(Key)

@@ -138,12 +138,18 @@ object Tables {
     val p = spark.sparkContext.defaultParallelism.toLong
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       .min(BigInt(Long.MaxValue)).toLong
-    val want = math.min(p, (bytes + targetBytes - 1) / targetBytes)
+    val want = math.min(p, ceilDiv(bytes, targetBytes))
     // Estimated scan width from the file layout (what FilePartition
     // packing yields for splittable sources) — parquet cannot split
     // below a row group, so this upper-bounds the effective width.
     val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
-    val scanParts = math.max(1L, (bytes + maxPB - 1) / maxPB)
+    val scanParts = math.max(1L, ceilDiv(bytes, maxPB))
     if (scanParts < want) df.repartition(want.toInt, key) else df
   }
+
+  /** ceil(a / b) for a >= 0, b > 0, exact up to `a = Long.MaxValue` (the
+    * size estimate of a relation without stats), where `(a + b - 1) / b`
+    * would wrap negative.
+    */
+  private[graft] def ceilDiv(a: Long, b: Long): Long = a / b + (if (a % b == 0) 0 else 1)
 }

@@ -1,35 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Pin ANSI off explicitly (ADVICE r2): the declared queries were all
-      // parity-verified under non-ANSI evaluation; leaving it to the build
-      // default makes behavior environment-dependent.
-      .config("spark.sql.ansi.enabled", "false")
-      // AQE-sized cached-plan partitioning (round 21; rationale in Bench).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
-    // Focused re-runs (round 15; the Bench/ScaleProbe SPARK_GRAFT_ONLY
-    // idiom): restrict the dump to a comma-separated subset for fast
-    // iteration on changed queries. Unknown names fail loud so a typo
-    // can't silently shrink the evidence; the driver runs unfiltered.
-    val only: Set[String] = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_ONLY names not declared in SparkEntry: ${unknown.mkString(", ")}")
+    // Focused re-runs: restrict the dump to the SPARK_GRAFT_ONLY subset for
+    // fast iteration on changed queries; the driver runs unfiltered.
+    val only = Harness.only(SparkEntry.queries.keySet)
     val toRun =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap

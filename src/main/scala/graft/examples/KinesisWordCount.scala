@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Harness
 import graft.sources.kinesis.{FakeKinesisRegistry, Payload}
 
 /** The reference's flagship example — KinesisWordCountASL (upstream
@@ -54,12 +55,7 @@ object KinesisWordCount {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val demo = Seq(
       "the quick brown fox jumps over the lazy dog",
       "the dog barks",

@@ -211,6 +211,13 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
   * matching pairs pay one extra register add per miss, failing pairs skip
   * the tail of the walk.
   *
+  * `needed` is the least count whose jac passes the filter, computed in
+  * the filter's own double arithmetic: the closed form above, rounded in
+  * doubles, can land one too high (tau=0.8, n+m=63: 0.8*63/1.8 evaluates
+  * to 28.000000000000004, ceil 29, while 28/35 >= 0.8 holds), which would
+  * abandon — and drop — a pair at exactly jac == tau. So after the ceil it
+  * steps down while `needed - 1` still passes.
+  *
   * tau is a plan-time literal (the declared thresholds are constants), so
   * `needed` folds into the generated code as arithmetic on the two lengths.
   */
@@ -232,7 +239,8 @@ case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val (n, m) = (x.numElements(), y.numElements())
-    val needed = math.ceil(tau * (n + m) / (1.0 + tau)).toLong
+    var needed = math.ceil(tau * (n + m) / (1.0 + tau)).toLong
+    while (needed > 0 && (needed - 1).toDouble / (n + m - (needed - 1)) >= tau) needed -= 1
     var i = 0; var j = 0; var c = 0L
     while (i < n && j < m) {
       val xi = x.getLong(i); val yj = y.getLong(j)
@@ -254,6 +262,7 @@ case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
       s"""
          |int $n = $x.numElements(); int $m = $y.numElements();
          |long $needed = (long) java.lang.Math.ceil($tau * ($n + $m) / ${1.0 + tau});
+         |while ($needed > 0 && (double) ($needed - 1) / ($n + $m - ($needed - 1)) >= $tau) $needed--;
          |int $i = 0; int $j = 0; long $c = 0L;
          |while ($i < $n && $j < $m) {
          |  long $xi = $x.getLong($i); long $yj = $y.getLong($j);

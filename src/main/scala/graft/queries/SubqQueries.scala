@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 
 /** SURVEY §2.2 G — subqueries. Catalyst decorrelates the scalar subquery

@@ -270,24 +270,6 @@ object TextQueries {
     (chunks, verified)
   }
 
-  /** llm_doc_chunk literals (interpolated on both engines, DfCap
-    * precedent): retrieval-chunk length and stride in tokens. Stride <
-    * length gives the overlap every RAG chunker keeps so no answer spans
-    * a chunk boundary unseen. Test-scale values sized so every path is
-    * hot at the driver gate: the fixture docs run ~30 tokens, so L = 16 /
-    * stride = 12 puts most docs on the multi-chunk path (2–3 chunks, the
-    * short-tail branch included) while one-chunk docs (≤ 16 tokens) stay
-    * represented; production uses L ~ 512 tokens with the same plan.
-    */
-  private val ChunkLen = 16L
-  private val ChunkStride = 12L
-
-  /** llm_dup_fraction literal: window width in tokens for the
-    * duplicated-substring fraction (8 = the corpus's segment-dedup
-    * granularity, so the two rows' signals are comparable).
-    */
-  private val DupWin = 8L
-
   /** PII patterns for llm_pii_scrub, in the Java↔RE2-shared regex subset
     * (both engines see the identical runtime string — the Spark side goes
     * through the Column API, so no SQL-literal double-escaping). The phone

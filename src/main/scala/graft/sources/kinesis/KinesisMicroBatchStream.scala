@@ -49,6 +49,13 @@ final class KinesisMicroBatchStream(
   private def allShards(): Seq[(String, ShardInfo)] =
     streams.flatMap(s => client.listShards(s).map(s -> _))
 
+  /** Each live shard's first sequence, from a fresh ListShards. Call sites
+    * hold it in a `lazy val`, so the listing is made only when a shard is
+    * missing from the offsets at hand.
+    */
+  private def shardStarts(): Map[ShardKey, Long] =
+    allShards().map { case (s, sh) => ShardKey(s, sh.shardId) -> sh.starting }.toMap
+
   override def initialOffset(): Offset = {
     val offsets = allShards().map { case (stream, shard) =>
       val from = initialPosition.toLowerCase match {
@@ -92,9 +99,7 @@ final class KinesisMicroBatchStream(
     // cap them at their own starting sequence — they drain next run.
     val tip = availableNowTip match {
       case Some(snap) =>
-        lazy val starts: Map[ShardKey, Long] = allShards().map { case (s, sh) =>
-          ShardKey(s, sh.shardId) -> sh.starting
-        }.toMap
+        lazy val starts = shardStarts()
         liveTip.map { case (k, v) =>
           k -> math.min(v, snap.getOrElse(k, starts.getOrElse(k, v)))
         }
@@ -112,9 +117,7 @@ final class KinesisMicroBatchStream(
         // they enter the budget at their own first sequence, not the tip —
         // otherwise a split during a rate-limited drain would blow the
         // per-trigger cap on its first batch.
-        lazy val births: Map[ShardKey, Long] = allShards().map { case (s, sh) =>
-          ShardKey(s, sh.shardId) -> sh.starting
-        }.toMap
+        lazy val births = shardStarts()
         def fromOf(k: ShardKey, until: Long): Long =
           startMap.getOrElse(k, births.getOrElse(k, until))
         val pending = tip.filter { case (k, until) => until > fromOf(k, until) }
@@ -141,9 +144,7 @@ final class KinesisMicroBatchStream(
     // Shards absent from `start` are children born from a reshard after the
     // last batch: begin at their own starting sequence (recorded via a
     // fresh ListShards, driver-side).
-    lazy val births: Map[ShardKey, Long] = allShards().map { case (s, sh) =>
-      ShardKey(s, sh.shardId) -> sh.starting
-    }.toMap
+    lazy val births = shardStarts()
     endMap.toSeq.sortBy { case (k, _) => (k.stream, k.shardId) }.flatMap {
       case (key, until) =>
         val from = startMap.getOrElse(key, births.getOrElse(key, until))
@@ -172,9 +173,7 @@ final class KinesisMicroBatchStream(
   override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] = {
     import scala.jdk.CollectionConverters._
     val tip = latestOffset().asInstanceOf[KinesisOffset].shardOffsets
-    lazy val starts: Map[ShardKey, Long] = allShards().map { case (s, sh) =>
-      ShardKey(s, sh.shardId) -> sh.starting
-    }.toMap
+    lazy val starts = shardStarts()
     val consumed: Map[ShardKey, Long] =
       if (latestConsumedOffset.isPresent) latestConsumedOffset.get match {
         case k: KinesisOffset => k.shardOffsets

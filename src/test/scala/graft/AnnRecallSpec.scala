@@ -206,7 +206,6 @@ class AnnRecallSpec extends GraftSpec {
   // loses the refinement's entire edge cannot pass.
   for (sf <- Seq(TestEnv.Sf001, TestEnv.Sf01)) {
     test(s"llm_pq_train refined-codebook ADC recall@10 at $sf") {
-      val M = 8
       val Dsub = 8
       def sub(v: org.apache.spark.sql.Column, m: org.apache.spark.sql.Column) =
         slice(v, (m * Dsub + 1).cast("int"), lit(Dsub))

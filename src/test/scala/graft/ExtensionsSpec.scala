@@ -1,46 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The SparkSessionExtensions registration path: native expressions
-  * reachable from plain SQL in a session built with the extension class.
-  * `getOrCreate` reuses an active session and ignores extensions, so the
-  * test clears the active/default session, builds an isolated one on the
-  * shared SparkContext, and restores the originals afterward.
+  * reachable from plain SQL in the harness session, which installs
+  * `GraftExtensions`.
   */
 class ExtensionsSpec extends GraftSpec {
 
   test("graft_dot and graft_sorted_intersect_count are SQL-callable via extensions") {
-    val original = spark // materialize the shared session first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+    val dot = spark.sql(
+      "SELECT graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
+      .collect().head.getDouble(0)
+    assert(dot == 32.0)
 
-      val dot = s2.sql(
-        "SELECT graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
-        .collect().head.getDouble(0)
-      assert(dot == 32.0)
+    val ic = spark.sql(
+      "SELECT graft_intersect_count(array(1L, 3L, 5L, 7L), array(3L, 4L, 5L)) AS c")
+      .collect().head.getLong(0)
+    assert(ic == 2L)
 
-      val ic = s2.sql(
-        "SELECT graft_intersect_count(array(1L, 3L, 5L, 7L), array(3L, 4L, 5L)) AS c")
-        .collect().head.getLong(0)
-      assert(ic == 2L)
-
-      // The SQL form normalizes unsorted/duplicated inputs before the
-      // merge scan — arbitrary SQL input must not be silently miscounted.
-      val unsorted = s2.sql(
-        "SELECT graft_intersect_count(array(5L, 1L, 3L, 3L), array(1L, 3L, 5L)) AS c")
-        .collect().head.getLong(0)
-      assert(unsorted == 3L)
-    } finally {
-      SparkSession.setActiveSession(original)
-      SparkSession.setDefaultSession(original)
-    }
+    // The SQL form normalizes unsorted/duplicated inputs before the
+    // merge scan — arbitrary SQL input must not be silently miscounted.
+    val unsorted = spark.sql(
+      "SELECT graft_intersect_count(array(5L, 1L, 3L, 3L), array(1L, 3L, 5L)) AS c")
+      .collect().head.getLong(0)
+    assert(unsorted == 3L)
   }
 }

@@ -5,11 +5,10 @@ import java.sql.{Connection, DriverManager}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness (SURVEY §5.2): one SparkSession + one DuckDB
-  * connection per forked test JVM, both pinned to the exact configuration
-  * the driver's Verify/parity flow uses (UTC, ANSI off, small shuffle
-  * partitions), with views over a scale-factor directory of the
-  * driver-generated parquet tables.
+/** Shared test harness (SURVEY §5.2): one SparkSession per forked test
+  * JVM, built by `Harness.session` at 4 cores (the session Verify and
+  * Bench run in), and DuckDB connections pinned to UTC with views over a
+  * scale-factor directory of the driver-generated parquet tables.
   */
 object TestEnv {
   val Sf001  = "/root/testdata/sf0.001"
@@ -26,18 +25,7 @@ object TestEnv {
   def sfBenchExists: Boolean =
     java.nio.file.Files.isDirectory(java.nio.file.Paths.get(SfBench))
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
 
   /** DuckDB oracle over the same parquet files (in-JVM, offline). */
   def duck(sfDir: String): Connection = {

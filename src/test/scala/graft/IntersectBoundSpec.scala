@@ -22,8 +22,6 @@ import graft.functions.VectorOps
   * 0..~200 and overlap regimes clustered around the threshold.
   */
 class IntersectBoundSpec extends GraftSpec {
-  import TestEnv.spark.implicits._
-
   private def jac(inter: Long, n: Int, m: Int): Double =
     if (n + m - inter == 0) Double.NaN
     else inter.toDouble / (n + m - inter).toDouble
@@ -50,7 +48,7 @@ class IntersectBoundSpec extends GraftSpec {
       (Array(5L), Array(5L)),
       (Array(1L, 2L, 3L), Array(1L, 2L, 3L)))
 
-    val df = pairs.toDF("a", "b")
+    val df = codegen.createDataFrame(pairs).toDF("a", "b")
     for (tau <- taus) {
       val rows = df.select(
         size(col("a")).as("n"), size(col("b")).as("m"),
@@ -103,6 +101,59 @@ class IntersectBoundSpec extends GraftSpec {
         val jB = jac(bounded, a.length, b.length)
         assert(bounded <= exact && (jB.isNaN || jB < tau))
       }
+    }
+  }
+
+  /** A child session without ConvertToLocalRelation: with it, a select
+    * over a local Seq is folded at plan time by an interpreted projection,
+    * and the generated code never runs.
+    */
+  private lazy val codegen = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    s
+  }
+
+  /** Every (n, m, c) with n, m <= 60 whose jac is exactly tau in the
+    * filter's double arithmetic, built so the walk meets all mismatches
+    * before the first match: the order in which a `needed` one too high
+    * abandons the walk and drops the pair (tau=0.8, n=28, m=35 is one).
+    */
+  private val onTau: Seq[(Double, Array[Long], Array[Long])] = for {
+    tau <- Seq(0.5, 0.8, 0.9)
+    n <- 1 to 60; m <- 1 to 60; c <- 1 to math.min(n, m)
+    if c.toDouble / (n + m - c) == tau
+  } yield {
+    val shared = (0 until c).map(10000L + _)
+    (tau, ((0 until n - c).map(1000L + _) ++ shared).toArray,
+      ((0 until m - c).map(5000L + _) ++ shared).toArray)
+  }
+
+  test("pairs at exactly jac == tau get the exact count (codegen)") {
+    assert(onTau.exists { case (t, a, b) => t == 0.8 && a.length == 28 && b.length == 35 })
+    for ((tau, group) <- onTau.groupBy(_._1)) {
+      val rows = codegen.createDataFrame(group.map { case (_, a, b) => (a, b) })
+        .toDF("a", "b").select(
+        VectorOps.sortedIntersectCount(col("a"), col("b")),
+        VectorOps.sortedIntersectCountBounded(col("a"), col("b"), tau))
+        .collect()
+      for (r <- rows) assert(r.getLong(1) == r.getLong(0), s"tau=$tau: ${r.getLong(1)} vs ${r.getLong(0)}")
+    }
+  }
+
+  test("pairs at exactly jac == tau get the exact count (interpreted)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def lit(a: Array[Long]) =
+      Literal(ArrayData.toArrayData(a), ArrayType(LongType, containsNull = false))
+    for ((tau, a, b) <- onTau) {
+      val bounded = graft.functions
+        .SortedLongIntersectCountBounded(lit(a), lit(b), tau)
+        .eval(null).asInstanceOf[Long]
+      val shared = a.intersect(b).length.toLong
+      assert(bounded == shared, s"tau=$tau n=${a.length} m=${b.length}: $bounded vs $shared")
     }
   }
 }

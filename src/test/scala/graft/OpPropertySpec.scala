@@ -502,7 +502,6 @@ class OpPropertySpec extends GraftSpec {
       .parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("llm_pagerank")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val nodeSet = keys.toSet
     val edges = keys.filter(_ >= 2).flatMap(s0 =>
       Seq(s0 / 2, s0 / 3, s0 / 5).filter(_ >= 1).distinct.map(d0 => (s0, d0)))
     val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }

@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.streaming.{EventStream, StreamOps}
-
 /** The 100 TB streaming-state path: HDFS-backed state keeps everything on
   * the executor heap, which caps state size per partition; production
   * deployments use the RocksDB provider (off-heap + native spill). This

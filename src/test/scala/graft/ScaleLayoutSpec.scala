@@ -171,4 +171,11 @@ class ScaleLayoutSpec extends GraftSpec {
       assert(!plan.contains("CartesianProduct"), s"$q must not cartesian")
     }
   }
+
+  test("spread's ceil-divide stays exact at Long.MaxValue (unknown stats)") {
+    val t = Tables.SpreadTargetBytes
+    assert(Tables.ceilDiv(Long.MaxValue, t) == Long.MaxValue / t + 1)
+    assert(Tables.ceilDiv(Long.MaxValue, 1L) == Long.MaxValue)
+    assert(Seq(0L, 1L, t, t + 1).map(Tables.ceilDiv(_, t)) == Seq(0L, 1L, 1L, 2L))
+  }
 }
