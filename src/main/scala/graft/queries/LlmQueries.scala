@@ -66,181 +66,26 @@ object LlmQueries {
       (size(aToks) + size(bToks) - inter).cast("double")
   }
 
-  /** Drop the block-manager blocks behind an EAGER `localCheckpoint(true)`
-    * Dataset once it is superseded. `Dataset.unpersist` only touches the
-    * CacheManager, not checkpoint RDDs — those live in the plan as a
-    * `LogicalRDD` leaf whose RDD was persisted by the checkpoint, so the
-    * only handle is the leaf's `rdd` (round-6 verdict #1: without this,
-    * every label-propagation round leaks three checkpoint RDDs into the
-    * block manager for the life of the session).
-    *
-    * BLOCKING as of round 11 (r10 verdict #1): the freed tables are tiny
-    * (answer-bound label rows), so waiting costs ~nothing — measured as a
-    * wash at sf0.1 (10.4 s async vs 10.3 s blocking, same boot) — and it
-    * structurally rules out the one code-side mechanism the r10
-    * adjudication proposed for the driver's rising cluster samples: async
-    * removal from round N landing inside a later timed region.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = true)
-      case _ => ()
-    }
-
-  /** Connected components over an edge list by iterative min-label
-    * propagation with pointer jumping — extracted VERBATIM from
-    * llm_dedup_cluster (round 14) so the semantic-dedup row runs the
-    * identical loop: eager localCheckpoint lineage truncation each round,
-    * labels bounded to ACTIVE ids (≥1 edge) so every in-loop broadcast is
-    * answer-bound at any corpus size, pointer jumping so MaxIters rounds
-    * cover diameter 2^MaxIters, fail-loud convergence backstop. Input:
-    * one row per UNDIRECTED edge (src, dst) — symmetrized internally.
-    * Returns (rep_id, comp) for ACTIVE ids only; callers re-admit
-    * edge-free ids via coalesce at the final assignment, which keeps the
-    * result broadcast legitimately small.
-    */
-  private[queries] def minLabelComponents(pairs: DataFrame): DataFrame = {
-        // Symmetrize with ONE scan of `pairs` (round 21, guide §2.4): the
-        // previous two-branch unionAll consumed `pairs` twice, and both
-        // callers pass the UNPERSISTED verified-pair pipeline — so the
-        // whole LSH candidate+verify graph executed once per branch
-        // (profiled at sf0.1: the two duplicated 44.5 MB anchor exchanges
-        // + their upstream accounted for ~70 s of llm_dedup_cluster's
-        // 156 s total executor time). explode over a 2-element struct
-        // array emits both directions from a single pass.
-        val sym = pairs
-          .select(explode(array(
-            struct(col("src"), col("dst")),
-            struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        // Scale-adaptive loop layout (round 21, guide §2): the loop's
-        // per-round scans previously inherited the verify shuffle's
-        // static partition count (2×spark.sql.shuffle.partitions after
-        // the union) — 64 tasks per round over a 2.8 MB cached edge set
-        // at sf0.1, ~80 s of the row's executor time in pure per-task
-        // overhead. Hash-partition by `src` so the per-round
-        // neighbor-min aggregation and the label join inherit the layout
-        // with no further exchange.
-        //
-        // Round 22 (profiled): the r21 form sized the partition count
-        // from a MEASURED edge count, which forced materializing the
-        // expensive verify pipeline TWICE — once into a throwaway `raw`
-        // cache for the count, then again from that cache through the
-        // repartition into the loop cache (~1 s wall + an extra count
-        // job at sf0.1). A numberless repartition(col) lets AQE size the
-        // partition count from the shuffle's ACTUAL bytes at runtime
-        // (advisoryPartitionSizeInBytes — the same data-derived sizing,
-        // now engine-native; the harness sessions set
-        // canChangeCachedPlanOutputPartitioning so the sizing survives
-        // the persist). One materialization, one count job.
-        val edges = sym.repartition(col("src")).persist()
-        edges.count() // materialize the verify pipeline exactly once
-        val MaxIters = 30
-        // Labels only over ACTIVE reps — those with at least one verified
-        // edge (round-7 ADVICE: a label row per rep approaches corpus size
-        // on a mostly-unique corpus, which made every broadcast(labels)
-        // below an unbounded driver/executor ceiling). Edge-free reps never
-        // change label, so they are excluded from the iteration entirely
-        // and re-enter at the final assignment via coalesce(comp, rep_id).
-        // |labels| is then bounded by the near-dup answer, and the in-loop
-        // and pointer-jump broadcasts become legitimately small at any
-        // corpus size.
-        var labels = edges.select(col("src").as("rep_id")).distinct()
-          .select(col("rep_id"), col("rep_id").as("comp"))
-          .localCheckpoint(true)
-        var iter = 0
-        var converged = false
-        while (!converged && iter < MaxIters) {
-          // broadcast(labels): checkpointed DFs carry the default (huge)
-          // size estimate, so unhinted this plans as an SMJ that re-sorts
-          // the full edge set EVERY round. One label row per ACTIVE rep —
-          // answer-bound (see the labels seed above), so the hint is safe
-          // at any corpus size.
-          val nbrMin = edges
-            .join(broadcast(labels), col("dst") === col("rep_id"))
-            .groupBy(col("src")).agg(min(col("comp")).as("nbr_comp"))
-          // `oldc` carries this round's INPUT label through both steps so
-          // the convergence check below is a filter-count on the already-
-          // checkpointed table instead of a per-round next⋈labels join
-          // (round 21: that join cost two exchanges + a sort per round
-          // for a comparison both operands of which are produced here).
-          val half = labels
-            .join(nbrMin, col("rep_id") === col("src"), "left")
-            .select(col("rep_id"), col("comp").as("oldc"),
-              least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-            .localCheckpoint(true) // truncate lineage; also materializes
-          // Pointer jump: comp ← comp(comp). Doubles the propagated
-          // distance per round, so MaxIters rounds cover components of
-          // diameter 2^MaxIters instead of MaxIters — the backstop can
-          // then only fire on a broken graph, never a deep one. Both sides
-          // are the checkpointed label table (tiny), no edge re-scan.
-          val next = half.as("l")
-            .join(broadcast(half.as("m")), col("l.comp") === col("m.rep_id"))
-            .select(col("l.rep_id").as("rep_id"), col("l.oldc").as("oldc"),
-              col("m.comp").as("comp"))
-            .localCheckpoint(true)
-          // `half` is dead the moment `next` materializes (eager checkpoint
-          // above) — free its blocks now, not at session end.
-          freeCheckpoint(half)
-          // Converged ⇔ next == labels: stability under BOTH steps forces
-          // comp constant per component (symmetric edges) and root-valued,
-          // i.e. comp == component min. `oldc` IS the labels-side value of
-          // the old next⋈labels comparison (labels(r).comp carried through
-          // the round), so the predicate is unchanged.
-          val changed = next.where(col("comp") =!= col("oldc")).count()
-          // The previous round's labels are dead once `changed` is counted.
-          freeCheckpoint(labels)
-          labels = next.select(col("rep_id"), col("comp"))
-          converged = changed == 0L
-          iter += 1
-        }
-        require(converged, s"label propagation did not converge in $MaxIters rounds")
-        edges.unpersist()
-        labels
-  }
-
-  /** Upper bound on rows per identical-token-set group: `collect_list`
-    * member arrays are chunked by a doc-id hash so no single row ever holds
-    * a whole giant duplicate group (round-6 verdict "next round" #4 — a
-    * 10⁷-member byte-identical boilerplate group would otherwise build one
-    * ~80 MB array row). Width per chunk is ⌈m / 256⌉: a 10⁹-member group
-    * tops out at ~31 MB per row; small groups (the overwhelming majority)
-    * still occupy a single row because only chunks with members exist.
-    */
-  private[queries] val MemberChunks = 256
-
   /** Stages 1–5 of the full-corpus MinHash/LSH near-dup pipeline (see the
     * `llm_neardup_minhash` comment for the per-stage scale rationale),
-    * shared by the pair-list query and the cluster-assignment query:
+    * shared by the pair-list, τ-sweep and cluster-assignment queries:
     *
     * returns (chunks, verified) where
-    *   chunks   = ≤MemberChunks rows per distinct token set:
-    *              (rep_id = min member doc_id, cmin = min member in this
-    *              chunk — cmin = rep_id marks the rep's own chunk,
-    *              members sorted, bounded width, gsize = total members of
-    *              the group) — persisted;
-    *   verified = exact-verified rep pairs at jac ≥ 0.8:
+    *   chunks   = the [[RepGraph.chunks]] of identical token sets (`tids`);
+    *   verified = exact-verified rep pairs at jac ≥ tau:
     *              (a_rep, b_rep, jac) — member-free, so the verify
     *              broadcast carries only token ids, never doc lists.
+    *
+    * `rowsPerBand` must suit the lowest τ verified: rowsPerBand=r gives
+    * per-pair miss probability (1-j^r)^(k/r), so the default r=4/b=32
+    * index (miss 5e-8 at j=0.8) misses a j=0.5 pair with probability
+    * 0.127, while r=2/b=64 over the SAME k=128 signatures misses at
+    * 0.75^64 ≈ 1e-8. Candidate volume rises with the flatter S-curve. All
+    * callers share the chunks cache (CacheManager dedupes by plan);
+    * sigs/bands differ per rowsPerBand.
     */
-  private[graft] def lshRepGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    lshRepGraphAt(s, d, tau = 0.8, rowsPerBand = MinHash.RowsPerBand)
-
-  /** The same stages 1–5 with the verify threshold and the banding row
-    * width as parameters (round 18, r17 verdict #5): production dedup
-    * TUNES τ, and the banding must be sized for the LOWEST τ swept —
-    * rowsPerBand=r gives per-pair miss probability (1-j^r)^(k/r), so the
-    * default r=4/b=32 index (miss 5e-8 at j=0.8) is NOT a recall-1
-    * candidate generator at τ=0.5 (miss 0.127), while r=2/b=64 over the
-    * SAME k=128 signatures is (miss 0.75^64 ≈ 1e-8 at j=0.5). Candidate
-    * volume rises with the flatter S-curve — that is the τ-range/cost
-    * trade the sweep row exists to report. All callers share the stage-1
-    * chunks cache (CacheManager dedupes by plan); sigs/bands differ per
-    * rowsPerBand and are not shared across indexes.
-    */
-  private[graft] def lshRepGraphAt(s: SparkSession, d: String, tau: Double,
-      rowsPerBand: Int): (DataFrame, DataFrame) = {
+  private[graft] def lshRepGraph(s: SparkSession, d: String, tau: Double = 0.8,
+      rowsPerBand: Int = MinHash.RowsPerBand): (DataFrame, DataFrame) = {
     val numBands = MinHash.NumHashes / rowsPerBand
     // spread (round 21): single-row-group fixture file — tokenization +
     // hashing otherwise run as one task up to the chunks exchange
@@ -252,55 +97,10 @@ object LlmQueries {
       .select(col("doc_id"),
         sort_array(array_distinct(
           transform(toks(col("text")), t => xxhash64(t)))).as("tids"))
-    // 1. identical-token-set groups, member lists CHUNKED by doc-id hash
-    // (bounded row width — see MemberChunks), then the group-wide
-    // representative attached by a window min over the chunk rows (linear;
-    // the window shuffles one bounded row per chunk, not one per doc).
-    // persist(): consumed four times downstream (sigs, both verify sides,
-    // member expansion); repeated invocations do NOT stack cache entries —
-    // Spark's CacheManager dedupes by logical plan, so the same
-    // (corpus, dir) reuses one small entry.
-    // The window keys stay the RAW `tids` array (r10 verdict's §6 scale
-    // observation, adjudicated round 11 — measured verdict: NOT adopted).
-    // A 64-bit `xxhash64(tids)` prefix on the group/window keys — exact
-    // without any collision handling, since (th, tids) partitions rows
-    // identically to tids — was A/B'd interleaved same-boot: at sf0.1 it
-    // LOST ~10% on both LSH rows (cluster medians 9.8/10.8 s raw vs
-    // 11.1/11.7 s prefixed; minhash 6.4/7.3 vs 7.2/8.1), and at the 10×
-    // duplicate-dense staging it won back only a few percent (25.3/22.0
-    // raw vs 24.5/19.8 cold interleaved singles). Mechanics, pinned for
-    // future rounds: exchange BYTES cannot shrink here (tids rides in
-    // every row as payload for the rep/verify stages, and hash-partition
-    // keys are not serialized separately), so the only candidate win was
-    // comparator CPU — but compares between DISTINCT token sets resolve
-    // within the first few elements (not array-length-bound), compares
-    // between EQUAL sets fall through the equal prefix to the full walk
-    // anyway, and the prefix costs a full-array hash per row plus 8
-    // bytes/row of width. See SURVEY §6, round 11.
-    val w = Window.partitionBy(col("tids"))
-    val chunks = docs
-      .groupBy(col("tids"),
-        pmod(xxhash64(col("doc_id")), lit(MemberChunks)).as("chunk"))
-      .agg(min(col("doc_id")).as("cmin"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-      // Group rep + size over ONE window projection: chained withColumns
-      // left TWO Window operators in the physical plan (CollapseWindow
-      // can't see through the extracted _w0 Project between them —
-      // observed in the r15 plan dumps), i.e. two corpus-scale passes
-      // where one suffices; a single select extracts both expressions
-      // into one Window node (pinned). gsize lets consumers restrict
-      // member re-attachment to multi-member groups — singletons dominate
-      // real corpora and contribute no intra pairs, so filtering on
-      // gsize > 1 is what keeps the intra-pair broadcast answer-bound
-      // instead of corpus-bound (round-7 ADVICE).
-      .select(col("*"), min(col("cmin")).over(w).as("rep_id"),
-        sum(size(col("members"))).over(w).as("gsize"))
-      .persist()
-    // reps: exactly one row per distinct token set (the chunk holding the
-    // group minimum — chunks partition the members, so only one chunk's
-    // cmin equals the group min).
-    val reps = chunks.where(col("cmin") === col("rep_id"))
-      .select(col("rep_id"), col("tids"))
+    // 1. identical-token-set rep groups (RepGraph.chunks); reps carry the
+    //    token ids into signatures and both verify sides.
+    val chunks = RepGraph.chunks(docs, "tids", "doc_id")
+    val reps = RepGraph.reps(chunks).select(col("rep_id"), col("tids"))
     // 2. signatures on representatives (token ids, masked to the
     //    32-bit universal-hash domain — same values the string path
     //    produced via MinHash.tokenId)
@@ -674,9 +474,8 @@ object LlmQueries {
     //   5. exact verify per candidate REP pair on sorted token-ID arrays
     //      (int64 compare beats string sets; xxhash64 is injective on any
     //      real vocabulary, and parity vs the string-based oracle is
-    //      re-checked at every sf), then expand rep groups back to doc
-    //      pairs: cross-group pairs inherit the verified jac verbatim,
-    //      intra-group pairs are exact duplicates (jac = 1.0 ≥ τ).
+    //      re-checked at every sf).
+    //   6. member expansion back to doc pairs (below).
     //
     // NOTE on this corpus: 24% of ALL doc pairs are true near-dups at
     // τ=0.8 (2.97M result rows at sf0.1 from a 31-token vocabulary), so
@@ -686,60 +485,14 @@ object LlmQueries {
     Q(
       "llm_neardup_minhash",
       (s, d) => {
-        val (chunks, verified0) = lshRepGraph(s, d)
-        // Consumed three times below (two semi-joins + the pair join) —
-        // persist so the sig→band→candidate→verify pipeline runs once.
-        // Released by Cleanup.release / Bench / Verify like `chunks`.
-        val verified = verified0.persist()
-        // Expand rep groups back to doc pairs: cross-group pairs inherit
-        // the verified jac verbatim, intra-group pairs are exact
-        // duplicates (jac = 1.0 ≥ τ). BOTH expansions repartition on the
-        // first exploded member between the two explodes (round-4 verdict
-        // #1): without it one task emits all C(m,2) pairs of a duplicate
-        // group — a 100k-member boilerplate cluster (routine in web crawl)
-        // would produce 5×10⁹ rows from a single input row. Resharded, each
-        // post-shuffle row emits at most one CHUNK (⌈m/MemberChunks⌉ rows,
-        // round-6 #4) per broadcast-join match. The broadcast member
-        // re-attachment preserves the reshard (broadcast joins don't
-        // re-exchange). (The pair-LIST contract is still inherently
-        // quadratic in cluster size — the scale-shaped output is
-        // llm_dedup_cluster below.)
-        //
-        // The broadcast sides are ANSWER-bound, not corpus-bound (round-7
-        // ADVICE — broadcasting all of `chunks` put every doc_id on the
-        // driver, right back under the ceiling the chunking removed):
-        //   - ca/cb are semi-joined to the reps actually appearing in a
-        //     verified pair — on a realistic corpus (~0.01% near-dup
-        //     density) that is a vanishing fraction of reps, and on ANY
-        //     corpus it is bounded by the output being produced;
-        //   - the intra side keeps only gsize > 1 groups — singleton
-        //     groups (the overwhelming majority everywhere) contribute no
-        //     intra pairs.
-        val ca = chunks.select(col("rep_id").as("a_rep"), col("members").as("a_members"))
-          .join(verified.select(col("a_rep")).distinct(), Seq("a_rep"), "left_semi")
-        val cb = chunks.select(col("rep_id").as("b_rep"), col("members").as("b_members"))
-          .join(verified.select(col("b_rep")).distinct(), Seq("b_rep"), "left_semi")
-        val crossPairs = verified
-          .join(broadcast(ca), "a_rep")
-          .select(explode(col("a_members")).as("a_m"), col("b_rep"), col("jac"))
-          .repartition(col("a_m"))
-          .join(broadcast(cb), "b_rep")
-          .select(col("a_m"), explode(col("b_members")).as("b_m"), col("jac"))
-          .select(least(col("a_m"), col("b_m")).as("a_id"),
-            greatest(col("a_m"), col("b_m")).as("b_id"), col("jac"))
-        // Intra-group pairs across ALL chunk rows of each multi-member rep:
-        // explode one member per row, reshard, re-attach every chunk of the
-        // same rep by broadcast, keep b > a so each unordered pair appears
-        // exactly once (each doc lives in exactly one chunk).
-        val multi = chunks.where(col("gsize") > 1)
-        val intraPairs = multi
-          .select(col("rep_id"), explode(col("members")).as("a_id"))
-          .repartition(col("a_id"))
-          .join(broadcast(multi.select(col("rep_id"), col("members"))), "rep_id")
-          .select(col("a_id"), explode(col("members")).as("b_id"))
-          .where(col("b_id") > col("a_id"))
-          .select(col("a_id"), col("b_id"), lit(1.0).as("jac"))
-        crossPairs.unionAll(intraPairs)
+        // 6. expand rep groups back to doc pairs (RepGraph.memberPairs):
+        //    cross-group pairs inherit the verified jac, intra-group pairs
+        //    are exact duplicates at jac = 1.0 ≥ τ. The pair-LIST contract
+        //    is inherently quadratic in cluster size — the scale-shaped
+        //    output is llm_dedup_cluster below.
+        val (chunks, verified) = lshRepGraph(s, d)
+        RepGraph.memberPairs(chunks, verified, "jac", ordered = false,
+            intra = lit(1.0), tau = 0.8)
           .orderBy(col("a_id"), col("b_id"))
       },
       oracle = Some(s"""
@@ -767,7 +520,7 @@ object LlmQueries {
     // jac = 1.0 ≥ τ), so nothing corpus-scale is ever expanded.
     //
     // Candidate generation is re-banded r=2/b=64 over the SAME k=128
-    // signatures (see lshRepGraphAt): the default τ=0.8 index misses a
+    // signatures (see lshRepGraph): the default τ=0.8 index misses a
     // j=0.5 pair with prob 0.127 — useless as a sweep candidate source —
     // while r=2 misses at (1-0.25)^64 ≈ 1e-8, so the sweep is exact to
     // the same standard as llm_neardup_minhash and the all-pairs DuckDB
@@ -783,10 +536,10 @@ object LlmQueries {
       "llm_minhash_tau_sweep",
       (s, d) => {
         val tauArr = array(Seq(0.5, 0.7, 0.9).map(lit): _*)
-        val (chunks, verified0) = lshRepGraphAt(s, d, tau = 0.5, rowsPerBand = 2)
+        val (chunks, verified0) = lshRepGraph(s, d, tau = 0.5, rowsPerBand = 2)
         val verified = verified0.persist()
         // one row per identical-token-set group: (rep_id, gsize)
-        val gs = chunks.where(col("cmin") === col("rep_id"))
+        val gs = RepGraph.reps(chunks)
           .select(col("rep_id"), col("gsize"))
         val pg = verified
           .join(gs.select(col("rep_id").as("a_rep"), col("gsize").as("ga")), "a_rep")
@@ -891,17 +644,9 @@ object LlmQueries {
     // corpus size no matter how large a boilerplate cluster grows, where
     // any pair list is quadratic in cluster size (round-4 verdict #1).
     //
-    // Components via iterative min-label propagation over reps:
-    //   label(x) ← min(label(x), min over neighbors' labels), repeated to
-    // fixpoint — each iteration is one keyed shuffle (join + groupBy) over
-    // the REP graph (already collapsed ~21% below doc count here, far more
-    // on boilerplate-heavy corpora), labels persisted per round so lineage
-    // stays flat. Near-dup clusters are dense (every member verified
-    // against the rep at τ), so the min reaches everyone in O(cluster
-    // diameter) rounds — 5 on this corpus at sf0.1, bounded by MaxIters as a
-    // correctness backstop (fail loud, never emit a half-converged
-    // labeling). Deterministic: the fixpoint (min id per component) is
-    // unique regardless of iteration order.
+    // Components over the REP graph (RepGraph.components — min-label
+    // propagation with pointer jumping, fail-loud convergence), then every
+    // chunk's members take their rep's component label.
     //
     // keep_id equivalence with the doc-level oracle: rep_id = min(members),
     // members connect to their rep at jac = 1, and cross-group member pairs
@@ -911,18 +656,7 @@ object LlmQueries {
       "llm_dedup_cluster",
       (s, d) => {
         val (chunks, verified) = lshRepGraph(s, d)
-        // Iterative state is localCheckpoint'd EAGERLY each round, not just
-        // persisted: each round's plan nests the previous one, so without
-        // lineage truncation Catalyst re-analyzes an exponentially growing
-        // tree every iteration even though execution hits cache (measured
-        // here: per-round wall grew 1.5 s → 11 s by round 5; truncated it
-        // stays flat). Same reason GraphFrames checkpoints its CC loop.
-        // Components via the shared min-label-propagation loop (extracted
-        // round 14 so llm_dedup_semantic runs the IDENTICAL machinery —
-        // checkpoint hygiene, answer-bound broadcasts, pointer jumping,
-        // fail-loud convergence; see minLabelComponents).
-        val labels = minLabelComponents(
-          verified.select(col("a_rep").as("src"), col("b_rep").as("dst")))
+        val labels = RepGraph.components(verified)
         // Still alive on purpose: the FINAL labels checkpoint (one tiny row
         // per active rep) and lshRepGraph's `chunks` cache — both feed the
         // lazy DataFrame returned below. Callers that run many queries in

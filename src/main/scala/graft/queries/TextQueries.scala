@@ -159,8 +159,8 @@ object TextQueries {
 
   /** Stages 1–5 of the full-corpus prefix-filter containment pipeline
     * (see llm_containment_prefix for the per-stage scale rationale):
-    * returns (chunks, verified) in the lshRepGraph/srpRepGraph contract —
-    * chunked identical-shingle-set rep groups (persisted) and the
+    * returns (chunks, verified) in the RepGraph contract — the
+    * [[RepGraph.chunks]] of identical shingle sets (`sids`) and the
     * exact-verified ORDERED rep pairs (a_rep, b_rep, cont) at cont ≥ 0.5.
     */
   private[graft] def containmentRepGraph(
@@ -179,19 +179,8 @@ object TextQueries {
           expr("transform(sequence(1, size(toks) - 2), " +
             "i -> array_join(slice(toks, i, 3), ' '))")),
           sh => xxhash64(sh))).as("sids"))
-    val w = Window.partitionBy(col("sids"))
-    val chunks = t
-      .groupBy(col("sids"),
-        pmod(xxhash64(col("doc_id")), lit(LlmQueries.MemberChunks)).as("chunk"))
-      .agg(min(col("doc_id")).as("cmin"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-      // One window projection for rep + size (the lshRepGraph fuse — two
-      // chained withColumns plan as two Window passes).
-      .select(col("*"), min(col("cmin")).over(w).as("rep_id"),
-        sum(size(col("members"))).over(w).as("gsize"))
-      .persist()
-    val reps = chunks.where(col("cmin") === col("rep_id"))
-      .select(col("rep_id"), col("sids"))
+    val chunks = RepGraph.chunks(t, "sids", "doc_id")
+    val reps = RepGraph.reps(chunks).select(col("rep_id"), col("sids"))
     val df = reps.select(explode(col("sids")).as("sid"))
       .groupBy(col("sid")).agg(count(lit(1)).as("df"))
     // Persisted since round 18: the positional filter below consumes the
@@ -523,9 +512,8 @@ object TextQueries {
     // a zero-miss argument instead of a probabilistic one.
     //
     // Pipeline (shares the LSH family's stage shapes):
-    //   1. rep-collapse identical shingle SETS (chunked members — the
-    //      round-15 srpRepGraph/lshRepGraph stage, so a boilerplate
-    //      cluster probes once);
+    //   1. rep-collapse identical shingle SETS (RepGraph.chunks, so a
+    //      boilerplate cluster probes once);
     //   2. df per shingle over reps (one linear groupBy);
     //   3. rarity-ranked shingle lists per rep (one shuffle join on the
     //      shingle id — df is vocabulary-scale, NEVER broadcast);
@@ -535,11 +523,10 @@ object TextQueries {
     //   5. verify once per ORDERED rep pair on sorted 64-bit shingle ids
     //      (sortedIntersectCount; reps joins unhinted = shuffle, the
     //      round-9 corpus-bound-broadcast rule);
-    //   6. member expansion exactly like minhash stage 6 (answer-bound
-    //      semi-join-reduced broadcasts, reshard between the explodes) —
-    //      ordered pairs, so NO least/greatest: cross pairs keep their
-    //      (a→b) direction, intra pairs of multi-member groups emit both
-    //      directions at cont = 1.0 (identical sets, |a∩a|/|a| exact).
+    //   6. member expansion (RepGraph.memberPairs, ordered): cross pairs
+    //      keep their (a→b) direction, intra pairs of multi-member groups
+    //      emit both directions at cont = 1.0 (identical sets, |a∩a|/|a|
+    //      exact).
     //
     // Measured (round 15, warmed medians, healthy window): sf0.1 6.8 s
     // (4992 reps, 27.2k distinct shingles, ~919k distinct candidates from
@@ -556,27 +543,9 @@ object TextQueries {
     Q(
       "llm_containment_prefix",
       (s, d) => {
-        val (chunks, verified0) = containmentRepGraph(s, d)
-        val verified = verified0.persist()
-        val ca = chunks.select(col("rep_id").as("a_rep"), col("members").as("a_members"))
-          .join(verified.select(col("a_rep")).distinct(), Seq("a_rep"), "left_semi")
-        val cb = chunks.select(col("rep_id").as("b_rep"), col("members").as("b_members"))
-          .join(verified.select(col("b_rep")).distinct(), Seq("b_rep"), "left_semi")
-        val crossPairs = verified
-          .join(broadcast(ca), "a_rep")
-          .select(explode(col("a_members")).as("a_id"), col("b_rep"), col("cont"))
-          .repartition(col("a_id"))
-          .join(broadcast(cb), "b_rep")
-          .select(col("a_id"), explode(col("b_members")).as("b_id"), col("cont"))
-        val multi = chunks.where(col("gsize") > 1)
-        val intraPairs = multi
-          .select(col("rep_id"), explode(col("members")).as("a_id"))
-          .repartition(col("a_id"))
-          .join(broadcast(multi.select(col("rep_id"), col("members"))), "rep_id")
-          .select(col("a_id"), explode(col("members")).as("b_id"))
-          .where(col("b_id") =!= col("a_id"))
-          .select(col("a_id"), col("b_id"), lit(1.0).as("cont"))
-        crossPairs.unionAll(intraPairs)
+        val (chunks, verified) = containmentRepGraph(s, d)
+        RepGraph.memberPairs(chunks, verified, "cont", ordered = true,
+            intra = lit(1.0), tau = 0.5)
           .orderBy(col("a_id"), col("b_id"))
       },
       oracle = Some(s"""

@@ -640,20 +640,13 @@ object VectorQueries {
     * into components), so the candidate generation cannot fork between the
     * pair row and the dedup row. Returns (chunks, verified) where
     *
-    *   chunks   = ≤MemberChunks rows per DISTINCT vector value:
-    *              (v, cmin, members sorted, rep_id = min member,
-    *              gsize = total members) — the rep-collapse stage (round
-    *              15, r14 verdict #1) added so m byte-identical vectors
-    *              enter band generation ONCE instead of emitting C(m,2)
-    *              verified pairs (the r14 30× staging leg ABORTED on
-    *              exactly that clone densification). Mirrors
-    *              lshRepGraph's stage 1: identical vectors have identical
-    *              sign bits AND identical cosine to every other vector,
-    *              so banding representatives loses nothing and the member
-    *              expansion at the end is exact. Chunked by a vec_id hash
-    *              (ChunkBound machinery) so no row ever holds a whole
-    *              boilerplate-embedding cluster. Persisted — consumed by
-    *              reps below plus the consumers' member expansions.
+    *   chunks   = the [[RepGraph.chunks]] of DISTINCT vector values
+    *              (`v`), so m byte-identical vectors enter band
+    *              generation ONCE instead of emitting C(m,2) verified
+    *              pairs: identical vectors have identical sign bits AND
+    *              identical cosine to every other vector, so banding
+    *              representatives loses nothing and the member expansion
+    *              at the end is exact;
     *   verified = exact-verified REP pairs at cos ≥ 0.3:
     *              (a_rep, b_rep, cos), a_rep < b_rep.
     *
@@ -677,23 +670,9 @@ object VectorQueries {
       s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val e = vecsSpread(s, d)
-    // Stage 0: collapse byte-identical vectors, member lists chunked by a
-    // vec_id hash (bounded row width — LlmQueries.MemberChunks), group-wide
-    // rep + size attached by one window over the bounded chunk rows.
-    val w = Window.partitionBy(col("v"))
-    val chunks = e
-      .groupBy(col("v"),
-        pmod(xxhash64(col("vec_id")), lit(LlmQueries.MemberChunks)).as("chunk"))
-      .agg(min(col("vec_id")).as("cmin"),
-        sort_array(collect_list(col("vec_id"))).as("members"))
-      // One window projection for rep + size (the lshRepGraph fuse — two
-      // chained withColumns plan as two Window passes).
-      .select(col("*"), min(col("cmin")).over(w).as("rep_id"),
-        sum(size(col("members"))).over(w).as("gsize"))
-      .persist()
-    // Exactly one row per distinct vector (the chunk holding the group min).
-    val reps = chunks.where(col("cmin") === col("rep_id"))
-      .select(col("rep_id"), col("v"))
+    // Stage 0: collapse byte-identical vectors (RepGraph.chunks).
+    val chunks = RepGraph.chunks(e, "v", "vec_id")
+    val reps = RepGraph.reps(chunks).select(col("rep_id"), col("v"))
     val bits: Seq[org.apache.spark.sql.Column] = (0 until 16).map { j =>
       when(VectorOps.dot(col("v"), lit(srpPlanes(j))) >= 0.0, 1L)
         .otherwise(0L)
@@ -735,48 +714,10 @@ object VectorQueries {
       (sqrt(VectorOps.dot(col("v"), col("v"))) *
         sqrt(VectorOps.dot(col("v"), col("v"))))
 
-  /** The member-pair expansion of the SRP rep graph — exactly
-    * llm_neardup_minhash's stage 6 (answer-bound semi-join-reduced
-    * broadcasts, reshard between the two explodes so no task emits a whole
-    * C(m,2) clone cluster): cross-group pairs inherit the verified rep cos
-    * verbatim (members are byte-identical to their rep), intra-group pairs
-    * of glued groups carry selfCos. Output (a_id, b_id, cos), a_id < b_id —
-    * bit-identical to what the pre-collapse pipeline emitted, since
-    * identical vectors share all band values (always collide) and every
-    * member pair's cosine IS its reps' cosine.
-    */
-  private def srpVerifiedPairs(
-      s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val (chunks, verified0) = srpRepGraph(s, d)
-    val verified = verified0.persist()
-    val ca = chunks.select(col("rep_id").as("a_rep"), col("members").as("a_members"))
-      .join(verified.select(col("a_rep")).distinct(), Seq("a_rep"), "left_semi")
-    val cb = chunks.select(col("rep_id").as("b_rep"), col("members").as("b_members"))
-      .join(verified.select(col("b_rep")).distinct(), Seq("b_rep"), "left_semi")
-    val crossPairs = verified
-      .join(broadcast(ca), "a_rep")
-      .select(explode(col("a_members")).as("a_m"), col("b_rep"), col("cos"))
-      .repartition(col("a_m"))
-      .join(broadcast(cb), "b_rep")
-      .select(col("a_m"), explode(col("b_members")).as("b_m"), col("cos"))
-      .select(least(col("a_m"), col("b_m")).as("a_id"),
-        greatest(col("a_m"), col("b_m")).as("b_id"), col("cos"))
-    val multi = chunks.where(col("gsize") > 1)
-      .withColumn("cos", selfCos)
-      .where(col("cos") >= 0.3)
-    val intraPairs = multi
-      .select(col("rep_id"), explode(col("members")).as("a_id"), col("cos"))
-      .repartition(col("a_id"))
-      .join(broadcast(multi.select(col("rep_id"), col("members"))), "rep_id")
-      .select(col("a_id"), explode(col("members")).as("b_id"), col("cos"))
-      .where(col("b_id") > col("a_id"))
-      .select(col("a_id"), col("b_id"), col("cos"))
-    crossPairs.unionAll(intraPairs)
-  }
-
-  /** The DuckDB CTE chain replaying srpVerifiedPairs (e → planes → bits →
-    * bands → bucket join → exact verify), ending in `vp(a_id, b_id, cos)`
-    * — shared by the cosine_lsh and dedup_semantic oracles.
+  /** The DuckDB CTE chain replaying llm_neardup_cosine_lsh (e → planes →
+    * bits → bands → bucket join → exact verify), ending in
+    * `vp(a_id, b_id, cos)` — shared by the cosine_lsh and dedup_semantic
+    * oracles.
     */
   private val srpPairsSql: String = """
         e AS (
@@ -864,16 +805,27 @@ object VectorQueries {
     // LSH family's linear groupBy-shape join on the (band_idx, band_val)
     // bucket key, CARRYING each vector + precomputed norm so the cosine
     // verifies inline and only the answer is distinct'd (the round-14
-    // A/B in srpVerifiedPairs' comment — 25× over distinct-then-attach
+    // A/B in srpRepGraph's comment — 25× over distinct-then-attach
     // at 10× staging); corpus-bound sides pinned never-broadcast under
     // auto-broadcast-off. Bits-per-band is the occupancy knob: at 10¹⁰
     // vectors a production run sizes bands ≈ log2(N/target_bucket) bits
     // (the banding arithmetic is unchanged); 4-bit bands here keep the
     // driver-gate output non-empty on the ANN-hostile random corpus whose
     // cos tail tops out at ~0.51.
+    //
+    // Member expansion (RepGraph.memberPairs): cross-group pairs inherit
+    // the verified rep cos verbatim (members are byte-identical to their
+    // rep), intra-group pairs of glued groups carry selfCos. The output is
+    // bit-identical to the all-vector pipeline, since identical vectors
+    // share all band values and every member pair's cosine IS its reps'.
     Q(
       "llm_neardup_cosine_lsh",
-      (s, d) => srpVerifiedPairs(s, d).orderBy(col("a_id"), col("b_id")),
+      (s, d) => {
+        val (chunks, verified) = srpRepGraph(s, d)
+        RepGraph.memberPairs(chunks, verified, "cos", ordered = false,
+            intra = selfCos, tau = 0.3)
+          .orderBy(col("a_id"), col("b_id"))
+      },
       oracle = Some(s"""
         WITH $srpPairsSql
         SELECT a_id, b_id, cos FROM vp
@@ -1062,15 +1014,13 @@ object VectorQueries {
         ORDER BY q_id, nn_rank""")),
 
     // H (pipeline capstone, round 14): SEMANTIC dedup — SemDeDup-shaped:
-    // connect the SRP-LSH verified cosine pair set (srpVerifiedPairs, the
-    // exact set llm_neardup_cosine_lsh emits) into connected components
+    // connect the SRP-LSH verified cosine pair set (the exact set
+    // llm_neardup_cosine_lsh emits) into connected components
     // and assign every vector keep_id = min id of its component
     // (singletons keep themselves). The embedding-space twin of
     // llm_dedup_cluster, built from the SAME two shared pieces: the LSH
     // candidate generation (cannot fork from the pair row) and the
-    // min-label-propagation loop (minLabelComponents — extracted verbatim
-    // from the cluster row: eager checkpoint truncation, answer-bound
-    // label broadcasts, pointer jumping, fail-loud convergence). Output
+    // component loop (RepGraph.components). Output
     // is ONE ROW PER VECTOR — linear where any pair list is quadratic in
     // cluster size, the same 100 TB output contract as the cluster row.
     // Oracle: recursive-CTE reachability over the identical replayed pair
@@ -1079,16 +1029,12 @@ object VectorQueries {
     Q(
       "llm_dedup_semantic",
       (s, d) => {
-        // Round 15 (r14 verdict #1): the component loop runs over the REP
-        // graph, not the expanded member pairs — m byte-identical vectors
-        // are ONE label row, so |labels| (and every in-loop broadcast) is
-        // bounded by the DISTINCT-vector near-dup answer even on
-        // clone-dense corpora where member labels were corpus-order.
-        // Exactly llm_dedup_cluster's shape: components over reps, then
-        // chunk-by-chunk member expansion at the final assignment.
+        // The component loop runs over the REP graph, not the expanded
+        // member pairs — m byte-identical vectors are ONE label row, so
+        // |labels| is bounded by the DISTINCT-vector near-dup answer even on
+        // clone-dense corpora. Exactly llm_dedup_cluster's shape.
         val (chunks, verified) = srpRepGraph(s, d)
-        val labels = LlmQueries.minLabelComponents(
-          verified.select(col("a_rep").as("src"), col("b_rep").as("dst")))
+        val labels = RepGraph.components(verified)
         // keep_id equivalence with the member-pair semantics: members of a
         // GLUED group (selfCos ≥ τ — any nonzero duplicate vector) are
         // mutually near-dup, so they share their rep's component

@@ -110,8 +110,8 @@ object EventStream {
     // previous computeIfAbsent held the hash-bin lock for the duration of
     // a full Spark write job, blocking concurrent first-touch callers even
     // for other types). Two racing first-touch callers now each write
-    // their own temp dir and putIfAbsent decides the winner — the loser's
-    // file is orphaned temp-dir garbage, never read. The file is written
+    // their own temp dir and putIfAbsent decides the winner — the loser
+    // deletes its temp dir and reads the winner's file. The file is written
     // under the FIRST caller session's writer conf and reused by later
     // sessions; all harness sessions share the writer-relevant conf
     // (UTC, parquet defaults), which is the assumption this cache makes.
@@ -132,20 +132,15 @@ object EventStream {
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString + "/sentinel")
       val mine = tmp.toString + "/sentinel"
       val prev = sentinelCache.putIfAbsent(t, mine)
-      if (prev != null) prev else mine
+      if (prev == null) mine else {
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+        prev
+      }
     }
     readEventsGlob(spark, s"$dir/events.parque*", tsType)
       .unionAll(readEventsGlob(spark, sentinelDir, tsType))
   }
 
-  /** Run a streaming DataFrame to completion under Trigger.AvailableNow
-    * into an in-memory table and return its contents. Deterministic because
-    * the whole input is one micro-batch (single file) plus the trailing
-    * no-data batch that finalizes watermark-gated state.
-    *
-    * The memory sink is the harness-side terminal only (bounded verify-time
-    * data); production sinks are foreachBatchParquet / the Kinesis sink.
-    */
   /** State partition count for the declared streaming queries. Stateful
     * operators pin their partitioning to `spark.sql.shuffle.partitions` at
     * first plan (AQE cannot coalesce state), and each state partition pays
@@ -158,6 +153,14 @@ object EventStream {
     */
   private val StatePartitions = "8"
 
+  /** Run a streaming DataFrame to completion under Trigger.AvailableNow
+    * into an in-memory table and return its contents. Deterministic because
+    * the whole input is one micro-batch (single file) plus the trailing
+    * no-data batch that finalizes watermark-gated state.
+    *
+    * The memory sink is the harness-side terminal only (bounded verify-time
+    * data); production sinks are foreachBatchParquet / the Kinesis sink.
+    */
   def runAvailableNow(
       spark: SparkSession,
       name: String,
@@ -180,13 +183,6 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // Round-21 profiling channel: per-micro-batch duration breakdown
-      // (addBatch / getBatch / planning / state commit / watermark), off
-      // unless the env flag is set — the bench never pays for it.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-debug] $name batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
     } finally spark.conf.set(key, prior)
     spark.table(qn)
   }

@@ -9,9 +9,11 @@ import graft.queries.LlmQueries
 /** Round-6 verdict "next round" #4: a giant byte-identical duplicate group
   * (routine in web crawl — boilerplate pages) must not build one giant
   * `collect_list` members row inside the LSH rep graph. The member lists
-  * are chunked by a doc-id hash (LlmQueries.MemberChunks); this spec pins
+  * are chunked by a doc-id hash (RepGraph.MemberChunks); this spec pins
   * the row-width bound with a synthetic 100k-member group and proves the
-  * cluster-assignment answer is still exact over the chunked layout.
+  * cluster-assignment answer is still exact over the chunked layout. The
+  * MinHash, containment and SRP rep graphs all build their groups with
+  * `RepGraph.chunks`, so the width and gsize pins cover all three.
   */
 class ChunkBoundSpec extends GraftSpec {
 
