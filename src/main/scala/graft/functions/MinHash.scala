@@ -124,4 +124,9 @@ class MinHashAgg extends Aggregator[Long, Array[Long], Array[Long]] {
 
   def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder()
   def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+
+  /** Plans print the aggregator by this name, so two JVMs running the same
+    * code print the same plan (the default carries an identity hash).
+    */
+  override def toString: String = s"MinHashAgg(k=$NumHashes)"
 }

@@ -2,6 +2,7 @@ package graft.sources.kinesis
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 /** Deterministic in-memory Kinesis service (SURVEY §5.2(4)): the offline
@@ -85,8 +86,11 @@ final class FakeKinesisService extends KinesisClient {
     child.shardId
   }
 
-  /** Inject `n` transient throttling failures into upcoming getRecords
-    * calls (tests the reader's retry/backoff path).
+  /** Inject `n` transient throttling failures into the next `n`
+    * getRecords calls. Within the connector only the partition reader's
+    * pages call getRecords — offset planning, lag and timestamp probes read
+    * positions through the overrides below — so the errors exercise the
+    * reader's retry/backoff path and nothing else.
     */
   def failNextGetRecords(n: Int): Unit = synchronized { failGetRecords = n }
 
@@ -96,6 +100,22 @@ final class FakeKinesisService extends KinesisClient {
     shardsOf(stream).values.map(_.info).toSeq
   }
 
+  /** First index of `records` whose sequence number is `>= at`
+    * (`records.length` if none): a binary search, valid because a shard's
+    * sequence numbers ascend. They are drawn from one counter shared by all
+    * shards, so a shard's own numbers are not contiguous and `at` may fall
+    * between two of its records.
+    */
+  private def seek(records: mutable.ArrayBuffer[KinesisRecord], at: Long): Int = {
+    var lo = 0
+    var hi = records.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (records(mid).sequenceNumber < at) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
   override def getRecords(stream: String, shardId: String, from: Long,
       until: Long, limit: Int): Seq[KinesisRecord] = synchronized {
     if (failGetRecords > 0) {
@@ -103,9 +123,34 @@ final class FakeKinesisService extends KinesisClient {
       throw new RuntimeException(
         "ProvisionedThroughputExceededException: rate exceeded (injected)")
     }
-    shardsOf(stream)(shardId).records.iterator
-      .filter(r => r.sequenceNumber >= from && r.sequenceNumber < until)
-      .take(limit).toSeq
+    val records = shardsOf(stream)(shardId).records
+    val lo = seek(records, from)
+    val hi = lo + math.min(math.max(0, seek(records, until) - lo), limit)
+    ArraySeq.from(records.view.slice(lo, hi))
+  }
+
+  override def advanceBy(stream: String, shardId: String, from: Long,
+      until: Long, count: Int): Long = synchronized {
+    val records = shardsOf(stream)(shardId).records
+    val lo = seek(records, from)
+    if (seek(records, until) - lo < count) until
+    else records(lo + count - 1).sequenceNumber + 1
+  }
+
+  override def millisBehindLatest(stream: String, shardId: String, at: Long): Long =
+    synchronized {
+      val records = shardsOf(stream)(shardId).records
+      val lo = seek(records, at)
+      val hi = seek(records, latestSequence(stream, shardId))
+      if (lo >= hi) 0L
+      else math.max(0L, records(hi - 1).approximateArrivalMs - records(lo).approximateArrivalMs)
+    }
+
+  override def firstSequenceAtOrAfter(stream: String, shardId: String,
+      epochMs: Long): Long = synchronized {
+    shardsOf(stream)(shardId).records.find(_.approximateArrivalMs >= epochMs)
+      .map(_.sequenceNumber)
+      .getOrElse(latestSequence(stream, shardId))
   }
 
   override def latestSequence(stream: String, shardId: String): Long = synchronized {

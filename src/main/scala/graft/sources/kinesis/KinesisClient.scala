@@ -7,7 +7,7 @@ package graft.sources.kinesis
   * block is lost — SURVEY §2.1) is our PRIMARY read path, so ranges are the
   * natural API. A production implementation backs `getRecords` with
   * GetShardIterator(AT_SEQUENCE_NUMBER) + GetRecords pages; the deterministic
-  * in-memory fake (FakeKinesis.scala) backs it with a vector slice.
+  * in-memory fake (FakeKinesis.scala) backs it with a binary-searched slice.
   *
   * Sequence numbers are Longs internally (fake) and rendered as the opaque
   * zero-padded strings Kinesis users see in the row output; ordering and
@@ -38,10 +38,14 @@ trait KinesisClient extends Serializable {
       .map(_.sequenceNumber)
       .getOrElse(latestSequence(stream, shardId))
 
-  /** Sequence position after reading at most `count` records from `from`
-    * (bounded by `until`) — the admission-control step. Default derives it
-    * from a bounded getRecords page; an AWS client gets it for free from
-    * GetRecords' own `Limit`.
+  /** The position after reading at most `count` records from `from`,
+    * bounded by `until` — the admission-control step. Invariants: the
+    * result is `until` when fewer than `count` records lie in
+    * `[from, until)`, else one past the `count`-th of them; it reads
+    * positions only, so offset planning never fetches the payloads the
+    * executors then read. The default derives it from one bounded
+    * getRecords page; a client that can count positions (the fake's
+    * binary search, or GetRecords' own `Limit`) overrides it.
     */
   def advanceBy(stream: String, shardId: String, from: Long, until: Long,
       count: Int): Long = {
@@ -49,21 +53,16 @@ trait KinesisClient extends Serializable {
     if (page.size < count) until else page.last.sequenceNumber + 1
   }
 
-  /** Approximate milliseconds the position `at` lags the shard tip, in
-    * STREAM time: arrival(last record) − arrival(first unconsumed record),
-    * 0 when caught up. This is the `MillisBehindLatest` signal of the
-    * public GetRecords response / CloudWatch surface (SURVEY §2.1
-    * MetricsLevel rows), derived here from arrival timestamps so the
-    * offline fake stays deterministic (no wall clock). An SDK-backed
-    * client overrides it with the value GetRecords already returns for
-    * free; the default pages the unconsumed range to find the shard's OWN
-    * last arrival — it must NOT probe `tip - 1` directly, because a CLOSED
-    * shard's tip comes from the reshard-assigned endingSequenceNumber,
-    * which need not be a sequence of any record in this shard (round-7
-    * ADVICE: the tip-1 probe silently reported 0 ms on a lagging parent
-    * shard after any split/merge). Paging is bounded by the pending range
-    * and only runs for shards that actually lag, at progress-event
-    * cadence.
+  /** How far, in stream time, the position `at` lags the shard tip: the
+    * arrival time of the shard's last record below the tip minus that of
+    * its first record at or after `at`; 0 when no record lies in
+    * `[at, tip)`. Invariants: both records are this shard's own — a
+    * closed shard's tip is the reshard-assigned ending sequence + 1, which
+    * need not be any record's sequence here, so `tip - 1` is never probed
+    * — and no wall clock is read, so the offline fake stays deterministic.
+    * This is the `MillisBehindLatest` signal of GetRecords. The default
+    * pages the pending range; the fake reads the two records by seek, and
+    * an SDK client returns the value GetRecords already carries.
     */
   def millisBehindLatest(stream: String, shardId: String, at: Long): Long = {
     val tip = latestSequence(stream, shardId)

@@ -1,6 +1,7 @@
 package graft.sources.kinesis
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.unsafe.types.UTF8String
@@ -225,8 +226,10 @@ final class KinesisPartitionReader(p: KinesisInputPartition)
   private val MaxRetries = 5
 
   private val client = p.clientFactory.create()
+  private val stream = UTF8String.fromString(p.stream)
+  private val shardId = UTF8String.fromString(p.shardId)
   private var cursor = p.from
-  private var page: Seq[KinesisRecord] = Seq.empty
+  private var page: IndexedSeq[KinesisRecord] = IndexedSeq.empty
   private var idx = 0
   private var current: KinesisRecord = _
 
@@ -236,6 +239,7 @@ final class KinesisPartitionReader(p: KinesisInputPartition)
     while (!done) {
       try {
         page = client.getRecords(p.stream, p.shardId, cursor, p.until, PageLimit)
+          .toIndexedSeq
         done = true
       } catch {
         case e: RuntimeException
@@ -261,13 +265,34 @@ final class KinesisPartitionReader(p: KinesisInputPartition)
     true
   }
 
-  override def get(): InternalRow = InternalRow.fromSeq(Seq(
+  override def get(): InternalRow = new GenericInternalRow(Array[Any](
     current.data,
-    UTF8String.fromString(current.stream),
+    stream,
     UTF8String.fromString(current.partitionKey),
-    UTF8String.fromString(f"${current.sequenceNumber}%020d"),
-    UTF8String.fromString(current.shardId),
+    KinesisPartitionReader.sequenceText(current.sequenceNumber),
+    shardId,
     current.approximateArrivalMs * 1000L)) // epoch µs for TimestampType
 
   override def close(): Unit = ()
+}
+
+object KinesisPartitionReader {
+
+  /** `f"$n%020d"` as UTF-8, without going through `String.format`: the
+    * zero-padded form Kinesis users see. Sequence numbers are
+    * non-negative; a negative one keeps the formatted form.
+    */
+  def sequenceText(n: Long): UTF8String =
+    if (n < 0) UTF8String.fromString(f"$n%020d")
+    else {
+      val digits = new Array[Byte](20)
+      var v = n
+      var i = 19
+      while (i >= 0) {
+        digits(i) = ('0' + v % 10).toByte
+        v /= 10
+        i -= 1
+      }
+      UTF8String.fromBytes(digits)
+    }
 }

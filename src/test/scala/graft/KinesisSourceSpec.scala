@@ -192,6 +192,28 @@ class KinesisSourceSpec extends GraftSpec {
     assert(out.count() == 30)
   }
 
+  test("throttling during rate-limited planning: offsets are planned from positions, result exact") {
+    // Offset planning under maxRecordsPerTrigger must not page records on
+    // the driver: there a throttling error has no retry and fails the query.
+    val (id, svc) = freshFake()
+    svc.createStream("s1", 2)
+    svc.putRecords("s1", (1 to 30).map(i => (s"pk$i", s"r$i".getBytes(UTF_8))))
+    svc.failNextGetRecords(3)
+    val df = spark.readStream.format("kinesis")
+      .option("streams", "s1")
+      .option("initialPosition", "trim_horizon")
+      .option("maxRecordsPerTrigger", "10")
+      .option("fake.id", id)
+      .load()
+    val qn = "kthrottle_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = df.writeStream.format("memory").queryName(qn)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft_kinesis_throttle_ac").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(payloads(spark.table(qn)).sorted == (1 to 30).map(i => s"r$i").sorted)
+  }
+
   test("initialPosition=at_timestamp starts at the first record at-or-after the timestamp") {
     val (id, svc) = freshFake()
     svc.createStream("s1", 1)
