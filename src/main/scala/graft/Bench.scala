@@ -1,45 +1,98 @@
 package graft
+
+/** Per-query wall time of the declared queries over one corpus
+  * (`SPARK_GRAFT_SF_DIR`, default sf0.1), printed as one JSON line; an
+  * unfiltered run also writes the `BENCH_FULL.json` sidecar.
+  *
+  * One protocol times every row:
+  *   - each query runs once, in declaration order, through
+  *     [[Harness.timedCount]];
+  *   - a query whose first sample failed or took ≥ `RepeatFloorSec` runs
+  *     `Repeats - 1` more times, as whole-set passes, so a host window
+  *     lasting minutes cannot hit all of one query's samples;
+  *   - when that first sample failed or took ≥ `BracketFloorSec`, each
+  *     repeat is bracketed by a memory-bandwidth probe just before and just
+  *     after its timed region, and the row gets an admissibility verdict;
+  *   - the reported time is the median of the successful samples.
+  *
+  * Nothing but the query and its `count()` runs inside a timed region: the
+  * probes, the listener settle wait and the state release all sit outside.
+  */
 object Bench {
+
+  /** Samples per repeated query. */
+  val Repeats = 3
+
+  /** First-sample time at which a GC pause or scheduler hiccup is no
+    * longer large enough to fake a 2× regression: below it one sample is
+    * kept.
+    */
+  val RepeatFloorSec = 0.5
+
+  /** First-sample time from which a query's repeats carry probe brackets. */
+  val BracketFloorSec = 2.0
+
+  /** One timed run. `sec` is -1.0 for a failed run. `at` is the offset of
+    * the timed region from bench start; `ev` counts storage blocks dropped
+    * inside it. `bw`/`bw_after` are the bracketing membw readings (B/s),
+    * -1.0 when not taken or when the probe failed.
+    */
+  final case class Sample(sec: Double, at: Double, ev: Long,
+      bw: Double = -1.0, bwAfter: Double = -1.0) {
+
+    /** None when unbracketed, else whether the bracket's better reading
+      * clears `healthyMembw` (one-sided dips occur inside healthy windows).
+      */
+    def clean(healthyMembw: Double): Option[Boolean] =
+      if (bw < 0.0 && bwAfter < 0.0) None
+      else Some(math.max(bw, bwAfter) >= healthyMembw)
+  }
+
+  /** Median of the successful (non-negative) values; -1.0 when none. */
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.filter(_ >= 0.0).sorted
+    if (s.isEmpty) -1.0
+    else if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** A query's median is admissible when a strict majority of ALL its
+    * samples are clean: an unbracketed or failed-probe sample counts as not
+    * clean, so the median is always bounded by a clean reading. With an
+    * unbracketed first sample and two repeats, both repeats must be clean.
+    */
+  def admissible(samples: Seq[Sample], healthyMembw: Double): Boolean =
+    samples.count(_.clean(healthyMembw).contains(true)) * 2 > samples.size
+
+  /** Sum of the successful medians: a failed query (median -1.0) is named
+    * in the output, never counted as a fast one.
+    */
+  def total(medians: Iterable[Double]): Double = medians.filter(_ >= 0.0).sum
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Repo root for the probe script + sidecar (round-9 ADVICE: a hardcoded
-    // absolute path silently degraded the probe bracket to null on any
-    // other checkout location). Env override, then cwd if it looks like the
-    // repo, then the canonical path.
+    // Repo root for the probe script and the sidecar: env override, then
+    // the working directory if it holds the probe script, then the
+    // canonical path.
     val repoDir = sys.env.get("SPARK_GRAFT_REPO_DIR")
       .orElse(Option(System.getProperty("user.dir"))
         .filter(d => java.nio.file.Files.exists(
           java.nio.file.Paths.get(d, "tools", "host_probe.py"))))
       .getOrElse("/root/repo")
     val spark = Harness.session(Harness.cpus)
-    // Per-query isolation (round-6 verdict #1): the persist-heavy LSH /
-    // cluster / IVF queries leave cached DFs and localCheckpoint RDDs
-    // behind for their lazily-returned results; in a shared session that
-    // state accumulates and bled up to 5.5× into the timings of whatever
-    // ran next. Round-7 verdict #1 hardened it: the sweep is now BLOCKING
-    // plus an explicit GC, so async block removal can't land inside the
-    // next query's timing window (llm_sim_cosine_topk read 3.40 s vs ~1 s
-    // on unchanged code right after the cluster query's non-blocking
-    // sweep). Both run OUTSIDE the timed region.
+    // The persist-heavy queries leave caches and localCheckpoint RDDs
+    // behind for their lazily-returned results; left in a shared session
+    // they bleed into the timings of whatever runs next. The sweep blocks
+    // and is followed by a GC so that no async block removal lands inside
+    // the next timed region.
     def clearState(): Unit = {
       Cleanup.release(spark, blocking = true)
       System.gc()
     }
-    // Per-sample forensics (round-9 verdict #2: the 15 s minhash driver
-    // reading could not be adjudicated because the artifact carried neither
-    // WHEN each sample ran nor whether persisted state was evicted
-    // mid-query). Two channels, both recorded per sample in the sidecar:
-    //   at — wall-clock offset (s) from bench start, so a contention
-    //        window's position in the run is visible;
-    //   ev — storage blocks DROPPED during the timed region (listener
-    //        counts block updates landing at an invalid StorageLevel).
-    //        The cleanup sweep runs after the delta is read, so its own
-    //        unpersists never pollute the count. Nonzero ev is expected
-    //        for queries that free state by design (the cluster query's
-    //        in-loop checkpoint truncation); the signal is a sample whose
-    //        ev EXPLODES relative to its siblings — that is a mid-query
-    //        eviction/recompute of a persisted stage, the in-suite
-    //        interaction a fresh-JVM `Dev time` structurally cannot show.
+    // `ev` channel: storage blocks dropped (update to an invalid storage
+    // level) during a timed region. A sample whose count jumps against its
+    // siblings evicted and recomputed a persisted stage mid-query — an
+    // in-suite interaction a fresh-JVM `Dev time` cannot show.
     val dropped = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -49,21 +102,12 @@ object Bench {
             dropped.incrementAndGet()
       })
     val benchT0 = System.nanoTime()
-    case class Sample(sec: Double, at: Double, ev: Long, bw: Double = -1.0,
-      bwAfter: Double = -1.0, hb: Seq[Double] = Nil, hbOn: Boolean = false)
-    // A crashed query must not enter the median looking like a fast
-    // success (round-7 ADVICE): failures return the -1.0 sentinel, kept in
-    // the raw samples (visible in BENCH_FULL.json) but excluded from the
-    // median; a query with no successful sample reports -1.0.
-    // Block updates arrive on the ASYNC listener bus, so the previous
-    // query's cleanup sweep can still be draining when the next timed
-    // region opens — its drops would then land in the wrong sample's `ev`
-    // (misattributing the exact mid-query-eviction signal the channel
-    // exists to detect). The bus offers no public drain hook; waiting for
-    // the counter to go quiet (no change across a settle interval, bounded
-    // wait) empties the in-flight cleanup burst in practice.
+    // Block updates arrive on the async listener bus, so the previous
+    // sweep's drops can still be in flight when the next region opens. The
+    // bus has no public drain hook; waiting until the counter holds still
+    // for one interval (at most 1 s) empties the sweep's burst.
     def settleDropped(): Long = {
-      val deadline = System.nanoTime() + 1000000000L // ≤ 1 s
+      val deadline = System.nanoTime() + 1000000000L
       var prev = dropped.get()
       var quiet = false
       while (!quiet && System.nanoTime() < deadline) {
@@ -74,46 +118,11 @@ object Bench {
       }
       prev
     }
-    // Per-sample membw channel (round-12, r11 verdict #1): the run-level
-    // probe bracket is end-of-run only, so a mid-run bandwidth dip — the
-    // r11 driver's 36.4 s minhash first sample under a healthy CPU bracket
-    // — was unattributable from the artifact. For the block-manager-heavy
-    // queries (persist + localCheckpoint + block frees stress memory/copy
-    // capacity, the dimension the CPU probe cannot see), a membw reading
-    // is taken immediately BEFORE each timed sample (outside the timed
-    // region; ~1.7 s via `host_probe.py --membw`, same probe shape and
-    // units as the run brackets) and recorded as `bw` in sample_meta. An
-    // inflated LSH sample now carries its own window evidence. Default set
-    // = the two queries three rounds of driver-window swings implicated;
-    // env-overridable for adjudication experiments.
-    // llm_dedup_semantic joined the default set in round 14: its
-    // label-propagation loop is localCheckpoint-heavy like the cluster
-    // row, so it inherits the same window sensitivity — flag it from its
-    // first round rather than after its first unexplained swing.
-    // llm_containment_prefix and llm_neardup_cosine_lsh joined in round 17
-    // (r16 verdict #3): both are persist + rep-graph block-manager-heavy,
-    // and the r16 driver run's two largest unexplained swings (containment
-    // 7.8 → 11.9 s, cosine_lsh at 5.0 s) carried no per-sample bracket, so
-    // their inflation had to be adjudicated by family signature instead of
-    // their own bw/bw_after + hb forensics. Five flagged rows total; each
-    // flagged sample costs two ~1.7 s probes plus one heartbeat thread.
-    val membwQueries: Set[String] =
-      sys.env.get("SPARK_GRAFT_MEMBW_QUERIES") match {
-        case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        case None =>
-          Set("llm_neardup_minhash", "llm_dedup_cluster", "llm_dedup_semantic",
-            "llm_containment_prefix", "llm_neardup_cosine_lsh")
-      }
-    // Shared spawn-and-parse scaffold for BOTH probe channels (round-12
-    // review: the per-sample path duplicated probe()'s subprocess code, and
-    // two hand-kept copies desynchronize the units the channels are
-    // documented to share). The wait is BOUNDED: a wedged python3 — a fork
-    // deadlock, or a child stuck under the very memory pressure the probe
-    // exists to detect — must degrade to the best-effort null/-1 contract,
-    // not hang the whole bench mid-run with no sidecar (the per-sample
-    // channel multiplies the exposure to every flagged sample). The tiny
-    // (<1 KB) probe output cannot fill the pipe buffer, so reading after
-    // the bounded wait cannot deadlock.
+    // Both probe channels shell out to tools/host_probe.py, so their
+    // readings share the units it is calibrated in. The wait is bounded: a
+    // wedged probe degrades to a missing reading instead of hanging the
+    // run. Its output (<1 KB) cannot fill the pipe, so reading after the
+    // wait cannot deadlock.
     val probeNum = "[0-9][0-9.]*(?:[eE][+-]?[0-9]+)?"
     def runProbe(extraArgs: String*): Option[String] = try {
       val cmd = Seq("python3",
@@ -132,180 +141,30 @@ object Bench {
       runProbe("--membw")
         .flatMap(out => s"membw=($probeNum)".r.findFirstMatchIn(out))
         .map(_.group(1).toDouble).getOrElse(-1.0)
-    // In-sample membw heartbeat (round-13 verdict #1, the twice-deferred
-    // instrument): the per-sample probes still sit OUTSIDE the timed
-    // region, so a bandwidth collapse that starts after the before-probe
-    // and ends before the after-probe — the exact shape of the r11-r13
-    // inflated LSH samples — is invisible to both. While a flagged sample
-    // runs, ONE daemon thread copies a 64 MiB buffer in a loop and records
-    // the achieved copy rate (read+write B/s) once per second; the series
-    // lands in sample_meta as `hb`. The absolute level is single-thread
-    // (≈ an order below the 8-worker probe figure, and further depressed
-    // by the query's own memory traffic) so it is NOT on the probe's
-    // calibrated scale — the signal is RELATIVE: an inflated sample whose
-    // hb series craters mid-run versus its siblings is convicted as a
-    // host-window artifact; one that holds level falsifies the membw
-    // explanation. Costs one of 32 threads during flagged samples only —
-    // a uniform measurement tax on the membwQueries rows (five as of
-    // round 17; see the flagged-set comment above).
-    // The src(0) write-back creates a loop-carried dependency so the JIT
-    // cannot elide the copy; buffers are allocated once and reused.
-    object Heartbeat {
-      private val Len = 64 * 1024 * 1024
-      private lazy val src = new Array[Byte](Len)
-      private lazy val dst = new Array[Byte](Len)
-      // Each start() hands ITS OWN series queue AND ITS OWN stop flag to
-      // the worker closure (round-15 ADVICE ×2: a field-shared list let a
-      // stale thread that outlived its join(2000) keep appending into the
-      // NEXT sample's series, and a field-shared @volatile running let the
-      // next start() re-arm a zombie worker that never observed false —
-      // two copy loops inside one timed region). A stale thread now only
-      // ever reads its own dead flag and appends to its own dead queue, so
-      // measurements cannot be corrupted. The 64 MiB src/dst copy buffers
-      // stay shared fields (round-16 ADVICE: per-start allocation would
-      // cost 128 MiB churn per flagged sample), so a zombie that survives
-      // join(2000) can still run at most its final in-flight copy
-      // iterations concurrently with the next sample's worker — a bounded
-      // memory-traffic overlap, not a series corruption, and the sample
-      // whose worker went zombie already discarded its series below.
-      private var worker: Thread = _
-      private var stopFlag: java.util.concurrent.atomic.AtomicBoolean = _
-      private var current: java.util.concurrent.ConcurrentLinkedQueue[Double] = _
-      def start(): Unit = {
-        val rates = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-        val run = new java.util.concurrent.atomic.AtomicBoolean(true)
-        current = rates
-        stopFlag = run
-        worker = new Thread(() => {
-          var winBytes = 0L
-          var winT0 = System.nanoTime()
-          while (run.get()) {
-            System.arraycopy(src, 0, dst, 0, Len)
-            src(0) = (dst(0) + 1).toByte
-            winBytes += 2L * Len
-            val now = System.nanoTime()
-            if (now - winT0 >= 1000000000L) {
-              rates.add(winBytes / ((now - winT0) / 1e9))
-              winBytes = 0L
-              winT0 = now
-            }
-          }
-          // Final partial window: keep only if it holds ≥0.2 s of signal
-          // (a few-ms tail rate is dominated by the stop latency itself).
-          val now = System.nanoTime()
-          if (now - winT0 >= 200000000L)
-            rates.add(winBytes / ((now - winT0) / 1e9))
-        }, "bench-membw-heartbeat")
-        worker.setDaemon(true)
-        worker.start()
-      }
-      def stop(): Seq[Double] = {
-        if (stopFlag != null) stopFlag.set(false)
-        if (worker != null) worker.join(2000)
-        // No prior start(), or a worker still alive after the bounded
-        // join, is a measurement hazard, not evidence (round-15 ADVICE):
-        // an alive worker may still be mid-copy — discard the sample's
-        // series (absence = not-measured, the established sample_meta
-        // signal) rather than emit a half-window or NPE on `current`.
-        val out =
-          if (worker == null || worker.isAlive) Nil
-          else {
-            import scala.jdk.CollectionConverters._
-            current.iterator().asScala.toSeq
-          }
-        // Reset the handoff fields after every read (round-16 ADVICE): an
-        // unpaired second stop() must return Nil (not-measured), not
-        // replay the previous sample's series as if freshly measured.
-        worker = null
-        stopFlag = null
-        current = null
-        out
-      }
-    }
-    // Adaptive per-sample brackets (round 22, r21 verdict #3): the r21
-    // driver run passed BOTH run-level probe brackets while a mid-run
-    // window inflated its untouched rows ~1.3×, and only the 5 statically
-    // membw-flagged rows carried per-sample evidence — every cross-round
-    // comparison needed manual adjudication against a second run. Now ANY
-    // query whose first sample is ≥ BracketFloor (default 2 s) gets the
-    // bw/bw_after probe BRACKET on its repeat samples (probes run OUTSIDE
-    // the timed region — zero measurement tax on the timed numbers; the
-    // in-region heartbeat stays exclusive to the static membw set, so no
-    // row's timing basis changes). The first sample carries no bracket and
-    // counts not-clean in the admissibility rule, so a 3-sample median is
-    // admissible iff both bracketed samples are clean — conservative by
-    // construction.
-    val bracketFloor =
-      sys.env.getOrElse("SPARK_GRAFT_BRACKET_FLOOR_SEC", "2.0").toDouble
-    def time(q: Q, alsoBracket: Boolean = false): Sample = {
-      val flagged = membwQueries(q.name)
-      val bracket = flagged || alsoBracket
+    def time(q: Q, bracket: Boolean): Sample = {
       val bw = if (bracket) probeMembw() else -1.0
       val ev0 = settleDropped()
-      // `at` is read AFTER the settle wait (round-10 ADVICE): settleDropped
-      // can sleep up to 1 s, and the offset exists to position the TIMED
-      // region in the run — capturing it before the wait skewed the very
-      // contention-window forensics the field is for.
-      val at = (System.nanoTime() - benchT0) / 1e9
-      if (flagged) Heartbeat.start()
-      val t0 = System.nanoTime()
-      val ok = try { q.fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val hb = if (flagged) Heartbeat.stop() else Nil
-      val ev = dropped.get() - ev0 // read BEFORE the cleanup sweep
-      // The closing probe runs BEFORE the cleanup sweep so the bracket
-      // hugs the timed region (the sweep + GC can take seconds; a window
-      // change inside them is not this sample's evidence).
+      val at = (System.nanoTime() - benchT0) / 1e9 // after the settle wait
+      val sec = try Harness.timedCount(spark, q.name, sfDir)._2
+        catch { case _: Throwable => -1.0 }
+      val ev = dropped.get() - ev0 // before the sweep's own drops
+      // The closing probe hugs the timed region: it runs before the sweep
+      // and GC, which can take seconds.
       val bwAfter = if (bracket) probeMembw() else -1.0
       clearState()
-      Sample(if (ok) dt else -1.0, at, ev, bw, bwAfter, hb, hbOn = flagged)
+      Sample(sec, at, ev, bw, bwAfter)
     }
-    // Repeat-run mode, ADAPTIVE (round-7 verdict #1): a static allowlist
-    // keyed to last round's swings always misses the next one, so ANY
-    // query whose first sample is ≥ RepeatFloor (default 0.5 s — where a
-    // GC pause or scheduler hiccup is large enough to fake a 2×
-    // regression) gets median-of-N, plus anything force-listed via env.
-    // The headline JSON reports the median; raw samples land in
-    // BENCH_FULL.json.
-    val repeats = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt)
-    val repeatFloor =
-      sys.env.getOrElse("SPARK_GRAFT_REPEAT_FLOOR_SEC", "0.5").toDouble
-    val forced: Set[String] = sys.env.getOrElse("SPARK_GRAFT_REPEAT_QUERIES", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    // Focused re-runs (round-11 adjudication tooling): SPARK_GRAFT_ONLY
-    // restricts the run to a comma-separated subset INSIDE the exact Bench
-    // harness (settle wait, ev channel, blocking cleanup, whole-set passes)
-    // — the in-suite state interactions being adjudicated are structurally
-    // invisible to a fresh-JVM `Dev time`. A filtered run is NOT suite
-    // evidence: it skips the sidecar entirely (no runs-series append) and
-    // tags its stdout line "filtered".
+    // SPARK_GRAFT_ONLY runs a subset inside the same protocol. A filtered
+    // run is not suite evidence: it writes no sidecar and tags its line.
     val only = Harness.only(SparkEntry.all.map(_.name))
     val toRun: Seq[Q] =
       if (only.isEmpty) SparkEntry.all else SparkEntry.all.filter(q => only(q.name))
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.filter(_ >= 0.0).sorted
-      if (s.isEmpty) -1.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    // Probe bracket (round-8 verdict #3): host capacity varies EXTERNALLY
-    // (round-8 ledger: identical code read 52.5 s vs 87 s across boots;
-    // idle time does not restore capacity), so a bench total is only
-    // admissible evidence when bracketed by healthy probe readings. The
-    // readings used to live only in prose — recording them in the sidecar
-    // lets any future swing adjudicate itself from the artifact alone.
-    // Shelling out to the SAME tools/host_probe.py keeps the numbers in
-    // the units the round-8 incident calibrated (aggregate >= 2.5e8 it/s
-    // healthy, <= 1.5e8 do not bench); a JVM-side burn would need fresh
-    // calibration and is JIT-elimination-prone. Best-effort: null if
-    // python3 or the script is unavailable.
+    // Run-level host bracket: capacity varies externally, so a total is
+    // admissible evidence only between healthy readings. Null when the
+    // probe is unavailable.
     def probe(): String = runProbe().map { out =>
       val agg = s"aggregate=($probeNum)".r.findFirstMatchIn(out).map(_.group(1))
       val single = s"single=($probeNum)".r.findFirstMatchIn(out).map(_.group(1))
-      // membw (round 11): memory-bandwidth leg — absent from older probe
-      // outputs, so it is optional in the parse.
       val bw = s"membw=($probeNum)".r.findFirstMatchIn(out).map(_.group(1))
       (agg, single) match {
         case (Some(a), Some(s)) =>
@@ -315,24 +174,12 @@ object Bench {
       }
     }.getOrElse("null")
     val probeBefore = probe()
-    // Streaming warm-up canary (round-9 verdict #4): the first streaming
-    // row in declaration order absorbed one-time streaming-infra warm-up
-    // (state-store init, micro-batch planner classloading) — stream_tumbling
-    // read 2.34/1.94/0.95 s in the r9 driver run, with the median landing
-    // on the still-warming second pass. One throwaway AvailableNow stream
-    // at the smallest SF pays that cost OUTSIDE every timed region. Falls
-    // back to the bench SF dir if no sf0.001 sibling exists. The canary is
-    // the FIRST declared stream_* row — resolved outside the best-effort
-    // try (round-10 review: a hardcoded name inside a catch-all meant a
-    // rename would silently delete the canary and quietly re-introduce the
-    // r9 median distortion). No streaming rows declared → nothing to warm.
-    // The canary runs ONLY when the warm-up dir is distinct from the timed
-    // dir (round-10 ADVICE: WarmDir's `distinct` flag was discarded, so with
-    // no sf0.001 sibling the canary ran the first stream_* query on the
-    // timed dir itself and left its caches warm for that query's timed
-    // sample — the exact condition `Dev time` skips). Skipping re-admits the
-    // r9 warm-up-in-median distortion for such layouts, so the decision is
-    // recorded in the sidecar (`stream_canary`) instead of being silent.
+    // Streaming warm-up canary: the first streaming row would otherwise
+    // absorb one-time streaming warm-up (state-store init, planner
+    // classloading) into its samples. One untimed run of the first declared
+    // stream_* row pays it — only on a warm-up dir distinct from the timed
+    // one, since a run on the timed dir would leave that row's caches warm.
+    // The decision is recorded in the sidecar (`stream_canary`).
     val (warmDir, warmDistinct) = WarmDir.resolve(sfDir)
     val canaryRan = warmDistinct && {
       toRun.find(_.name.startsWith("stream_")).exists { canary =>
@@ -341,146 +188,79 @@ object Bench {
       }
     }
     clearState()
-    // Declaration order (not Map hash order): stable across rounds so the
-    // JVM warm-up cost lands on the same first query every run and
-    // per-query times stay comparable round-over-round.
-    //
-    // Repeats run as whole-set PASSES, not back-to-back: a host-level
-    // interference window lasting minutes (observed round 8: one run's
-    // minhash samples read [26.2, 32.5, 8.5] s on identical code — the
-    // machine, not the query) hits all back-to-back samples of one query
-    // and survives the median, but spread across passes each sample lands
-    // minutes apart, so the median keeps at least one clean reading.
-    val firsts = toRun.map(q => q.name -> Seq(time(q)))
-    val repeatSet = toRun.filter { q =>
-      val first = firsts.collectFirst { case (n, s) if n == q.name => s.head }.get
-      repeats > 1 && (forced(q.name) || first.sec < 0.0 || first.sec >= repeatFloor)
-    }
+    // Declaration order keeps JVM warm-up on the same first query every run.
+    val firsts = toRun.map(q => q -> time(q, bracket = false))
+    // A failed first sample counts as slow: its row is repeated and bracketed.
+    def slow(first: Sample, floorSec: Double) = first.sec < 0.0 || first.sec >= floorSec
     val extra: Map[String, Seq[Sample]] =
-      (1 until repeats).flatMap(_ => repeatSet.map { q =>
-        val first = firsts.collectFirst { case (n, s) if n == q.name => s.head }.get
-        q.name -> time(q, alsoBracket = first.sec < 0.0 || first.sec >= bracketFloor)
-      }).groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
-    val samples = firsts.map { case (k, first) =>
-      k -> (first ++ extra.getOrElse(k, Seq.empty))
+      (1 until Repeats).flatMap(_ => firsts.collect {
+        case (q, first) if slow(first, RepeatFloorSec) =>
+          q.name -> time(q, bracket = slow(first, BracketFloorSec))
+      }).groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val samples = firsts.map { case (q, first) =>
+      q.name -> (first +: extra.getOrElse(q.name, Seq.empty))
     }
     val probeAfter = probe() // after the last timed query, before teardown
     val results = samples.map { case (k, v) => k -> median(v.map(_.sec)) }
-    // Fixed-decimal rendering pinned to Locale.ROOT (round-10 review): the
-    // f-interpolator uses the JVM default locale, and a comma decimal
-    // separator (de_DE, fr_FR, …) would make every emitted JSON artifact
-    // unparseable.
+    val totalSec = total(results.map(_._2))
+    val failed = results.collect { case (k, v) if v < 0.0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    // Locale.ROOT: a comma decimal separator would break every artifact.
     def fix(v: Double, decimals: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
-    // Paths are interpolated into JSON artifacts; a quote or backslash in
-    // SPARK_GRAFT_SF_DIR would make every line/sidecar unparseable
-    // (round-10 ADVICE) — escape the two JSON-significant characters.
     def jstr(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    // Per-query values rounded to ms so the ONE JSON line stays inside a
-    // 2,000-char output tail at 80 queries (round-4 verdict #9: full-double
-    // values pushed the line past the captured tail and truncated 12
-    // timings); the unrounded full map is preserved in BENCH_FULL.json.
+    // Per-query values rounded to ms keep the one line short enough for a
+    // captured output tail; the unrounded map is in the sidecar.
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fix(v, 3) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val filteredTag = if (only.nonEmpty) ""","filtered":true""" else ""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${jstr(sfDir)}$filteredTag}"""
+      s"""{"metric":"total","value":$totalSec,"unit":"sec","queries":$qs,""" +
+        s""""failed":$failed,"sf":${jstr(sfDir)}$filteredTag}"""
     val full = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullSamples = samples.filter(_._2.size > 1)
       .map { case (k, v) => "\"" + k + "\":" + v.map(_.sec).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    // Per-sample forensics for every query (see `Sample`): when each sample
-    // started and how many storage blocks dropped inside its timed region.
+    // `bw`/`bw_after` are omitted, not written as -1, when not measured.
     val meta = samples.map { case (k, v) =>
       "\"" + k + "\":" + v.map { s =>
-        // `bw`/`bw_after`/`hb` only for membw-flagged samples (-1 = not
-        // measured or probe failure — omitted rather than emitted, so
-        // absence is the not-measured signal and a reader never mistakes
-        // -1 for a rate). `bw`+`bw_after` are the per-sample BRACKET in
-        // the probe's calibrated units; `hb` is the in-sample heartbeat
-        // series (single-thread copy B/s once per second — relative
-        // signal, see Heartbeat).
         val bwField =
           if (s.bw >= 0.0) s""","bw":${fix(s.bw, 0)}""" else ""
         val bwAfterField =
           if (s.bwAfter >= 0.0) s""","bw_after":${fix(s.bwAfter, 0)}""" else ""
-        val hbField = if (s.hb.nonEmpty) {
-          s""","hb":${s.hb.map(r => String.format(java.util.Locale.ROOT,
-            "%.3g", Double.box(r))).mkString("[", ",", "]")}"""
-        } else ""
-        // Explicit heartbeat marker (round-15 ADVICE): the copy loop runs
-        // INSIDE the timed region, so flagged-row `sec` readings carry its
-        // constant tax from whichever round added the row to membwQueries
-        // (two rows since round 14, five since round 17 — cross-round
-        // comparisons of a flagged row must gate on this marker, since its
-        // pre-flag history was measured without the tax). `hb_on` marks
-        // which samples paid it without a reader inferring from hb's
-        // presence (a discarded series would otherwise be
-        // indistinguishable from not-measured).
-        val hbOnField = if (s.hbOn) s""","hb_on":true""" else ""
-        s"""{"at":${fix(s.at, 2)},"sec":${fix(s.sec, 3)},"ev":${s.ev}""" +
-          s"""$bwField$bwAfterField$hbField$hbOnField}"""
+        s"""{"at":${fix(s.at, 2)},"sec":${fix(s.sec, 3)},"ev":${s.ev}$bwField$bwAfterField}"""
       }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    // Run series (round-9 verdict #3): best-of-N sidecar selection
-    // systematically understated variance — the spread itself must be an
-    // artifact. Every run APPENDS its {total, probe bracket} to `runs`
-    // (capped at the last 20), so a sidecar refresh preserves the series
-    // it is judged against; tools/bench_runs.py runs N fresh-JVM rounds
-    // and installs the MEDIAN admissible run's sidecar, never the best.
     val canaryJson =
       s"""{"ran":$canaryRan,"warm_distinct":$warmDistinct,"dir":${jstr(warmDir)}}"""
-    // Per-query admissibility verdicts IN the artifact (round-14 verdict
-    // #4): the brackets and the rule both live here, so any runner's
-    // BENCH_FULL carries the verdict map without tools/bench_runs.py in
-    // the loop. Rule (round-15 ADVICE fix): a sample is clean iff its
-    // bracket MAX clears the calibrated membw line, and the DENOMINATOR is
-    // ALL samples of the flagged query — a sample with no bracket (probe
-    // failure) counts as not-clean, so a median over 3 samples can never
-    // be ruled admissible from 1-of-1 bracketed. admissible ⇔ clean·2 >
-    // n_samples (a strict majority of clean samples bounds the median by a
-    // clean reading). The threshold is SINGLE-SOURCED from
-    // tools/host_probe.py (the calibration lives there); if the constant
-    // cannot be read the map is omitted — absent = not assessed, never a
-    // hand-copied number.
+    // The verdict map travels in the artifact, so no reader re-derives the
+    // rule. The membw line is read from tools/host_probe.py, where it is
+    // calibrated; if it cannot be read the map is omitted (not assessed).
     val healthyMembw: Option[Double] = try {
       val txt = java.nio.file.Files.readString(
         java.nio.file.Paths.get(repoDir, "tools", "host_probe.py"))
       s"HEALTHY_MEMBW\\s*=\\s*($probeNum)".r.findFirstMatchIn(txt)
         .map(_.group(1).toDouble)
     } catch { case _: Throwable => None }
-    val admissibilityJson: Option[String] = healthyMembw.map { line =>
+    val admissibilityField = healthyMembw.map { healthy =>
       samples
-        // Any query with at least one bracketed sample is assessed — the
-        // static membw set AND the adaptive ≥BracketFloor rows (round 22).
-        .filter { case (_, v) => v.exists(s => s.bw >= 0.0 || s.bwAfter >= 0.0) }
+        .filter { case (_, v) => v.exists(_.clean(healthy).isDefined) }
         .map { case (k, v) =>
-          val flags = v.map { s =>
-            if (s.bw < 0.0 && s.bwAfter < 0.0) None
-            else Some(math.max(s.bw, s.bwAfter) >= line)
-          }
-          val clean = flags.count(_.contains(true))
-          val fieldVals = flags
-            .map { case Some(b) => b.toString; case None => "null" }
-            .mkString("[", ",", "]")
+          val flags = v.map(_.clean(healthy))
+          val fieldVals = flags.map(_.fold("null")(_.toString)).mkString("[", ",", "]")
           s""""$k":{"samples":$fieldVals,"n_bracketed":${flags.count(_.isDefined)},""" +
-            s""""n_samples":${v.size},"admissible":${clean * 2 > v.size}}"""
-        }.mkString("{", ",", "}")
-    }
-    val admissibilityField =
-      admissibilityJson.map(j => s""","query_admissibility":$j""").getOrElse("")
+            s""""n_samples":${v.size},"admissible":${admissible(v, healthy)}}"""
+        }.mkString(""","query_admissibility":{""", ",", "}")
+    }.getOrElse("")
     if (only.isEmpty) {
-      // Sidecar read/append lives entirely inside the unfiltered branch
-      // (round-11 review): filtered runs skip the sidecar, so building its
-      // runs series for them was dead I/O and misleading code.
       val sidecarPath = java.nio.file.Paths.get(repoDir, "BENCH_FULL.json")
-      // `sf` in each entry: the series accumulates across invocations, and a
-      // small-SF smoke run is otherwise indistinguishable from sf0.1 evidence.
+      // Every run appends its {total, sf, probe bracket} to `runs` (last
+      // 20 kept), so the spread across runs is part of the artifact and a
+      // small-SF smoke run stays distinguishable from sf0.1 evidence.
       val runEntry =
-        s"""{"total":$total,"sf":${jstr(sfDir)},"probe_before":$probeBefore,""" +
+        s"""{"total":$totalSec,"sf":${jstr(sfDir)},"probe_before":$probeBefore,""" +
           s""""probe_after":$probeAfter}"""
       val prevRuns: Seq[String] = try {
         val txt = java.nio.file.Files.readString(sidecarPath)
@@ -490,15 +270,12 @@ object Bench {
       } catch { case _: Throwable => Seq.empty }
       val runs = (prevRuns :+ runEntry).takeRight(20).mkString("[", ",", "]")
       try java.nio.file.Files.writeString(sidecarPath,
-        s"""{"total":$total,"sf":${jstr(sfDir)},"probe_before":$probeBefore,""" +
-          s""""probe_after":$probeAfter,"stream_canary":$canaryJson,""" +
-          s""""queries":$full,"samples":$fullSamples,""" +
+        s"""{"total":$totalSec,"failed":$failed,"sf":${jstr(sfDir)},""" +
+          s""""probe_before":$probeBefore,"probe_after":$probeAfter,""" +
+          s""""stream_canary":$canaryJson,"queries":$full,"samples":$fullSamples,""" +
           s""""sample_meta":$meta$admissibilityField,"runs":$runs}""")
       catch { case _: Throwable => () } // sidecar is best-effort
     } else {
-      // Filtered runs are adjudication probes, not suite evidence — keep
-      // them out of the sidecar and its runs series, but surface the
-      // forensics on stdout so the experiment is self-contained.
       println(s"""{"filtered_meta":$meta$admissibilityField,"stream_canary":$canaryJson}""")
     }
     spark.stop()

@@ -83,17 +83,9 @@ object Dev {
     warmed
   }
 
-  /** (rows, seconds) of one run. The timer wraps the query function too:
-    * queries with driver-side iteration do real work before they return
-    * the DataFrame.
-    */
-  private def timedCount(spark: SparkSession, name: String, sfDir: String): (Long, Double) = {
-    val t0 = System.nanoTime()
-    val rows = SparkEntry.queries(name)(spark, sfDir).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    Cleanup.release(spark, blocking = true)
-    (rows, sec)
-  }
+  private def timedCount(spark: SparkSession, name: String, sfDir: String): (Long, Double) =
+    try Harness.timedCount(spark, name, sfDir)
+    finally Cleanup.release(spark, blocking = true)
 
   private def time(spark: SparkSession, name: String, sfDir: String): String = {
     val warmed = warmUp(spark, name, sfDir)

@@ -44,6 +44,19 @@ object Harness {
     spark
   }
 
+  /** (rows, seconds) of one run of the declared query `name`: the one query
+    * timer of Bench, the probes and `Dev`. The timed region covers the
+    * query function as well as the `count()`, because queries with
+    * driver-side iteration do real work before they return the DataFrame.
+    * Releasing the state the query leaves behind is the caller's step.
+    */
+  def timedCount(spark: SparkSession, name: String, sfDir: String): (Long, Double) = {
+    val fn = SparkEntry.queries(name)
+    val t0 = System.nanoTime()
+    val rows = fn(spark, sfDir).count()
+    (rows, (System.nanoTime() - t0) / 1e9)
+  }
+
   /** The names in `SPARK_GRAFT_ONLY` (comma-separated; empty = no filter).
     * Names outside `known` fail loud: a typo would otherwise shrink the run
     * silently, and conclusions would be drawn from the wrong query set.

@@ -1,11 +1,10 @@
 package graft
 
-/** Dev tool (round 22, r20 verdict #4): measure the HDFS-backed (default)
-  * vs RocksDB state-store providers on the declared stateful streaming
-  * rows, at a base dir and optionally a staged N× dir (tools/make_sf1.py),
-  * to locate the crossover the SURVEY §6 entry documents. Wall times only
-  * — result identity is RocksDBStateSpec's job (asserted there for every
-  * query probed here).
+/** Dev tool: wall times of the declared stateful streaming rows under the
+  * HDFS-backed (default) and the RocksDB state-store providers, at a base
+  * dir and optionally a staged N× dir (tools/make_sf1.py), to locate the
+  * crossover SURVEY §6 documents. Result identity is RocksDBStateSpec's
+  * job, asserted there for every query probed here.
   *
   * Usage: graft.StateStoreProbe <sfDir> [query ...]
   *   (env as graft.Bench: SPARK_GRAFT_CPUS; default query set below)
@@ -23,15 +22,12 @@ object StateStoreProbe {
     val queries = if (args.length > 1) args.drop(1).toSeq else Default
     val spark = Harness.session(Harness.cpus)
     def run(q: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (_, sec) = Harness.timedCount(spark, q, sfDir)
       Cleanup.release(spark, blocking = true)
-      dt
+      sec
     }
-    // One throwaway warm-up per provider so classloading/JIT lands outside
-    // the readings (the RocksDB JNI library load is real cost but one-time
-    // per executor in production — report it separately).
+    // The first RocksDB run pays the one-time JNI load and provider init,
+    // once per executor in production, so it is reported apart.
     for (q <- queries) {
       val hdfs = Seq(run(q), run(q))
       spark.conf.set(Key, Provider)

@@ -1,12 +1,10 @@
 package graft
 
-/** Smallest-SF-sibling warm-up dir resolution, shared by Bench (streaming
-  * warm-up canary) and TimeQuery (JIT warm-up run). Extracted in round 10:
-  * the two copy-pasted snippets had already diverged (only TimeQuery
-  * honored SPARK_GRAFT_WARM_DIR), and the distinctness check compared raw
-  * strings — a trailing slash, relative spelling, or symlinked prefix of
-  * the timed dir would pass as a "different" warm-up source and silently
-  * turn the timed region into a second, cache-warmed execution.
+/** Warm-up dir resolution, shared by Bench (streaming warm-up canary) and
+  * `Dev time`/`Dev profile` (JIT warm-up run). Distinctness compares
+  * normalized real paths: a trailing slash, relative spelling or symlinked
+  * prefix of the timed dir must not pass as a different warm-up source and
+  * turn the timed run into a second, cache-warm execution.
   */
 object WarmDir {
   private def norm(p: String): java.nio.file.Path = {

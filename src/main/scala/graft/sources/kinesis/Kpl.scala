@@ -3,6 +3,7 @@ package graft.sources.kinesis
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -52,41 +53,53 @@ object Kpl {
   /** Encode (partitionKey, payload) pairs as one KPL-aggregated blob —
     * the producer side (used by the sink-side batching path and by tests
     * pushing realistic aggregated traffic through the fake service).
+    *
+    * Every length prefix is computed up front, so the blob is written once
+    * into an exactly-sized array and the MD5 trailer is digested in place.
     */
   def aggregate(records: Seq[(String, Array[Byte])]): Array[Byte] = {
     require(records.nonEmpty, "cannot aggregate zero records")
-    val keys = records.map(_._1).distinct
-    val keyIndex = keys.zipWithIndex.toMap
-    val body = new ArrayBuffer[Byte]()
-    keys.foreach { k =>
-      writeTag(body, 1, wireType = 2)
-      writeBytes(body, k.getBytes(UTF_8))
+    val keyIndex = mutable.LinkedHashMap[String, Int]()
+    // (key index, data, length of the Record message)
+    val recs = records.iterator.map { case (pk, data) =>
+      val i = keyIndex.getOrElseUpdate(pk, keyIndex.size)
+      (i, data, 2 + varintSize(i) + varintSize(data.length) + data.length)
+    }.toArray
+    val keys = keyIndex.keys.map(_.getBytes(UTF_8)).toArray
+    val bodyLen = keys.map(k => 1 + varintSize(k.length) + k.length).sum +
+      recs.map { case (_, _, len) => 1 + varintSize(len) + len }.sum
+    val w = new Writer(new Array[Byte](Magic.length + bodyLen + 16))
+    Magic.foreach(w.byte(_))
+    keys.foreach { k => w.byte(0x0A); w.bytes(k) } // field 1, wire type 2
+    recs.foreach { case (i, data, len) =>
+      w.byte(0x1A); w.varint(len)                  // field 3, wire type 2
+      w.byte(0x08); w.varint(i)                    //   field 1, wire type 0
+      w.byte(0x1A); w.bytes(data)                  //   field 3, wire type 2
     }
-    records.foreach { case (pk, data) =>
-      val rec = new ArrayBuffer[Byte]()
-      writeTag(rec, 1, wireType = 0)
-      writeVarint(rec, keyIndex(pk).toLong)
-      writeTag(rec, 3, wireType = 2)
-      writeBytes(rec, data)
-      writeTag(body, 3, wireType = 2)
-      writeBytes(body, rec.toArray)
-    }
-    val b = body.toArray
-    Magic ++ b ++ MessageDigest.getInstance("MD5").digest(b)
+    val md5 = MessageDigest.getInstance("MD5")
+    md5.update(w.buf, Magic.length, bodyLen)
+    md5.digest(w.buf, w.pos, 16)
+    w.buf
   }
 
-  private def writeTag(out: ArrayBuffer[Byte], field: Int, wireType: Int): Unit =
-    writeVarint(out, ((field << 3) | wireType).toLong)
+  private def varintSize(v: Int): Int = (38 - Integer.numberOfLeadingZeros(v | 1)) / 7
 
-  private def writeVarint(out: ArrayBuffer[Byte], v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7FL) != 0) { out += ((v & 0x7F) | 0x80).toByte; v >>>= 7 }
-    out += v.toByte
-  }
-
-  private def writeBytes(out: ArrayBuffer[Byte], b: Array[Byte]): Unit = {
-    writeVarint(out, b.length.toLong)
-    out ++= b
+  /** Protobuf writer over a presized buffer: single bytes, unsigned
+    * varints and length-delimited byte strings.
+    */
+  private final class Writer(val buf: Array[Byte]) {
+    var pos = 0
+    def byte(b: Int): Unit = { buf(pos) = b.toByte; pos += 1 }
+    def varint(v0: Int): Unit = {
+      var v = v0
+      while ((v & ~0x7F) != 0) { byte((v & 0x7F) | 0x80); v >>>= 7 }
+      byte(v)
+    }
+    def bytes(b: Array[Byte]): Unit = {
+      varint(b.length)
+      System.arraycopy(b, 0, buf, pos, b.length)
+      pos += b.length
+    }
   }
 
   // ------------------------------------------------------------ decoder --

@@ -15,9 +15,8 @@ bandwidth-depressed windows inflate the block-manager-heavy LSH rows
 with a loud warning — never the fastest.
 
 Usage: python3 tools/bench_runs.py [N]      (default 3)
-Env:   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_REPEATS etc.
-       are forwarded to graft.Bench; SPARK_GRAFT_REPO_DIR locates the
-       repo (default: cwd).
+Env:   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS etc. are forwarded to
+       graft.Bench; SPARK_GRAFT_REPO_DIR locates the repo (default: cwd).
 """
 import json
 import os
@@ -46,55 +45,6 @@ def membw_ok(s):
     admissibility gate (round-12 review: two copies diverge)."""
     bws = bracket_membws(s)
     return not bws or max(bws) >= HEALTHY_MEMBW
-
-
-def query_admissibility(s):
-    """Per-QUERY admissibility from per-sample membw brackets (round-13
-    verdict #1c). Since round 15 graft.Bench emits the verdict map itself
-    (`query_admissibility` in the sidecar — brackets and rule live in one
-    place), so prefer the in-artifact map verbatim; the derivation below
-    only serves pre-r15 sidecars. Rule (round-15 ADVICE fix): clean iff
-    bracket-max clears HEALTHY_MEMBW, DENOMINATOR = all samples of the
-    flagged query (a missing bracket counts as not-clean — a 3-sample
-    median can't be ruled admissible from 1-of-1 bracketed), admissible
-    iff clean*2 > n_samples. Queries with no flagged samples are not
-    assessed and do not appear."""
-    if "query_admissibility" in s:
-        return s["query_admissibility"]
-    out = {}
-    for q, samples in s.get("sample_meta", {}).items():
-        flags = []
-        for smp in samples:
-            bws = [b for b in (smp.get("bw"), smp.get("bw_after"))
-                   if b is not None]
-            flags.append(max(bws) >= HEALTHY_MEMBW if bws else None)
-        if any(f is not None for f in flags):
-            clean = sum(1 for f in flags if f)
-            out[q] = {"samples": flags,
-                      "n_bracketed": sum(1 for f in flags if f is not None),
-                      "n_samples": len(flags),
-                      "admissible": clean * 2 > len(flags)}
-    return out
-
-
-def hb_forensics(s):
-    """One line per flagged sample: wall seconds, heartbeat min/median
-    (the in-sample collapse signal — round-13 verdict #1b), and the
-    per-sample bracket. An inflated sample now adjudicates itself: hb_min
-    cratering vs sibling samples convicts a mid-sample host window; a flat
-    hb series falsifies the membw explanation."""
-    lines = []
-    for q, samples in s.get("sample_meta", {}).items():
-        for j, smp in enumerate(samples):
-            hb = smp.get("hb") or []
-            if not hb:
-                continue
-            med = sorted(hb)[len(hb) // 2]
-            lines.append(
-                f"  {q}[{j}]: sec={smp['sec']} hb_min={min(hb):.3g} "
-                f"hb_med={med:.3g} n={len(hb)} "
-                f"bracket=({smp.get('bw')},{smp.get('bw_after')})")
-    return lines
 
 
 def main():
@@ -141,14 +91,14 @@ def main():
         bw_tag = ("" if membw_ok(s)
                   else " MEMBW-DEGRADED(bracket max "
                        f"{max(bracket_membws(s)):.3g} < {HEALTHY_MEMBW:.3g})")
-        qa = query_admissibility(s)
+        qa = s.get("query_admissibility", {})
         bad_q = sorted(q for q, v in qa.items() if not v["admissible"])
         qa_tag = (f" QUERY-DEGRADED[{','.join(bad_q)}]" if bad_q else "")
+        failed = s.get("failed") or []
+        failed_tag = f" FAILED[{','.join(failed)}]" if failed else ""
         print(f"run {i + 1}/{n}: total={s['total']:.1f}s "
               f"probe_before={s['probe_before']} "
-              f"probe_after={s['probe_after']}{bw_tag}{qa_tag}")
-        for line in hb_forensics(s):
-            print(line)
+              f"probe_after={s['probe_after']}{bw_tag}{qa_tag}{failed_tag}")
 
     def healthy(p):
         return bool(p) and p.get("agg", 0) >= HEALTHY_AGG
@@ -165,10 +115,6 @@ def main():
     # The chosen run's sidecar, but with the FULL accumulated series (each
     # Bench run appended itself, so the last run's series is complete).
     chosen["runs"] = sidecars[-1]["runs"]
-    # Per-query verdicts travel WITH the artifact (round-13 verdict #1c):
-    # a judge reading only BENCH_FULL.json sees which flagged queries'
-    # medians are bracket-clean without re-deriving the rule.
-    chosen["query_admissibility"] = query_admissibility(chosen)
     with open(side, "w") as f:
         json.dump(chosen, f, separators=(",", ":"))
     print(f"installed median {'admissible ' if adm else ''}run: "
