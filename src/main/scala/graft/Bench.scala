@@ -5,6 +5,8 @@ package graft
   * unfiltered run also writes the `BENCH_FULL.json` sidecar.
   *
   * One protocol times every row:
+  *   - the first declared row and the first stream_* row each run once,
+  *     untimed, on a warm-up dir (see [[WarmDir]]);
   *   - each query runs once, in declaration order, through
   *     [[Harness.timedCount]];
   *   - a query whose first sample failed or took ≥ `RepeatFloorSec` runs
@@ -174,19 +176,21 @@ object Bench {
       }
     }.getOrElse("null")
     val probeBefore = probe()
-    // Streaming warm-up canary: the first streaming row would otherwise
-    // absorb one-time streaming warm-up (state-store init, planner
-    // classloading) into its samples. One untimed run of the first declared
-    // stream_* row pays it — only on a warm-up dir distinct from the timed
-    // one, since a run on the timed dir would leave that row's caches warm.
-    // The decision is recorded in the sidecar (`stream_canary`).
+    // Warm-up canaries: the first declared row would otherwise absorb the
+    // JVM's first-query warm-up (classloading, codegen, JIT) into a first
+    // sample that is never repeated when it lands under `RepeatFloorSec`,
+    // and the first streaming row one-time streaming warm-up (state-store
+    // init, planner classloading). One untimed run of each pays it — only
+    // on a warm-up dir distinct from the timed one, since a run on the
+    // timed dir would leave that row's caches warm. The decisions are
+    // recorded in the sidecar (`first_canary`, `stream_canary`).
     val (warmDir, warmDistinct) = WarmDir.resolve(sfDir)
-    val canaryRan = warmDistinct && {
-      toRun.find(_.name.startsWith("stream_")).exists { canary =>
-        try { canary.fn(spark, warmDir).count(); true }
-        catch { case _: Throwable => false }
-      }
+    def warm(canary: Option[Q]): Boolean = warmDistinct && canary.exists { q =>
+      try { q.fn(spark, warmDir).count(); true }
+      catch { case _: Throwable => false }
     }
+    val firstRan = warm(toRun.headOption)
+    val canaryRan = warm(toRun.find(_.name.startsWith("stream_")))
     clearState()
     // Declaration order keeps JVM warm-up on the same first query every run.
     val firsts = toRun.map(q => q -> time(q, bracket = false))
@@ -235,6 +239,8 @@ object Bench {
     }.mkString("{", ",", "}")
     val canaryJson =
       s"""{"ran":$canaryRan,"warm_distinct":$warmDistinct,"dir":${jstr(warmDir)}}"""
+    val firstJson =
+      s"""{"query":${jstr(toRun.headOption.fold("")(_.name))},"ran":$firstRan}"""
     // The verdict map travels in the artifact, so no reader re-derives the
     // rule. The membw line is read from tools/host_probe.py, where it is
     // calibrated; if it cannot be read the map is omitted (not assessed).
@@ -272,11 +278,13 @@ object Bench {
       try java.nio.file.Files.writeString(sidecarPath,
         s"""{"total":$totalSec,"failed":$failed,"sf":${jstr(sfDir)},""" +
           s""""probe_before":$probeBefore,"probe_after":$probeAfter,""" +
-          s""""stream_canary":$canaryJson,"queries":$full,"samples":$fullSamples,""" +
+          s""""first_canary":$firstJson,"stream_canary":$canaryJson,""" +
+          s""""queries":$full,"samples":$fullSamples,""" +
           s""""sample_meta":$meta$admissibilityField,"runs":$runs}""")
       catch { case _: Throwable => () } // sidecar is best-effort
     } else {
-      println(s"""{"filtered_meta":$meta$admissibilityField,"stream_canary":$canaryJson}""")
+      println(s"""{"filtered_meta":$meta$admissibilityField,""" +
+        s""""first_canary":$firstJson,"stream_canary":$canaryJson}""")
     }
     spark.stop()
     println(line) // last stdout line: survives tail-capture intact

@@ -18,11 +18,12 @@ import graft.functions.{DotProduct, SortedLongIntersectCount}
   * Registration is idempotent per session.
   *
   * `graft_intersect_count` wraps each input in sort_array(array_distinct)
-  * before the sorted-merge scan: the raw SortedLongIntersectCount assumes
-  * sorted-distinct inputs (a private fast path — the LSH verify stage
-  * guarantees it structurally) and silently miscounts otherwise, so the
-  * SQL-facing form normalizes first. Catalyst folds the normalizers away
-  * when the child is already sort_array(array_distinct(...)).
+  * before the exact (tau = 0) sorted-merge scan: the raw
+  * SortedLongIntersectCount assumes sorted-distinct inputs (a private fast
+  * path — the LSH verify stage guarantees it structurally) and silently
+  * miscounts otherwise, so the SQL-facing form normalizes first. Catalyst
+  * folds the normalizers away when the child is already
+  * sort_array(array_distinct(...)).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -43,7 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         def norm(e: Expression) =
           SortArray(ArrayDistinct(e),
             org.apache.spark.sql.catalyst.expressions.Literal(true))
-        SortedLongIntersectCount(norm(children.head), norm(children(1)))
+        SortedLongIntersectCount(norm(children.head), norm(children(1)), 0.0)
       }))
   }
 }

@@ -50,15 +50,18 @@ object Tables {
     * the brief inference window, which is harmless (it only widens what a
     * reader would accept, and no other test table carries ns timestamps).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val df = rawEvents(spark, dir)
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df // already µs TimestampType
-    }
+  def events(spark: SparkSession, dir: String): DataFrame = normalizeTs(rawEvents(spark, dir))
+
+  /** `ts` of an events frame, batch or streaming, as a µs TimestampType:
+    * ns INT64 truncates to µs by exact integer division, TIMESTAMP_NTZ
+    * casts value-identically under the UTC session timezone.
+    */
+  def normalizeTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    case org.apache.spark.sql.types.LongType =>
+      df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    case org.apache.spark.sql.types.TimestampNTZType =>
+      df.withColumn("ts", col("ts").cast("timestamp"))
+    case _ => df // already µs TimestampType
   }
 
   /** The footer-inferred events frame with `ts` untouched: LongType for the

@@ -1,6 +1,6 @@
 package graft
 
-/** Warm-up dir resolution, shared by Bench (streaming warm-up canary) and
+/** Warm-up dir resolution, shared by Bench (warm-up canaries) and
   * `Dev time`/`Dev profile` (JIT warm-up run). Distinctness compares
   * normalized real paths: a trailing slash, relative spelling or symlinked
   * prefix of the timed dir must not pass as a different warm-up source and

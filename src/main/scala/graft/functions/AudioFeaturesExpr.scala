@@ -5,16 +5,15 @@ import java.io.ByteArrayInputStream
 import javax.sound.sampled.AudioSystem
 import javax.sound.sampled.AudioFormat.{Encoding => E}
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType}
 
-/** REAL audio decode → fixed-width feature vector, the WAV half of the
-  * round-10 "make one modality's decode real" item: `javax.sound.sampled`
-  * ships with the JDK and decodes RIFF/WAVE (PCM and a-law/µ-law via
-  * conversion), AIFF and AU with zero extra dependencies.
+/** Audio decode → fixed-width feature vector, through
+  * `javax.sound.sampled` (ships with the JDK and decodes RIFF/WAVE — PCM,
+  * and a-law/µ-law via conversion — AIFF and AU with no extra dependency).
   *
   * Input: BINARY payload. Output: `array<double>` of length
   * [[AudioFeaturesExpr.Dim]] —
@@ -25,42 +24,27 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * payload (mp3/flac/ogg payloads keep `Multimodal.fakeEmbedding` as
   * their documented stand-in).
   *
-  * Same escalation tier and scale shape as [[ImageFeaturesExpr]]: a codec
-  * cannot be expressed with built-ins, the expression compiles to one
-  * static call so surrounding operators stay in whole-stage codegen, and
-  * the work is a per-row, state-free, driver-free map — ZERO shuffles at
-  * any corpus size.
+  * Same shape as [[ImageFeaturesExpr]]: a codec cannot be expressed with
+  * built-ins, so the expression is replaced by a `StaticInvoke` of
+  * [[AudioFeaturesExpr.compute]] inside whole-stage codegen, and the work
+  * is a per-row, state-free, driver-free map with no shuffle.
   *
   * Determinism: PCM WAV decode is bit-exact (integer samples read from the
   * container), so the features are exact and spec-pinned — MultimodalSpec
   * synthesizes known-sample WAVs with `AudioSystem.write` and asserts
   * bit-exact doubles against the same arithmetic.
   */
-case class AudioFeaturesExpr(child: Expression) extends UnaryExpression {
+case class AudioFeaturesExpr(child: Expression)
+  extends RuntimeReplaceable with ExpectsInputTypes with UnaryLike[Expression] {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def inputTypes = Seq(BinaryType)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"audio_features expects a binary input, got ${other.simpleString}")
-  }
-
-  /** NULL for undecodable payloads over non-null input — the try_cast /
-    * from_json best-effort contract, same as ImageFeaturesExpr.
+  /** Nullable over non-null input: undecodable payloads yield NULL, the
+    * try_cast / from_json best-effort contract.
     */
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    AudioFeaturesExpr.compute(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |${ev.value} = graft.functions.AudioFeaturesExpr.compute($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(AudioFeaturesExpr.getClass, ArrayType(DoubleType, containsNull = false),
+      "compute", Seq(child), returnNullable = true)
 
   override protected def withNewChildInternal(newChild: Expression): AudioFeaturesExpr =
     copy(child = newChild)
@@ -69,17 +53,15 @@ case class AudioFeaturesExpr(child: Expression) extends UnaryExpression {
 object AudioFeaturesExpr {
   val Dim = 8
 
-  /** Static entry point shared by interpreted eval and generated code.
+  /** The kernel: features of one payload, or null when undecodable.
     *
-    * Samples are decoded MANUALLY from the container's own PCM frames
-    * (round-11 review): the first cut piped everything through the JDK's
-    * PCM-to-PCM converter targeting 16-bit, but that codec only handles
-    * 8↔16-bit sign/endian swaps — a perfectly valid 24-bit or 32-bit or
-    * IEEE-float WAV would throw in the converter and be silently
-    * misclassified as "no JDK codec". Reading the raw frames and decoding
-    * signed/unsigned 8/16/24/32-bit integers and 32/64-bit floats directly
-    * keeps those payloads real (and exact); only a-law/µ-law still go
-    * through the JDK converter (that pair IS supported, to 16-bit signed).
+    * Samples are decoded from the container's own PCM frames, not through
+    * the JDK's PCM-to-PCM converter: that converter only handles 8↔16-bit
+    * sign/endian swaps, so a valid 24-bit, 32-bit or IEEE-float WAV would
+    * throw in it and read as "no JDK codec". Signed/unsigned 8/16/24/32-bit
+    * integers and 32/64-bit floats are decoded directly and exactly; only
+    * a-law/µ-law go through the JDK converter (to 16-bit signed, which it
+    * supports).
     */
   def compute(bytes: Array[Byte]): ArrayData = {
     val in =
@@ -105,11 +87,9 @@ object AudioFeaturesExpr {
         (enc == E.PCM_SIGNED || enc == E.PCM_UNSIGNED) &&
           (bits == 8 || bits == 16 || bits == 24 || bits == 32) ||
           enc == E.PCM_FLOAT && (bits == 32 || bits == 64)
-      // Sample-rate validity alongside the encoding/channel checks
-      // (round-11 ADVICE): a crafted header can declare rate 0 or the
-      // AudioSystem NOT_SPECIFIED sentinel (-1); duration and the rate
-      // feature would then be Infinity/garbage instead of honoring the
-      // NULL-for-undecodable contract.
+      // A crafted header can declare rate 0 or the AudioSystem
+      // NOT_SPECIFIED sentinel (-1); duration and the rate feature would
+      // then be Infinity/garbage instead of NULL for undecodable input.
       if (!ok || ch <= 0 || !(fmt.getSampleRate > 0)) return null
       val frameBytes =
         if (fmt.getFrameSize > 0) fmt.getFrameSize else bytesPer * ch

@@ -4,16 +4,15 @@ import java.io.ByteArrayInputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType}
 
-/** REAL image decode → fixed-width feature vector (round-10 verdict
-  * "next round" #4: the "no codecs offline" rationale for stubbing ALL
-  * decode was overstated — `javax.imageio` ships with the JDK and decodes
-  * PNG/JPEG/GIF/BMP/WBMP with zero extra dependencies).
+/** Image decode → fixed-width feature vector, through `javax.imageio`
+  * (ships with the JDK and decodes PNG/JPEG/GIF/BMP/WBMP with no extra
+  * dependency).
   *
   * Input: BINARY payload. Output: `array<double>` of length
   * [[ImageFeaturesExpr.Dim]] —
@@ -23,18 +22,14 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   *    lum_min, lum_max]
   * or NULL when the payload is not decodable by any registered ImageIO
   * reader (corrupt bytes, or a format with no JDK codec — flac/matroska
-  * payloads still go through `Multimodal.fakeEmbedding`, which remains the
-  * documented stand-in for decoder-less modalities and ML-model
-  * embeddings).
+  * payloads still go through `Multimodal.fakeEmbedding`, the documented
+  * stand-in for decoder-less modalities and ML-model embeddings).
   *
-  * Same escalation tier as DotProduct (SURVEY §4.3, "custom code
-  * unavoidable"): there is no built-in expression family that can run a
-  * codec. The expression keeps the surrounding operators inside whole-stage
-  * codegen by compiling to one static call — the work IS the decode, so
-  * there is nothing further for Janino to fuse. Decode is per-row,
-  * allocation-bounded (one int[] of w·h per payload), driver-free and
-  * state-free, so the operator distributes like any other map: at 100 TB
-  * this is a pure map stage, ZERO shuffles, scan-bound.
+  * No built-in expression family can run a codec, so the expression is
+  * replaced by a `StaticInvoke` of [[ImageFeaturesExpr.compute]]: the
+  * surrounding operators stay inside whole-stage codegen around one static
+  * call. Decode is per-row, allocation-bounded (one int[] of w·h per
+  * payload), driver-free and state-free: a pure map stage with no shuffle.
   *
   * Determinism: PNG/GIF/BMP are lossless — identical bytes decode to
   * identical pixels on any compliant JVM, so the features are exact and
@@ -43,32 +38,18 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * implementation-defined at the pixel level; the spec asserts shape and
   * bounds, not exact values, for that format.
   */
-case class ImageFeaturesExpr(child: Expression) extends UnaryExpression {
+case class ImageFeaturesExpr(child: Expression)
+  extends RuntimeReplaceable with ExpectsInputTypes with UnaryLike[Expression] {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"image_features expects a binary input, got ${other.simpleString}")
-  }
+  override def inputTypes = Seq(BinaryType)
 
   /** Nullable even over non-null input: undecodable bytes yield NULL (the
     * row survives, the feature column is absent) — the same contract as
     * built-in best-effort parsers like try_cast / from_json.
     */
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    ImageFeaturesExpr.compute(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |${ev.value} = graft.functions.ImageFeaturesExpr.compute($b);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(ImageFeaturesExpr.getClass, ArrayType(DoubleType, containsNull = false),
+      "compute", Seq(child), returnNullable = true)
 
   override protected def withNewChildInternal(newChild: Expression): ImageFeaturesExpr =
     copy(child = newChild)
@@ -77,7 +58,7 @@ case class ImageFeaturesExpr(child: Expression) extends UnaryExpression {
 object ImageFeaturesExpr {
   val Dim = 10
 
-  /** Decode-bomb bound (round-11 review): a few-KB payload can DECLARE an
+  /** Decode-bomb bound: a few-KB payload can DECLARE an
     * enormous raster (a classic decompression bomb) and make the decoder
     * allocate w·h·4 bytes before any pixel is read — with many codegen
     * lanes decoding concurrently that is an executor OOM, not a bad row.
@@ -88,23 +69,21 @@ object ImageFeaturesExpr {
     */
   val MaxPixels: Long = 1L << 24
 
-  /** Static entry point shared by interpreted eval and generated code.
-    * Returns null for anything no registered reader can decode — the WHOLE
-    * body is guarded (not just the read): a post-read raster/color-model
-    * exception must also yield NULL, never a task failure (round-11
-    * review; AudioFeaturesExpr had the whole-body guard from the start).
+  /** The kernel: features of one payload, or null for anything no
+    * registered reader can decode. The WHOLE body is guarded (not just the
+    * read): a post-read raster/color-model exception must also yield NULL,
+    * never a task failure.
     */
   def compute(bytes: Array[Byte]): ArrayData = try {
     // A per-call MemoryCacheImageInputStream rather than the process-wide
-    // ImageIO.setUseCache(false) flag (round-11 review): the global setter
+    // ImageIO.setUseCache(false) flag: the global setter
     // would silently change decode caching for every other ImageIO user in
     // the JVM; the explicit stream scopes "no temp-file spill per row" to
     // this expression alone.
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new ByteArrayInputStream(bytes))
     // The no-registered-reader check lives INSIDE the try whose finally
-    // closes iis (round-11 ADVICE): an early return before that try leaked
-    // the stream on every non-image payload, leaving cleanup to GC.
+    // closes iis, so a non-image payload does not leak the stream.
     val img = try {
       val readers = ImageIO.getImageReaders(iis)
       if (!readers.hasNext) null

@@ -1,110 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, RuntimeReplaceable, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+import org.apache.spark.unsafe.bitset.BitSetMethods
 
-/** Native dot product over two ArrayType(DoubleType) columns.
-  *
-  * SURVEY §4.3 reserved this exact escalation: "start with
-  * zip_with+aggregate built-ins; only if BENCH demands, add a codegen
-  * Expression". BENCH demanded — the higher-order-function form allocates a
-  * zipped array per row and evaluates a lambda per element, costing ~100×
-  * the arithmetic on the all-pairs similarity queries. This expression
-  * compiles to a bare fused multiply-add loop over the two UnsafeArrayData
-  * buffers (no allocation, stays inside whole-stage codegen), and its
-  * accumulation order (index 0..n-1, left to right) is IDENTICAL to both
-  * the previous `aggregate(zip_with(...))` form and DuckDB's
-  * list_dot_product — bit-for-bit the same IEEE result, so oracle parity is
-  * unchanged.
-  *
-  * Assumes non-null elements (enforced upstream: embeddings are dense
-  * float vectors cast to double). Shorter of the two lengths bounds the
-  * loop, matching zip_with(x*y) + aggregate semantics where a longer tail
-  * would contribute null*value = null; our vectors are equal-length so the
-  * case never arises.
+/** The vector and sorted-set kernels, each written once as a plain method.
+  * The Catalyst expressions below replace themselves with a `StaticInvoke`
+  * of a kernel, so interpreted eval (by reflection) and whole-stage codegen
+  * (a direct static call) run the same code.
   */
-case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"dot_product expects array<double> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  /** Null elements make the whole result NULL — the exact semantics of the
-    * aggregate(zip_with(a,b,*)) form this expression replaces. The check is
-    * emitted only when the input schema admits null elements, so dense
-    * vectors keep the branch-free hot loop.
-    */
-  private def mayHaveNullElements: Boolean = Seq(left, right).exists {
-    _.dataType match {
-      case ArrayType(_, containsNull) => containsNull
-      case _ => false
-    }
-  }
-
-  /** A null ELEMENT nulls the result even when both array columns are
-    * non-nullable, so nullability must include the element dimension —
-    * round-10 fix for the round-9 Janino fallback: with the default
-    * `left.nullable || right.nullable` = false, `nullSafeCodeGen` never
-    * declares `ev.isNull` (it swaps in a false-literal after the fact),
-    * but the element-null check in `doGenCode` still assigns the original
-    * undeclared name — "Expression "isNull_N" is not an rvalue", a silent
-    * per-row interpreter fallback wherever that shape ran. Declaring the
-    * expression nullable restores the sanctioned assign-ev.isNull contract
-    * (and keeps IsNotNull folds honest for the interpreted path too).
-    */
-  override def nullable: Boolean =
-    left.nullable || right.nullable || mayHaveNullElements
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    val checkNulls = mayHaveNullElements
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      acc += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val nullCheck = if (mayHaveNullElements)
-        s"if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }"
-      else ""
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullCheck
-         |  $acc += $x.getDouble($i) * $y.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
 object VectorOps {
   /** Column-level dot product; both sides must be array<double>. */
   def dot(a: Column, b: Column): Column =
@@ -115,130 +24,78 @@ object VectorOps {
     * array<bigint> sorted ascending with distinct elements.
     */
   def sortedIntersectCount(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      SortedLongIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    sortedIntersectCountBounded(a, b, 0.0)
 
   /** sortedIntersectCount with PPJoin-style early abandonment for a
-    * downstream `jac >= tau` filter (round 22, r21 verdict #5): abandon
-    * the merge walk as soon as even a perfect remaining suffix cannot
-    * reach the overlap a Jaccard of tau requires. ONLY safe under that
-    * filter — see SortedLongIntersectCountBounded for the equivalence
-    * argument.
+    * downstream `jac >= tau` filter: the merge walk stops as soon as even a
+    * perfect remaining suffix cannot reach the overlap a Jaccard of tau
+    * requires. ONLY safe under that filter; see [[intersectCount]].
     */
   def sortedIntersectCountBounded(a: Column, b: Column, tau: Double): Column =
     ColumnBridge.column(
-      SortedLongIntersectCountBounded(
-        ColumnBridge.expression(a), ColumnBridge.expression(b), tau))
-}
+      SortedLongIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b), tau))
 
-/** |A ∩ B| for two SORTED-ascending distinct long arrays via a single
-  * merge scan — O(n+m) with zero allocation, vs array_intersect's
-  * per-row hash-set build + array materialization (we only need the
-  * cardinality). Same BENCH-demanded escalation policy as DotProduct;
-  * used by the LSH verify stage where candidate volume × set size makes
-  * the constant matter. Inputs MUST be sorted distinct (the caller
-  * guarantees it via sort_array(array_distinct(...))); nothing is
-  * validated at runtime — this is a private fast path, not a public
-  * function.
-  */
-case class SortedLongIntersectCount(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(org.apache.spark.sql.types.LongType, _),
-          ArrayType(org.apache.spark.sql.types.LongType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_count expects array<bigint> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (n, m) = (x.numElements(), y.numElements())
-    var i = 0; var j = 0; var c = 0L
-    while (i < n && j < m) {
-      val xi = x.getLong(i); val yj = y.getLong(j)
-      if (xi == yj) { c += 1; i += 1; j += 1 }
-      else if (xi < yj) i += 1
-      else j += 1
+  /** Σ x(i)·y(i) over the shorter length, for arrays without null elements.
+    * Accumulation runs index 0..n-1, left to right, exactly as
+    * `aggregate(zip_with(a, b, (x, y) -> x * y), 0D, ...)` and DuckDB's
+    * `list_dot_product` do, so the IEEE result is bit-identical to both.
+    */
+  def denseDot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += x.getDouble(i) * y.getDouble(i)
+      i += 1
     }
-    c
+    acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xi = ctx.freshName("xi"); val yj = ctx.freshName("yj")
-      s"""
-         |int $n = $x.numElements(); int $m = $y.numElements();
-         |int $i = 0; int $j = 0; long $c = 0L;
-         |while ($i < $n && $j < $m) {
-         |  long $xi = $x.getLong($i); long $yj = $y.getLong($j);
-         |  if ($xi == $yj) { $c++; $i++; $j++; }
-         |  else if ($xi < $yj) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedLongIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedLongIntersectCount]] with POSITIONAL early abandonment (PPJoin's
-  * suffix bound, Xiao et al. WWW'08) for consumers that filter on
-  * `jac >= tau` (round 22, r21 verdict #5): jac = c/(n+m-c) >= tau forces
-  * c >= ceil(tau*(n+m)/(1+tau)) =: needed, and at any merge position the
-  * final count is bounded by c + min(remaining_a, remaining_b) — once that
-  * bound drops below `needed`, the walk stops and the PARTIAL count is
-  * returned.
-  *
-  * Output equivalence under the tau filter: for a pair with true jac >= tau
-  * the bound never fires (the bound is an upper bound on the true count,
-  * which is >= needed), so the exact count — and hence the exact jac in the
-  * output — is returned. For a pair with true jac < tau the returned
-  * partial c' <= true c < needed, and jac' = c'/(n+m-c') is monotone in c',
-  * so the row fails the filter exactly as before. Rows and values are
-  * bit-identical either way (IntersectBoundSpec fuzzes this against the
-  * exact expression). The bound is checked only on MISMATCH steps (a match
-  * leaves `c + remaining` unchanged, so it cannot newly violate the bound);
-  * matching pairs pay one extra register add per miss, failing pairs skip
-  * the tail of the walk.
-  *
-  * `needed` is the least count whose jac passes the filter, computed in
-  * the filter's own double arithmetic: the closed form above, rounded in
-  * doubles, can land one too high (tau=0.8, n+m=63: 0.8*63/1.8 evaluates
-  * to 28.000000000000004, ceil 29, while 28/35 >= 0.8 holds), which would
-  * abandon — and drop — a pair at exactly jac == tau. So after the ceil it
-  * steps down while `needed - 1` still passes.
-  *
-  * tau is a plan-time literal (the declared thresholds are constants), so
-  * `needed` folds into the generated code as arithmetic on the two lengths.
-  */
-case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
-    tau: Double) extends BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(org.apache.spark.sql.types.LongType, _),
-          ArrayType(org.apache.spark.sql.types.LongType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_count_bounded expects array<bigint> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+  /** [[denseDot]] for arrays whose elements may be null: a null element
+    * within the shorter length makes the result null, as null*value does
+    * in the zip_with form.
+    */
+  def nullableDot(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    if (hasNullBelow(x, n) || hasNullBelow(y, n)) null else denseDot(x, y)
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (n, m) = (x.numElements(), y.numElements())
+  /** Whether any of the first `n` elements is null. An UnsafeArrayData of
+    * exactly `n` elements answers from its null bitmap a word at a time
+    * (the format keeps the bits past `n` zero): a per-element test costs as
+    * much as the multiply-add it guards, which doubled the dot's time.
+    */
+  private def hasNullBelow(a: ArrayData, n: Int): Boolean = a match {
+    case u: UnsafeArrayData if u.numElements() == n =>
+      BitSetMethods.anySet(u.getBaseObject, u.getBaseOffset + 8, (n + 63) / 64)
+    case _ =>
+      var i = 0
+      while (i < n && !a.isNullAt(i)) i += 1
+      i < n
+  }
+
+  /** |A ∩ B| of two sorted-ascending distinct long arrays by one merge
+    * walk, abandoned early once a pair cannot reach Jaccard `tau`
+    * (PPJoin's suffix bound, Xiao et al. WWW'08).
+    *
+    * jac = c/(n+m-c) >= tau needs c >= `needed`, and at any position the
+    * final count is at most c + min(remaining_a, remaining_b); once that
+    * bound drops below `needed` the walk returns the partial count. A pair
+    * with true jac >= tau never trips the bound, so it gets the exact
+    * count; a pair below tau gets a partial c' <= c, and c'/(n+m-c') is
+    * monotone in c', so it still fails the filter. At tau = 0, `needed` is
+    * 0 and the bound can never fire: the result is the exact count.
+    *
+    * `needed` is the least count whose jac passes in the filter's own
+    * double arithmetic: the closed form ceil(tau*(n+m)/(1+tau)) can land
+    * one too high (tau=0.8, n+m=63 gives 29, while 28/35 >= 0.8), which
+    * would drop a pair at exactly jac == tau, so it steps down while
+    * `needed - 1` still passes. The bound is tested only on mismatch
+    * steps: a match leaves c + remaining unchanged.
+    */
+  def intersectCount(x: ArrayData, y: ArrayData, tau: Double): Long = {
+    val n = x.numElements()
+    val m = y.numElements()
     var needed = math.ceil(tau * (n + m) / (1.0 + tau)).toLong
     while (needed > 0 && (needed - 1).toDouble / (n + m - (needed - 1)) >= tau) needed -= 1
     var i = 0; var j = 0; var c = 0L
@@ -252,30 +109,49 @@ case class SortedLongIntersectCountBounded(left: Expression, right: Expression,
     }
     c
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val needed = ctx.freshName("needed")
-      val xi = ctx.freshName("xi"); val yj = ctx.freshName("yj")
-      s"""
-         |int $n = $x.numElements(); int $m = $y.numElements();
-         |long $needed = (long) java.lang.Math.ceil($tau * ($n + $m) / ${1.0 + tau});
-         |while ($needed > 0 && (double) ($needed - 1) / ($n + $m - ($needed - 1)) >= $tau) $needed--;
-         |int $i = 0; int $j = 0; long $c = 0L;
-         |while ($i < $n && $j < $m) {
-         |  long $xi = $x.getLong($i); long $yj = $y.getLong($j);
-         |  if ($xi == $yj) { $c++; $i++; $j++; }
-         |  else {
-         |    if ($xi < $yj) { $i++; } else { $j++; }
-         |    if ($c + java.lang.Math.min($n - $i, $m - $j) < $needed) break;
-         |  }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
+/** Native dot product over two array<double> columns: a bare multiply-add
+  * loop over the two array buffers, with no per-row allocation, in place
+  * of the zipped array and per-element lambda of the higher-order-function
+  * form. A null array gives null; a null element gives a null dot, so the
+  * null-element kernel is chosen whenever the resolved element type admits
+  * nulls and dense vectors keep an unboxed call.
+  */
+case class DotProduct(left: Expression, right: Expression)
+  extends RuntimeReplaceable with ExpectsInputTypes with BinaryLike[Expression] {
+
+  override def inputTypes = Seq.fill(2)(ArrayType(DoubleType))
+
+  override lazy val replacement: Expression = {
+    val nullElements = Seq(left, right).exists(_.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => false
     })
+    StaticInvoke(VectorOps.getClass, DoubleType,
+      if (nullElements) "nullableDot" else "denseDot", Seq(left, right),
+      returnNullable = nullElements)
+  }
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedLongIntersectCountBounded =
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+/** |A ∩ B| for two sorted-ascending distinct long arrays, walked with
+  * [[VectorOps.intersectCount]] at `tau` (0 for the exact count): O(n+m)
+  * with no allocation, where array_intersect builds a hash set and an
+  * array per row. Inputs MUST be sorted distinct (callers guarantee it via
+  * sort_array(array_distinct(...))); nothing is validated at runtime.
+  */
+case class SortedLongIntersectCount(left: Expression, right: Expression, tau: Double)
+  extends RuntimeReplaceable with ExpectsInputTypes with BinaryLike[Expression] {
+
+  override def inputTypes = Seq.fill(2)(ArrayType(LongType))
+
+  override lazy val replacement: Expression =
+    StaticInvoke(VectorOps.getClass, LongType, "intersectCount",
+      Seq(left, right, Literal(tau)), returnNullable = false)
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedLongIntersectCount =
     copy(left = newLeft, right = newRight)
 }

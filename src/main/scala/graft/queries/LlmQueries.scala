@@ -165,15 +165,15 @@ object LlmQueries {
     //    re-attached chunk-by-chunk in the consumers.
     val ga = reps.select(col("rep_id").as("a_rep"), col("tids").as("a_t"))
     val gb = reps.select(col("rep_id").as("b_rep"), col("tids").as("b_t"))
-    // Bounded (early-abandon) intersect (round 22, r21 verdict #5): the
-    // PPJoin positional suffix bound — stop the merge walk once even a
-    // perfect remaining suffix cannot reach the overlap `jac >= tau`
-    // requires. Unlike the size-ratio prefilter above (rejected: per-pair
-    // cost, no walk saved), the bound lives INSIDE the walk and prunes
-    // independently of the size distribution; a failing pair returns a
-    // partial count whose jac is still < tau (monotone), so output rows
-    // and values are bit-identical (equivalence note on the expression;
-    // fuzzed in IntersectBoundSpec).
+    // Bounded (early-abandon) intersect: the PPJoin positional suffix
+    // bound — stop the merge walk once even a perfect remaining suffix
+    // cannot reach the overlap `jac >= tau` requires. Unlike the size-ratio
+    // prefilter below (rejected: per-pair cost, no walk saved), the bound
+    // lives INSIDE the walk and prunes independently of the size
+    // distribution; a failing pair returns a partial count whose jac is
+    // still < tau (monotone), so output rows and values are bit-identical
+    // (equivalence note on `VectorOps.intersectCount`; fuzzed in
+    // IntersectBoundSpec).
     val inter = VectorOps.sortedIntersectCountBounded(
       col("a_t"), col("b_t"), tau).cast("int")
     // Size-ratio prefilter (round 21): A/B'd and NOT adopted. jac ≤

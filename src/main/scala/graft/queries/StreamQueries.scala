@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.streaming.{EventStream, StreamOps}
@@ -19,10 +20,19 @@ import graft.streaming.{EventStream, StreamOps}
   */
 object StreamQueries {
 
-  private def run(name: String, mode: String)(
-      xform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-    (s: org.apache.spark.sql.SparkSession, d: String) =>
+  private def run(name: String, mode: String)(xform: DataFrame => DataFrame) =
+    (s: SparkSession, d: String) =>
       EventStream.runAvailableNow(s, name, xform(EventStream.readEvents(s, d)), mode)
+
+  /** `run` over the events plus the far-future sentinel event
+    * (`EventStream.readEventsWithSentinel`), whose only job is the final
+    * watermark push; the sentinel's own rows (user_id −1) are dropped.
+    */
+  private def runWithSentinel(name: String, mode: String)(xform: DataFrame => DataFrame) =
+    (s: SparkSession, d: String) =>
+      EventStream.runAvailableNow(s, name,
+        xform(EventStream.readEventsWithSentinel(s, d)), mode)
+        .where(col("user_id") =!= -1L)
 
   val defs: Seq[Q] = Seq(
     // S1: tumbling window aggregation, complete mode (no watermark needed;
@@ -81,13 +91,8 @@ object StreamQueries {
     // half-open [start, last+gap) merge rule exactly.
     Q(
       "stream_session",
-      (s, d) => {
-        val withSentinel = EventStream.readEventsWithSentinel(s, d)
-        EventStream.runAvailableNow(s, "stream_session",
-          StreamOps.sessions(withSentinel), "append")
-          .where(col("user_id") =!= -1L)
-          .orderBy(col("user_id"), col("session_start"))
-      },
+      (s, d) => runWithSentinel("stream_session", "append")(StreamOps.sessions)(s, d)
+        .orderBy(col("user_id"), col("session_start")),
       oracle = Some("""
         WITH m AS (
           SELECT user_id, ts,
@@ -134,7 +139,7 @@ object StreamQueries {
                       AND p.ts + INTERVAL 30 MINUTES
         ORDER BY p_event_id, c_event_id""")),
 
-    // S15 (round 19): stream-stream LEFT OUTER join — the watermark-driven
+    // S15: stream-stream LEFT OUTER join — the watermark-driven
     // null-emission path (doc on StreamOps.purchaseClickLeftJoin): matched
     // purchases emit within the micro-batch like S6; unmatched ones emit
     // with NULL click columns only when the watermark passes their
@@ -146,13 +151,8 @@ object StreamQueries {
     // nulls-first, DuckDB nulls-last — a silent whole-row-order fork).
     Q(
       "stream_outer_join",
-      (s, d) => {
-        val withSentinel = EventStream.readEventsWithSentinel(s, d)
-        EventStream.runAvailableNow(s, "stream_outer_join",
-          StreamOps.purchaseClickLeftJoin(withSentinel), "append")
-          .where(col("user_id") =!= -1L)
-          .orderBy(col("p_event_id"), col("c_event_id").asc_nulls_first)
-      },
+      (s, d) => runWithSentinel("stream_outer_join", "append")(StreamOps.purchaseClickLeftJoin)(s, d)
+        .orderBy(col("p_event_id"), col("c_event_id").asc_nulls_first),
       oracle = Some("""
         SELECT p.user_id AS user_id, p.event_id AS p_event_id,
                c.event_id AS c_event_id, p.ts AS p_ts, c.ts AS c_ts
@@ -164,7 +164,7 @@ object StreamQueries {
         WHERE p.event_type = 'purchase'
         ORDER BY p_event_id, c_event_id NULLS FIRST""")),
 
-    // S16 (round 20): stream-stream FULL OUTER join — S15's
+    // S16: stream-stream FULL OUTER join — S15's
     // watermark-driven null emission on BOTH sides (doc on
     // StreamOps.purchaseClickFullJoin): unmatched purchases flush with
     // NULL click columns AND unmatched clicks flush with NULL purchase
@@ -176,14 +176,8 @@ object StreamQueries {
     // either can be NULL here and the engines' ASC-null defaults differ.
     Q(
       "stream_full_outer",
-      (s, d) => {
-        val withSentinel = EventStream.readEventsWithSentinel(s, d)
-        EventStream.runAvailableNow(s, "stream_full_outer",
-          StreamOps.purchaseClickFullJoin(withSentinel), "append")
-          .where(col("user_id") =!= -1L)
-          .orderBy(col("p_event_id").asc_nulls_first,
-            col("c_event_id").asc_nulls_first)
-      },
+      (s, d) => runWithSentinel("stream_full_outer", "append")(StreamOps.purchaseClickFullJoin)(s, d)
+        .orderBy(col("p_event_id").asc_nulls_first, col("c_event_id").asc_nulls_first),
       oracle = Some("""
         SELECT coalesce(p.user_id, c.user_id) AS user_id,
                p.event_id AS p_event_id, c.event_id AS c_event_id,
@@ -200,7 +194,7 @@ object StreamQueries {
     Q(
       "stream_static_join",
       (s, d) => {
-        val xform = (ev: org.apache.spark.sql.DataFrame) =>
+        val xform = (ev: DataFrame) =>
           StreamOps.staticEnrich(ev, Tables.customer(s, d))
         run("stream_static_join", "append")(xform)(s, d)
           .orderBy(col("event_id"))
@@ -219,7 +213,7 @@ object StreamQueries {
     Q(
       "stream_static_anti",
       (s, d) => {
-        val xform = (ev: org.apache.spark.sql.DataFrame) =>
+        val xform = (ev: DataFrame) =>
           StreamOps.staticSuppress(ev, Tables.customer(s, d))
         run("stream_static_anti", "append")(xform)(s, d)
           .orderBy(col("event_id"))
@@ -232,15 +226,15 @@ object StreamQueries {
         ORDER BY event_id""")),
 
     // S13: streaming corpus-ingest dedup against the incremental index —
-    // the live-increment twin of llm_dedup_incremental (round-12 verdict
-    // #4). The static side is the CORPUS-scale (h, n_old) key index, so
-    // unlike every other stream-static row it must SHUFFLE-join (pinned;
-    // broadcasting an ingest-history index is the 100 TB anti-pattern).
+    // the live-increment twin of llm_dedup_incremental. The static side is
+    // the CORPUS-scale (h, n_old) key index, so unlike every other
+    // stream-static row it must SHUFFLE-join (pinned; broadcasting an
+    // ingest-history index is the 100 TB anti-pattern).
     Q(
       "stream_incr_dedup",
       (s, d) => {
         val idx = StreamOps.incrementalIndex(Tables.events(s, d))
-        val xform = (ev: org.apache.spark.sql.DataFrame) =>
+        val xform = (ev: DataFrame) =>
           StreamOps.incrementalDedup(ev, idx)
         run("stream_incr_dedup", "append")(xform)(s, d)
           .orderBy(col("event_id"))

@@ -7,19 +7,18 @@ import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** KPL (Kinesis Producer Library) record aggregation — the PUBLIC wire
   * format real Kinesis producers use by default, covered by the reference's
-  * test surface (SURVEY §2.1 `KPLBasedKinesisTestUtils` row; round-4 verdict
-  * "What's missing" #2). A source that hands user code an aggregated blob
-  * as one record silently corrupts payload rows, so the decode path must
-  * deaggregate.
+  * test surface (SURVEY §2.1 `KPLBasedKinesisTestUtils` row). A source that
+  * hands user code an aggregated blob as one record silently corrupts
+  * payload rows, so the decode path must deaggregate.
   *
   * Wire format (public AWS documentation / aws/amazon-kinesis-producer
   * aggregation-format.md):
@@ -149,7 +148,7 @@ object Kpl {
 
   /** Minimal protobuf wire reader: varints, length-delimited fields, and
     * skipping of the remaining wire types. Throws IllegalArgumentException
-    * on truncation (converted to a non-KPL verdict by `parse`).
+    * on truncation (`parse` then reads the blob as non-KPL).
     */
   private final class Reader(b: Array[Byte]) {
     private var pos = 0
@@ -186,7 +185,7 @@ object Kpl {
     }
   }
 
-  /** Entry point the generated code calls: KPL blobs expand to their member
+  /** The kernel of [[KplDeaggregate]]: KPL blobs expand to their member
     * records (with their own partition keys); anything else passes through
     * as a single element with a NULL key (callers coalesce to the record's
     * transport-level partitionKey).
@@ -206,28 +205,19 @@ object Kpl {
     StructField("data", BinaryType, nullable = false)))
 }
 
-/** Catalyst expression: BINARY → ARRAY<STRUCT<partitionKey, data>>. Codegen
-  * is a static call into [[Kpl.deaggregateToArrayData]] (same pattern as the
-  * engine's StaticInvoke-backed functions), so the decode stays inside
-  * whole-stage codegen with the surrounding explode/projections — the
+/** Catalyst expression: BINARY → ARRAY<STRUCT<partitionKey, data>>, replaced
+  * by a `StaticInvoke` of [[Kpl.deaggregateToArrayData]], so the decode stays
+  * inside whole-stage codegen with the surrounding explode/projections — the
   * SURVEY UDF policy's "narrow codegen expression, no UDF" escalation.
   */
-case class KplDeaggregate(child: Expression) extends UnaryExpression {
+case class KplDeaggregate(child: Expression)
+  extends RuntimeReplaceable with ExpectsInputTypes with UnaryLike[Expression] {
 
-  override def dataType: DataType = ArrayType(Kpl.ElementType, containsNull = false)
+  override def inputTypes = Seq(BinaryType)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kpl_deaggregate expects binary input, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Kpl.deaggregateToArrayData(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.sources.kinesis.Kpl.deaggregateToArrayData($c)")
+  override lazy val replacement: Expression =
+    StaticInvoke(Kpl.getClass, ArrayType(Kpl.ElementType, containsNull = false),
+      "deaggregateToArrayData", Seq(child), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): KplDeaggregate =
     copy(child = newChild)

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -39,12 +38,11 @@ object EventStream {
   /** Streaming scan of `$dir/events.parquet`, normalized to the exact same
     * schema/values as `Tables.events`.
     *
-    * For ns files, unlike the batch reader (which since round 8 scopes
-    * `nanosAsLong` to its eager footer-schema inference and restores the
-    * caller's value), the STREAMING reader must leave the conf set for the
-    * session: each micro-batch converts parquet footers asynchronously for
-    * the whole lifetime of the query, so a scoped restore would race the
-    * stream.
+    * For ns files, unlike the batch reader (which scopes `nanosAsLong` to
+    * its eager footer-schema inference and restores the caller's value),
+    * the STREAMING reader must leave the conf set for the session: each
+    * micro-batch converts parquet footers asynchronously for the whole
+    * lifetime of the query, so a scoped restore would race the stream.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     // Glob, not bare file: FileStreamSource requires a directory basePath;
@@ -52,13 +50,13 @@ object EventStream {
     readEventsGlob(spark, s"$dir/events.parque*", probeTsType(spark, dir))
   }
 
-  /** Footer-probe cache (round 21): the physical ts type of a fixture dir
+  /** Footer-probe cache: the physical ts type of a fixture dir
     * is a property of the FILE, not the session — 13 streaming rows each
     * re-read the parquet footer (~50 ms of eager schema resolution per
     * query construction) for the same answer. Keyed by dir; never caches
     * data or results.
     *
-    * IMMUTABLE-FIXTURE ASSUMPTION (round-22 ADVICE): there is no
+    * IMMUTABLE-FIXTURE ASSUMPTION: there is no
     * invalidation — a dir whose events.parquet is rewritten with a
     * DIFFERENT physical ts type within one JVM would be served the stale
     * type and the sentinel union/schema would mismatch. Every current
@@ -77,15 +75,16 @@ object EventStream {
       spark: SparkSession, glob: String, tsType: DataType): DataFrame = {
     if (tsType == LongType)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream
-      .schema(rawSchema(tsType))
-      .parquet(glob)
-    tsType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    graft.Tables.normalizeTs(spark.readStream.schema(rawSchema(tsType)).parquet(glob))
   }
+
+  /** Sentinel-file cache: the 1-row far-future sentinel file is a pure
+    * function of the ts TYPE, so the three sentinel-using rows share one
+    * file per type per JVM instead of a temp dir and a one-row parquet
+    * write job per query. The file is input fixture, not a computed result.
+    */
+  private val sentinelCache =
+    new java.util.concurrent.ConcurrentHashMap[DataType, String]()
 
   /** `readEvents` unioned with a single far-future sentinel event (year
     * 2100, user_id −1) staged as a second file source. Purpose: in append
@@ -95,23 +94,14 @@ object EventStream {
     * row stays open and is withheld, so with a `user_id != -1` guard the
     * emitted rows are exactly the finalized sessions of the real data.
     */
-  /** Sentinel-file cache (round 21): the 1-row far-future sentinel file
-    * is a pure function of the ts TYPE, yet each of the three
-    * sentinel-using rows previously paid a temp dir + a full one-row
-    * parquet write job per query. One file per type per JVM; the file is
-    * input fixture, not a computed result.
-    */
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[DataType, String]()
-
   def readEventsWithSentinel(spark: SparkSession, dir: String): DataFrame = {
     val tsType = probeTsType(spark, dir)
-    // The sentinel write runs OUTSIDE any map lock (round-22 ADVICE: the
-    // previous computeIfAbsent held the hash-bin lock for the duration of
-    // a full Spark write job, blocking concurrent first-touch callers even
-    // for other types). Two racing first-touch callers now each write
-    // their own temp dir and putIfAbsent decides the winner — the loser
-    // deletes its temp dir and reads the winner's file. The file is written
+    // The sentinel write runs OUTSIDE any map lock: a computeIfAbsent would
+    // hold the hash-bin lock for a full Spark write job, blocking
+    // concurrent first-touch callers even for other types. Two racing
+    // first-touch callers each write their own temp dir and putIfAbsent
+    // decides the winner — the loser deletes its temp dir and reads the
+    // winner's file. The file is written
     // under the FIRST caller session's writer conf and reused by later
     // sessions; all harness sessions share the writer-relevant conf
     // (UTC, parquet defaults), which is the assumption this cache makes.

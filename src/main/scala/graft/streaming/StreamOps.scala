@@ -25,7 +25,7 @@ object StreamOps {
   def tumbling(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      // R2: value is 2-decimal data — sum exactly, cast the result. A raw
+      // value is 2-decimal data — sum exactly, cast the result. A raw
       // double sum is accumulation-order-dependent and cross-engine flaky.
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
@@ -82,104 +82,64 @@ object StreamOps {
   /** S6 — stream-stream inner join: purchases ⋈ clicks by user within
     * ±30 minutes. Inner joins emit within the arriving micro-batch, so the
     * AvailableNow result equals the batch join; the watermarks bound state
-    * retention (the 100 TB requirement — without them both sides buffer
-    * forever).
+    * retention (without them both sides buffer forever).
     */
-  def purchaseClickJoin(events: DataFrame): DataFrame = {
-    val purchases = events
-      .where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("p_event_id"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = events
-      .where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_event_id"))
-      .withWatermark("c_ts", "1 hour")
-    purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-        col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"))
-      .select(col("p_user").as("user_id"), col("p_event_id"),
-        col("c_event_id"), col("p_ts"), col("c_ts"))
-  }
+  def purchaseClickJoin(events: DataFrame): DataFrame =
+    purchaseClick(events, "inner", sentinel = false)
 
-  /** S15 (round 19) — stream-stream LEFT OUTER join: every purchase, with
-    * its ±30-minute same-user clicks where they exist and NULL click
-    * columns where none do. The outer leg is the one streaming semantics
-    * no inner row exercises: an unmatched left row sits in state until the
+  /** S15 — stream-stream LEFT OUTER join: every purchase, with its
+    * ±30-minute same-user clicks where they exist and NULL click columns
+    * where none do. An unmatched left row sits in state until the
     * watermark proves no future click can land in its interval, and only
-    * then emits with nulls — so under AvailableNow the null rows surface
-    * in the trailing no-data batch, and ONLY for rows whose interval the
-    * final watermark has passed. End-of-input alone never pushes the
-    * watermark past the last real purchase, so (exactly like
-    * stream_session) the declared query feeds the far-future sentinel
-    * through BOTH side filters (`user_id === -1`) to force every real
-    * row's state to resolve; the sentinel's own self-match is filtered
-    * from the output. With that push the AvailableNow result equals the
-    * batch left join bit-for-bit — which is what makes the row
-    * hash-verifiable against DuckDB.
+    * then emits with nulls — so under AvailableNow the null rows surface in
+    * the trailing no-data batch, and ONLY for rows whose interval the final
+    * watermark has passed. End-of-input alone never pushes the watermark
+    * past the last real purchase, so (as for stream_session) the declared
+    * query feeds the far-future sentinel through BOTH side filters
+    * (`user_id === -1`) to force every real row's state to resolve; the
+    * sentinel's own self-match is filtered from the output. With that push
+    * the AvailableNow result equals the batch left join bit-for-bit.
     *
     * Scale posture: state is keyed by user and bounded by the watermark ×
-    * interval band on both sides (without the time bound an outer join
-    * would buffer the full history); the only exchange is the user-keyed
+    * interval band on both sides; the only exchange is the user-keyed
     * state shuffle both sides share.
     */
-  def purchaseClickLeftJoin(events: DataFrame): DataFrame = {
-    val purchases = events
-      .where(col("event_type") === "purchase" || col("user_id") === -1L)
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("p_event_id"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = events
-      .where(col("event_type") === "click" || col("user_id") === -1L)
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_event_id"))
-      .withWatermark("c_ts", "1 hour")
-    purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-        col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"),
-      "left_outer")
-      .select(col("p_user").as("user_id"), col("p_event_id"),
-        col("c_event_id"), col("p_ts"), col("c_ts"))
-  }
+  def purchaseClickLeftJoin(events: DataFrame): DataFrame =
+    purchaseClick(events, "left_outer", sentinel = true)
 
-  /** S16 (round 20) — stream-stream FULL OUTER join: S15's machinery with
-    * null emission on BOTH sides. Matched pairs emit within the arriving
-    * micro-batch like S6; an unmatched PURCHASE emits with NULL click
-    * columns once the watermark proves no click can land in its ±30-minute
-    * band (S15's left leg); an unmatched CLICK — the side S15 never
-    * resolves — symmetrically sits in state until the watermark proves no
-    * purchase interval can still cover it, then emits with NULL purchase
-    * columns. The far-future sentinel satisfies BOTH side filters
-    * (user_id = −1), so one sentinel event pushes both watermarks past
-    * every real row's band and resolves both state stores; its self-match
-    * row is the only sentinel output and is filtered by the caller. With
-    * that push the AvailableNow result equals the batch full join
-    * bit-for-bit. user_id must coalesce across sides: an unmatched click's
-    * p_user is NULL.
+  /** S16 — stream-stream FULL OUTER join: S15 with null emission on BOTH
+    * sides. An unmatched PURCHASE emits with NULL click columns once the
+    * watermark proves no click can land in its ±30-minute band; an
+    * unmatched CLICK symmetrically sits in state until the watermark proves
+    * no purchase interval can still cover it, then emits with NULL purchase
+    * columns. One sentinel event (admitted through both side filters)
+    * pushes both watermarks past every real row's band; its self-match row
+    * is filtered by the caller. user_id coalesces across sides: an
+    * unmatched click's p_user is NULL.
     *
-    * Scale posture: identical to S15 — state keyed by user, bounded by
-    * watermark × interval band on both sides; one shared user-keyed state
+    * Scale posture: identical to S15 — one shared user-keyed state
     * shuffle, zero broadcasts (pinned in PlanAuditSpec on the batch form).
     */
-  def purchaseClickFullJoin(events: DataFrame): DataFrame = {
-    val purchases = events
-      .where(col("event_type") === "purchase" || col("user_id") === -1L)
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("p_event_id"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = events
-      .where(col("event_type") === "click" || col("user_id") === -1L)
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_event_id"))
-      .withWatermark("c_ts", "1 hour")
-    purchases.join(clicks,
+  def purchaseClickFullJoin(events: DataFrame): DataFrame =
+    purchaseClick(events, "full_outer", sentinel = true)
+
+  /** The S6/S15/S16 join: watermarked purchase and click sides joined by
+    * user within ±30 minutes. With `sentinel`, the user_id −1 event passes
+    * both side filters, so it can push both watermarks.
+    */
+  private def purchaseClick(events: DataFrame, joinType: String,
+      sentinel: Boolean): DataFrame = {
+    def side(eventType: String, p: String) = events
+      .where(if (sentinel) col("event_type") === eventType || col("user_id") === -1L
+        else col("event_type") === eventType)
+      .select(col("user_id").as(s"${p}_user"), col("ts").as(s"${p}_ts"),
+        col("event_id").as(s"${p}_event_id"))
+      .withWatermark(s"${p}_ts", "1 hour")
+    side("purchase", "p").join(side("click", "c"),
       col("p_user") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
         col("c_ts") <= col("p_ts") + expr("INTERVAL 30 MINUTES"),
-      "full_outer")
+      joinType)
       .select(coalesce(col("p_user"), col("c_user")).as("user_id"),
         col("p_event_id"), col("c_event_id"), col("p_ts"), col("c_ts"))
   }
@@ -195,7 +155,7 @@ object StreamOps {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("c_mktsegment"))
 
-  /** S12 (round 12) — stream-static ANTI join: drop events whose user sits
+  /** S12 — stream-static ANTI join: drop events whose user sits
     * in a static suppression index (here: high-balance customers — any
     * bounded "already seen / blocklisted" key set). The streaming twin of
     * `llm_dedup_incremental`: the index is the persisted artifact of a
@@ -210,8 +170,8 @@ object StreamOps {
       col("user_id") === col("c_custkey"), "left_anti")
       .select(col("event_id"), col("user_id"), col("event_type"))
 
-  /** S13 (round 13) — streaming CORPUS-INGEST dedup against the
-    * incremental index: the round-12 verdict's missing S-row. Where
+  /** S13 — streaming CORPUS-INGEST dedup against the incremental
+    * index. Where
     * `staticSuppress` checks a DIMENSION-scale blocklist (broadcast is the
     * right plan), this is the daily-crawl shape at ingest granularity —
     * each incoming record's payload is keyed by the SAME normalized-first-
@@ -250,11 +210,9 @@ object StreamOps {
 
   /** The per-event payload key shared by [[incrementalDedup]] (stream
     * side), [[incrementalIndex]] (persisted side), and — via
-    * [[EventKeyFields]] — the S13 DuckDB oracle (round-13 ADVICE: three
-    * hand-kept spellings of the same concat_ws list would silently
-    * diverge; a drifted field list makes every event report n_old=0 with
-    * no failure anywhere). Single-sourced here so stream, index, and
-    * oracle cannot key differently.
+    * [[EventKeyFields]] — the S13 DuckDB oracle. Single-sourced so stream,
+    * index and oracle cannot key differently: a drifted field list would
+    * make every event report n_old=0 with no failure anywhere.
     */
   private[graft] val EventKeyFields: Seq[String] =
     Seq("event_type", "user_id", "props")
@@ -343,8 +301,8 @@ object StreamOps {
         batch.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
       }
 
-  /** S14 — Count-Min sketch cells over the user-id stream (round 18,
-    * second session): the streaming twin of llm_freq_sketch, and the
+  /** S14 — Count-Min sketch cells over the user-id stream: the streaming
+    * twin of llm_freq_sketch, and the
     * canonical bounded-state streaming frequency estimator — the complete-
     * mode aggregation state is the d×w = 4×16 counter matrix REGARDLESS of
     * how many distinct users flow past (a per-user count would grow state

@@ -103,4 +103,15 @@ object TestEnv {
 /** Base class for graft test suites. */
 abstract class GraftSpec extends AnyFunSuite {
   def spark: SparkSession = TestEnv.spark
+
+  /** A child session without ConvertToLocalRelation: with it, a select
+    * over a local Seq is folded at plan time by an interpreted projection,
+    * and the generated code never runs.
+    */
+  def codegenSession(): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    s
+  }
 }

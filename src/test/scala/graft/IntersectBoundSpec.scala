@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import scala.util.Random
 
-import graft.functions.VectorOps
+import graft.functions.{SortedLongIntersectCount, VectorOps}
 
-/** Equivalence fuzz for the early-abandon intersect (round 22): under a
-  * downstream `jac >= tau` filter, SortedLongIntersectCountBounded must be
-  * indistinguishable from the exact SortedLongIntersectCount —
+/** Equivalence fuzz for the early-abandon intersect: under a downstream
+  * `jac >= tau` filter, the intersect at tau must be indistinguishable
+  * from the exact one (the same kernel at tau = 0) —
   *
   *   - a pair whose true jaccard is >= tau must return the EXACT count
   *     (the abandon bound is an upper bound on the true count, so it can
@@ -17,14 +20,21 @@ import graft.functions.VectorOps
   *     as long as the jac computed from c' also fails the filter
   *     (monotonicity: c'/(n+m-c') <= c/(n+m-c) < tau).
   *
-  * Both the codegen path (DataFrame select) and the interpreted path
-  * (nullSafeEval via the expression directly) are exercised, across sizes
-  * 0..~200 and overlap regimes clustered around the threshold.
+  * Both the generated route (DataFrame select) and the reflective route
+  * (the StaticInvoke replacement evaluated on literals) are exercised,
+  * across sizes 0..~200 and overlap regimes clustered around the threshold.
   */
 class IntersectBoundSpec extends GraftSpec {
   private def jac(inter: Long, n: Int, m: Int): Double =
     if (n + m - inter == 0) Double.NaN
     else inter.toDouble / (n + m - inter).toDouble
+
+  private def lit(a: Array[Long]) =
+    Literal(ArrayData.toArrayData(a), ArrayType(LongType, containsNull = false))
+
+  /** The reflective route: StaticInvoke's interpreted eval. */
+  private def evalCount(a: Array[Long], b: Array[Long], tau: Double): Long =
+    SortedLongIntersectCount(lit(a), lit(b), tau).replacement.eval(null).asInstanceOf[Long]
 
   test("bounded intersect is exact above tau and filter-equivalent below") {
     val rnd = new Random(0xB0DE22)
@@ -78,42 +88,35 @@ class IntersectBoundSpec extends GraftSpec {
   }
 
   test("interpreted path agrees with codegen semantics") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, LongType}
     val rnd = new Random(0x1E7B0DE)
-    def lit(a: Array[Long]) =
-      Literal(ArrayData.toArrayData(a), ArrayType(LongType, containsNull = false))
-    for (_ <- 0 until 300) {
+    val cases = (0 until 300).map { _ =>
       val k = rnd.nextInt(40)
       val core = Seq.fill(k)(rnd.nextLong(100000L)).distinct
       val a = (core ++ Seq.fill(rnd.nextInt(15))(100000L + rnd.nextLong(100000L)).distinct).sorted.toArray
       val b = (core ++ Seq.fill(rnd.nextInt(15))(200000L + rnd.nextLong(100000L)).distinct).sorted.toArray
-      val tau = Seq(0.5, 0.8, 0.9)(rnd.nextInt(3))
-      val exact = graft.functions.SortedLongIntersectCount(lit(a), lit(b))
-        .eval(null).asInstanceOf[Long]
-      val bounded = graft.functions
-        .SortedLongIntersectCountBounded(lit(a), lit(b), tau)
-        .eval(null).asInstanceOf[Long]
-      val jE = jac(exact, a.length, b.length)
-      if (!jE.isNaN && jE >= tau) assert(bounded == exact)
-      else {
-        val jB = jac(bounded, a.length, b.length)
-        assert(bounded <= exact && (jB.isNaN || jB < tau))
+      (a, b, Seq(0.5, 0.8, 0.9)(rnd.nextInt(3)))
+    }
+    for ((tau, group) <- cases.groupBy(_._3)) {
+      val rows = codegen.createDataFrame(group.map { case (a, b, _) => (a, b) }).toDF("a", "b")
+        .select(VectorOps.sortedIntersectCount(col("a"), col("b")),
+          VectorOps.sortedIntersectCountBounded(col("a"), col("b"), tau))
+        .collect()
+      for (((a, b, _), r) <- group.zip(rows)) {
+        val exact = evalCount(a, b, 0.0)
+        val bounded = evalCount(a, b, tau)
+        assert((r.getLong(0), r.getLong(1)) == ((exact, bounded)),
+          s"tau=$tau n=${a.length} m=${b.length}: generated vs reflective")
+        val jE = jac(exact, a.length, b.length)
+        if (!jE.isNaN && jE >= tau) assert(bounded == exact)
+        else {
+          val jB = jac(bounded, a.length, b.length)
+          assert(bounded <= exact && (jB.isNaN || jB < tau))
+        }
       }
     }
   }
 
-  /** A child session without ConvertToLocalRelation: with it, a select
-    * over a local Seq is folded at plan time by an interpreted projection,
-    * and the generated code never runs.
-    */
-  private lazy val codegen = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-    s
-  }
+  private lazy val codegen = codegenSession()
 
   /** Every (n, m, c) with n, m <= 60 whose jac is exactly tau in the
     * filter's double arithmetic, built so the walk meets all mismatches
@@ -143,15 +146,8 @@ class IntersectBoundSpec extends GraftSpec {
   }
 
   test("pairs at exactly jac == tau get the exact count (interpreted)") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    def lit(a: Array[Long]) =
-      Literal(ArrayData.toArrayData(a), ArrayType(LongType, containsNull = false))
     for ((tau, a, b) <- onTau) {
-      val bounded = graft.functions
-        .SortedLongIntersectCountBounded(lit(a), lit(b), tau)
-        .eval(null).asInstanceOf[Long]
+      val bounded = evalCount(a, b, tau)
       val shared = a.intersect(b).length.toLong
       assert(bounded == shared, s"tau=$tau n=${a.length} m=${b.length}: $bounded vs $shared")
     }

@@ -99,37 +99,41 @@ class OpPropertySpec extends GraftSpec {
   }
 
   test("DotProduct codegen agrees with interpreted eval bit-for-bit") {
-    val s = spark
+    // Generated route: whole-stage codegen over a DataFrame. Reflective
+    // route: the StaticInvoke replacement evaluated on literals. Both
+    // kernels are covered: dense (non-null element type) and null-element.
+    val s = codegenSession()
     import s.implicits._
     val vecs = (1 to 100).map { _ =>
       ((0 until 64).map(_ => rnd.nextDouble() * 2 - 1).toArray,
         (0 until 64).map(_ => rnd.nextDouble() * 2 - 1).toArray)
     }
-    // Codegen path: whole-stage codegen over a DataFrame.
-    val fromCodegen = vecs.toDF("a", "b")
-      .select(VectorOps.dot(col("a"), col("b"))).collect().map(_.getDouble(0))
-    // Interpreted path: direct expression eval on literals.
-    val fromEval = vecs.map { case (a, b) =>
-      DotProduct(
-        Literal.create(ArrayData.toArrayData(a), ArrayType(DoubleType)),
-        Literal.create(ArrayData.toArrayData(b), ArrayType(DoubleType)))
-        .eval(null).asInstanceOf[Double]
-    }
-    fromCodegen.zip(fromEval).foreach { case (c, e) =>
-      assert(java.lang.Double.doubleToLongBits(c) == java.lang.Double.doubleToLongBits(e))
+    val df = vecs.toDF("a", "b")
+    val nullableElems = "array<double>"
+    val fromCodegen = df.select(VectorOps.dot(col("a"), col("b")),
+      VectorOps.dot(col("a").cast(nullableElems), col("b").cast(nullableElems)))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    for (containsNull <- Seq(false, true)) {
+      val fromEval = vecs.map { case (a, b) =>
+        DotProduct(
+          Literal.create(ArrayData.toArrayData(a), ArrayType(DoubleType, containsNull)),
+          Literal.create(ArrayData.toArrayData(b), ArrayType(DoubleType, containsNull)))
+          .replacement.eval(null).asInstanceOf[Double]
+      }
+      fromCodegen.zip(fromEval).foreach { case ((dense, nullable), e) =>
+        val c = if (containsNull) nullable else dense
+        assert(java.lang.Double.doubleToLongBits(c) == java.lang.Double.doubleToLongBits(e))
+      }
     }
   }
 
   test("DotProduct compiles when only ELEMENTS are nullable (r9 Janino fallback)") {
-    // The round-9 test logs carried a Janino "Expression "isNull_N" is not
-    // an rvalue" → silent per-row interpreter fallback. Shape: a
-    // NON-nullable array column with NULLABLE elements — nullability was
-    // left.nullable || right.nullable = false, so nullSafeCodeGen never
-    // declared ev.isNull while the element-null check in doGenCode still
-    // assigned it. The nullable override in DotProduct closes it; this pin
-    // runs the exact shape (including the hashAgg form that surfaced it)
-    // with fallback=false so any regression is a hard failure, and checks
-    // the null-element semantics the nullability now advertises.
+    // Shape: a NON-nullable array column with NULLABLE elements. A null
+    // element nulls the dot, so the expression is nullable although neither
+    // input is; the generated code must declare and assign the null flag.
+    // fallback=false makes a generated-code compile error a hard failure
+    // instead of a silent per-row interpreter fallback, and the hashAgg
+    // form covers the aggregate shape as well.
     val s = spark.newSession()
     s.conf.set("spark.sql.codegen.fallback", "false")
     import s.implicits._
