@@ -9,9 +9,10 @@ package graft
   *     untimed, on a warm-up dir (see [[WarmDir]]);
   *   - each query runs once, in declaration order, through
   *     [[Harness.timedCount]];
-  *   - a query whose first sample failed or took ≥ `RepeatFloorSec` runs
-  *     `Repeats - 1` more times, as whole-set passes, so a host window
-  *     lasting minutes cannot hit all of one query's samples;
+  *   - the first declared row, and any query whose first sample failed or
+  *     took ≥ `RepeatFloorSec`, runs `Repeats - 1` more times (see
+  *     [[repeated]]), as whole-set passes, so a host window lasting minutes
+  *     cannot hit all of one query's samples;
   *   - when that first sample failed or took ≥ `BracketFloorSec`, each
   *     repeat is bracketed by a memory-bandwidth probe just before and just
   *     after its timed region, and the row gets an admissibility verdict;
@@ -49,6 +50,19 @@ object Bench {
       if (bw < 0.0 && bwAfter < 0.0) None
       else Some(math.max(bw, bwAfter) >= healthyMembw)
   }
+
+  /** A failed first sample counts as slow. */
+  private def slow(first: Sample, floorSec: Double): Boolean =
+    first.sec < 0.0 || first.sec >= floorSec
+
+  /** Whether the row at declaration `index` gets `Repeats - 1` more
+    * samples. The first declared row always does: its first sample is the
+    * run's first timed touch of the corpus, which stays cold even after the
+    * warm-up canary, so a lone sample would report that cold touch. Any
+    * other row is repeated when its first sample is slow.
+    */
+  private[graft] def repeated(index: Int, first: Sample): Boolean =
+    index == 0 || slow(first, RepeatFloorSec)
 
   /** Median of the successful (non-negative) values; -1.0 when none. */
   def median(xs: Seq[Double]): Double = {
@@ -177,12 +191,11 @@ object Bench {
     }.getOrElse("null")
     val probeBefore = probe()
     // Warm-up canaries: the first declared row would otherwise absorb the
-    // JVM's first-query warm-up (classloading, codegen, JIT) into a first
-    // sample that is never repeated when it lands under `RepeatFloorSec`,
-    // and the first streaming row one-time streaming warm-up (state-store
-    // init, planner classloading). One untimed run of each pays it — only
-    // on a warm-up dir distinct from the timed one, since a run on the
-    // timed dir would leave that row's caches warm. The decisions are
+    // JVM's first-query warm-up (classloading, codegen, JIT) into its first
+    // sample, and the first streaming row one-time streaming warm-up
+    // (state-store init, planner classloading). One untimed run of each
+    // pays it — only on a warm-up dir distinct from the timed one, since a
+    // run on the timed dir would leave that row's caches warm. The decisions are
     // recorded in the sidecar (`first_canary`, `stream_canary`).
     val (warmDir, warmDistinct) = WarmDir.resolve(sfDir)
     def warm(canary: Option[Q]): Boolean = warmDistinct && canary.exists { q =>
@@ -194,11 +207,9 @@ object Bench {
     clearState()
     // Declaration order keeps JVM warm-up on the same first query every run.
     val firsts = toRun.map(q => q -> time(q, bracket = false))
-    // A failed first sample counts as slow: its row is repeated and bracketed.
-    def slow(first: Sample, floorSec: Double) = first.sec < 0.0 || first.sec >= floorSec
     val extra: Map[String, Seq[Sample]] =
-      (1 until Repeats).flatMap(_ => firsts.collect {
-        case (q, first) if slow(first, RepeatFloorSec) =>
+      (1 until Repeats).flatMap(_ => firsts.zipWithIndex.collect {
+        case ((q, first), i) if repeated(i, first) =>
           q.name -> time(q, bracket = slow(first, BracketFloorSec))
       }).groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val samples = firsts.map { case (q, first) =>

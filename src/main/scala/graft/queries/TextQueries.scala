@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -17,10 +17,14 @@ import graft.{Q, Tables}
   *   - SimHash uses bits 0..59 — DuckDB `1::BIGINT << 63` overflows, so a
   *     60-bit fingerprint keeps the shift domain safe in both engines;
   *   - every sum that could hit DuckDB's HUGEINT promotion is CAST to
-  *     BIGINT on both sides (R2/R3);
+  *     BIGINT on both sides;
   *   - token lists here are POSITIONAL (duplicates kept) where the
   *     operator is frequency- or order-sensitive (SimHash weights,
-  *     shingles), unlike the set-based `toks` used by the Jaccard rows.
+  *     shingles), unlike the set-based `toks` used by the Jaccard rows;
+  *   - a stage that two rows share (3-gram shingles, the contamination
+  *     sides, BM25 term stats, the PII chain, repetition fractions, image
+  *     features, the BPE pair histogram) has one Spark builder and one
+  *     DuckDB spelling below, so the oracle pins one definition.
   */
 object TextQueries {
 
@@ -28,7 +32,32 @@ object TextQueries {
   private def toksAll(text: Column): Column =
     filter(split(text, " "), t => t =!= "")
 
-  private val toksAllDuck = "list_filter(string_split(text, ' '), t -> t <> '')"
+  /** The DuckDB spelling of [[toksAll]] over the column `c`. */
+  private def toksAllDuckOn(c: String) = s"list_filter(string_split($c, ' '), t -> t <> '')"
+
+  private val toksAllDuck = toksAllDuckOn("text")
+
+  /** Per-document distinct 3-token shingles: `docs(doc_id, text)`, already
+    * spread by the caller, becomes `(doc_id, as)`; docs under 3 tokens drop.
+    * `wrap` post-processes the shingle array (hashing, explode).
+    */
+  private def shingles(docs: DataFrame, as: String,
+      wrap: Column => Column = identity): DataFrame =
+    docs.select(col("doc_id"), toksAll(col("text")).as("toks"))
+      .where(size(col("toks")) >= 3)
+      .select(col("doc_id"), wrap(array_distinct(transform(
+        expr("sequence(1, size(toks) - 2)"),
+        i => array_join(slice(col("toks"), i, lit(3)), " ")))).as(as))
+
+  /** The DuckDB spelling of [[shingles]]: a query over the relation `docs`
+    * (doc_id, text) yielding (doc_id, `as`).
+    */
+  private def shinglesSql(docs: String, as: String): String = s"""
+          SELECT doc_id,
+                 list_distinct(list_transform(range(1, len(toks) - 1),
+                   i -> array_to_string(toks[i:i+2], ' '))) AS $as
+          FROM (SELECT doc_id, $toksAllDuck AS toks FROM $docs)
+          WHERE len(toks) >= 3"""
 
   /** Corpus-document-frequency cap for llm_contamination_capped: a gram
     * present in more than this many corpus documents is treated as
@@ -59,14 +88,17 @@ object TextQueries {
     * docs, trivially broadcastable).
     */
   // private[graft]: OpPropertySpec's naive reference reimplementation
-  // interpolates the SAME constant (round-12 ADVICE — a hardcoded copy
-  // there would silently desynchronize the executable spec from the
-  // declared query if the block length were retuned).
+  // interpolates the SAME constant: a hardcoded copy there would
+  // silently desynchronize the executable spec from the declared query
+  // if the block length were retuned.
   private[graft] val PackBlockLen = 32L
   private val PackBucketWidth = 32L
 
   /** llm_tfidf_topk literal: keywords kept per document. */
   private val TfidfTopK = 3
+
+  /** The query terms of llm_bm25_search and llm_hybrid_rrf. */
+  private val Bm25Terms = Seq("dup", "vector", "batch")
 
   /** Bigram-LM literals (interpolated on both engines, DfCap precedent).
     * TransRareP: a Laplace-smoothed transition probability below this is
@@ -80,22 +112,20 @@ object TextQueries {
   private val TransRareP = 0.025
   private val RareFracFlag = 0.10
 
-  /** Shared bigram-LM machinery for llm_bigram_lm / llm_bigram_score
-    * (round 18; the hierCellsSql discipline — one definition so the
-    * smoothing cannot fork between the train and apply rows). Returns
-    * (per-doc transitions, smoothed LM table). V is countDistinct(w2)
-    * over the REDUCED c12 table — identical to counting over the raw
-    * transitions (c12 has one row per distinct (w1, w2)) but saves a
-    * full corpus scan + explode (round-18 review). NULL/token-poor docs
-    * drop consistently in both engines: Spark's size(toks) is -1 for
+  /** Shared bigram-LM machinery for llm_bigram_lm / llm_bigram_score (one
+    * definition, so the smoothing cannot fork between the train and apply
+    * rows). Returns (per-doc transitions, smoothed LM table). V is
+    * countDistinct(w2) over the REDUCED c12 table — identical to counting
+    * over the raw transitions (c12 has one row per distinct (w1, w2)) but
+    * saves a full corpus scan + explode. NULL/token-poor docs drop
+    * consistently in both engines: Spark's size(toks) is -1 for
     * NULL and DuckDB's len(NULL) is NULL — both fail the >= 2 guard.
     */
-  private def bigramLm(s: org.apache.spark.sql.SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // spread (round 22): the tokenize + transition explode ran as ONE
-    // ~420 ms task per consuming stage on the single-row-group fixture
-    // scan (profiled; r21 A/B'd this site at the then-32-partition spread
-    // and rightly reverted — the size-derived width is where it pays).
+  private def bigramLm(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    // spread (profiled): without it the tokenize + transition explode ran
+    // as ONE ~420 ms task per consuming stage on the single-row-group
+    // fixture scan; a fixed 32-partition spread here measured a loss, the
+    // size-derived width is where it pays.
     val tr = Tables.spread(s,
         Tables.documents(s, d).select(col("doc_id"), col("text")),
         col("doc_id"))
@@ -163,27 +193,19 @@ object TextQueries {
     * [[RepGraph.chunks]] of identical shingle sets (`sids`) and the
     * exact-verified ORDERED rep pairs (a_rep, b_rep, cont) at cont ≥ 0.5.
     */
-  private[graft] def containmentRepGraph(
-      s: org.apache.spark.sql.SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // spread (round 21): single-row-group fixture file — shingling +
-    // hashing otherwise run as one task up to the chunks exchange
-    // (Tables.spread doc).
-    val t = Tables.spread(s,
+  private[graft] def containmentRepGraph(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    // spread: on a single-row-group file, shingling and hashing would run
+    // as one task up to the chunks exchange (Tables.spread doc).
+    val t = shingles(Tables.spread(s,
         Tables.documents(s, d).select(col("doc_id"), col("text")),
-        col("doc_id"), Tables.SpreadTargetBytesHeavy)
-      .select(col("doc_id"), toksAll(col("text")).as("toks"))
-      .where(size(col("toks")) >= 3)
-      .select(col("doc_id"),
-        sort_array(transform(array_distinct(
-          expr("transform(sequence(1, size(toks) - 2), " +
-            "i -> array_join(slice(toks, i, 3), ' '))")),
-          sh => xxhash64(sh))).as("sids"))
+        col("doc_id"), Tables.SpreadTargetBytesHeavy),
+      "sids", sh => sort_array(transform(sh, x => xxhash64(x))))
     val chunks = RepGraph.chunks(t, "sids", "doc_id")
     val reps = RepGraph.reps(chunks).select(col("rep_id"), col("sids"))
     val df = reps.select(explode(col("sids")).as("sid"))
       .groupBy(col("sid")).agg(count(lit(1)).as("df"))
-    // Persisted since round 18: the positional filter below consumes the
+    // Persisted: the positional filter below consumes the
     // rarity-ranked lists from BOTH join sides (prefix slice + full
     // index), and without the persist each side re-runs the df join +
     // collect_list aggregation. Rep-scale rows (one per rep), released by
@@ -200,11 +222,11 @@ object TextQueries {
     // fixture; on real corpora it removes the long-doc→short-doc probe
     // direction wholesale.
     //
-    // POSITIONAL filter (round 18, r16 verdict #2 — the PPJoin prune
-    // proper, exactness-preserving like the length prune): both explodes
-    // carry each shingle's 1-based POSITION in the record's global
-    // rarity order ((df, sid) ascending — the same total order on both
-    // sides, which is what makes the bound sound). For a candidate pair,
+    // POSITIONAL filter (the PPJoin prune proper, exactness-preserving
+    // like the length prune): both explodes carry each shingle's 1-based
+    // POSITION in the record's global rarity order ((df, sid) ascending —
+    // the same total order on both sides, which is what makes the bound
+    // sound). For a candidate pair,
     // the minimal matched a_pos is the globally-FIRST common shingle:
     // a's prefix is downward-closed in that order, so if the first
     // common shingle sat beyond the prefix, NO prefix entry could match
@@ -259,18 +281,112 @@ object TextQueries {
     (chunks, verified)
   }
 
+  /** llm_contamination(_capped)'s shared sides over per-doc distinct 3-gram
+    * shingles: (bench, corpus), the benchmark slice (doc_id % 20 = 0) as
+    * (bench_id, g) and the rest as (doc_id, g), one row per distinct gram.
+    */
+  private def contaminationSides(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    // spread: the gram explode would otherwise run as one task on a
+    // 1-partition scan (Tables.spread doc).
+    val docs = shingles(Tables.spread(s, Tables.documents(s, d)
+        .select(col("doc_id"), col("text")), col("doc_id"),
+      Tables.SpreadTargetBytesHeavy), "grams")
+    // explode_OUTER, deliberately: plain explode lets Catalyst's
+    // InferFiltersFromGenerate push an implicit `size(grams) > 0`
+    // below this projection, substituting the whole (interpreted,
+    // triple-nested) gram pipeline into the Filter — every doc then
+    // pays the gram computation TWICE (measured 3.1 s → 1.0 s at
+    // sf0.1). Outer is semantics-neutral here: `size(toks) >= 3`
+    // guarantees non-empty grams, and a null `g` could never match
+    // the equi-join anyway.
+    val bench = docs.where(col("doc_id") % 20 === 0)
+      .select(col("doc_id").as("bench_id"), explode_outer(col("grams")).as("g"))
+    val corpus = docs.where(col("doc_id") % 20 =!= 0)
+      .select(col("doc_id"), explode_outer(col("grams")).as("g"))
+    (bench, corpus)
+  }
+
+  /** The contamination answer over gram matches (doc_id, bench_id, g):
+    * pairs sharing at least 3 distinct grams. Grams are per-doc distinct
+    * on both sides, so the match count is the shared distinct gram count.
+    */
+  private def sharedGrams(matches: DataFrame): DataFrame =
+    matches.groupBy(col("doc_id"), col("bench_id"))
+      .agg(count(lit(1)).cast("bigint").as("shared_grams"))
+      .where(col("shared_grams") >= 3)
+      .orderBy(col("doc_id"), col("bench_id"))
+
+  /** The DuckDB spelling of [[contaminationSides]]: the docs → bench/corpus
+    * CTEs both contamination oracles open with.
+    */
+  private def contaminationSidesSql: String = s"""docs AS (${shinglesSql("documents", "grams")}),
+        bench AS (
+          SELECT doc_id AS bench_id, unnest(grams) AS g
+          FROM docs WHERE doc_id % 20 = 0),
+        corpus AS (
+          SELECT doc_id, unnest(grams) AS g
+          FROM docs WHERE doc_id % 20 <> 0)"""
+
+  private def sharedGramsSql(matches: String): String = s"""
+        SELECT doc_id, bench_id, CAST(count(*) AS BIGINT) AS shared_grams
+        FROM $matches
+        GROUP BY doc_id, bench_id
+        HAVING count(*) >= 3
+        ORDER BY doc_id, bench_id"""
+
+  /** The DuckDB definition of directed 3-gram containment ≥ 0.5 over the
+    * relation `docs`: the bounded probe row and the full-corpus
+    * prefix-filter row answer to the same oracle form.
+    */
+  private def containmentSql(docs: String): String = s"""
+        WITH t AS (${shinglesSql(docs, "sh")}),
+        p AS (
+          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                   / CAST(len(a.sh) AS DOUBLE) AS cont
+          FROM t a JOIN t b ON a.doc_id <> b.doc_id)
+        SELECT a_id, b_id, cont FROM p
+        WHERE cont >= 0.5
+        ORDER BY a_id, b_id"""
+
+  /** Share of the most frequent element of `arr` (llm_repetition,
+    * llm_pipeline_curate): O(distinct × n) per doc, no explode.
+    */
+  private def topFrac(arr: Column): Column =
+    array_max(transform(array_distinct(arr),
+      u => size(filter(arr, x => x === u)))).cast("double") / size(arr)
+
+  /** Adjacent-token bigrams of `toks`; callers guard size(toks) >= 2, as
+    * Spark's sequence(1, 0) steps DOWN through index 0.
+    */
+  private def bigrams: Column =
+    transform(expr("sequence(1, size(toks) - 1)"),
+      i => concat(element_at(col("toks"), i), lit(" "),
+        element_at(col("toks"), i + lit(1))))
+
+  /** The DuckDB spellings of [[topFrac]] (over the list expression `arr`)
+    * and [[bigrams]].
+    */
+  private def topFracSql(arr: String): String =
+    s"""CAST(list_max(list_transform(list_distinct($arr),
+                   u -> len(list_filter($arr, x -> x = u)))) AS DOUBLE)
+                   / len($arr)"""
+
+  private val bigramsSql = "list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])"
+
   /** PII patterns for llm_pii_scrub, in the Java↔RE2-shared regex subset
     * (both engines see the identical runtime string — the Spark side goes
     * through the Column API, so no SQL-literal double-escaping). The phone
     * pattern's optional country code lives in a group so a bare
     * `555-123-4567` still matches; no leading \b because a boundary before
     * an optional `+` fails on ` +1 …` (space→`+` is not a word boundary).
-    * Instead the phone pattern leads with a `(^|[^0-9])` guard (round-10
-    * ADVICE: with only the trailing \b, any ≥10-digit run — order ids,
-    * account numbers — got a 10-digit suffix-aligned substring redacted as
-    * [PHONE]); the guard character is restored by the replacement's
-    * backreference (`$1` in Java, `\1` in RE2 — the one engine-specific
-    * piece, so it lives at the two call sites, not in the shared pattern).
+    * Instead the phone pattern leads with a `(^|[^0-9])` guard (with only
+    * the trailing \b, any ≥10-digit run — order ids, account numbers —
+    * would get a 10-digit suffix-aligned substring redacted as a phone);
+    * the guard character is restored by the replacement's backreference
+    * (`$1` in Java, `\1` in RE2 — the one engine-specific piece, so it
+    * lives in the two chain builders, not in the shared pattern).
     * Counts use group 0 on both engines, so the guard char inflates
     * neither. Both engines scan leftmost-first, so which start wins on
     * overlapping candidates is identical.
@@ -281,6 +397,50 @@ object TextQueries {
   private val PhoneP =
     "(^|[^0-9])((\\+?\\d{1,2}[ .-])?\\(?\\d{3}\\)?[ .-]?\\d{3}[ .-]?\\d{4}\\b)"
 
+  /** The ordered scrub steps before the phone step: (input text column,
+    * pattern, placeholder, count column, output text column). Each count
+    * is taken on the text the previous steps already redacted.
+    */
+  private val PiiSteps = Seq(
+    ("text", EmailP, "[EMAIL]", "n_email", "t1"),
+    ("t1", IpP, "[IP]", "n_ip", "t2"),
+    ("t2", SsnP, "[SSN]", "n_ssn", "t3"))
+
+  /** The PII chain over `df.text` (llm_pii_scrub, llm_pipeline_curate):
+    * adds n_email, t1, n_ip, t2, n_ssn, t3 and n_phone. [[scrubbed]] is the
+    * fully redacted text.
+    */
+  private def piiScrub(df: DataFrame): DataFrame = {
+    def count(text: String, p: String): Column =
+      size(regexp_extract_all(col(text), lit(p), lit(0))).cast("bigint")
+    PiiSteps.foldLeft(df) { case (acc, (in, p, tag, n, out)) =>
+      acc.withColumn(n, count(in, p)).withColumn(out, regexp_replace(col(in), p, tag))
+    }.withColumn("n_phone", count("t3", PhoneP))
+  }
+
+  /** [[piiScrub]]'s t3 with phones redacted: `$1` restores the non-digit
+    * guard character (the DuckDB spelling's `\1`).
+    */
+  private def scrubbed: Column = regexp_replace(col("t3"), PhoneP, "$1[PHONE]")
+
+  /** The DuckDB spelling of [[piiScrub]] over the relation `src` (which has
+    * a `text` column): CTEs p1…p3 for the steps, then p4 with n_phone and
+    * `scrubbed`. DuckDB's regexp_replace needs the 'g' flag to be global.
+    */
+  private def piiScrubSql(src: String): String = {
+    val steps = PiiSteps.zipWithIndex.map { case ((in, p, tag, n, out), i) =>
+      s"""p${i + 1} AS (
+          SELECT *, CAST(len(regexp_extract_all($in, '$p')) AS BIGINT) AS $n,
+                 regexp_replace($in, '$p', '$tag', 'g') AS $out
+          FROM ${if (i == 0) src else s"p$i"})"""
+    }
+    steps.mkString(",\n        ") + s""",
+        p4 AS (
+          SELECT *, CAST(len(regexp_extract_all(t3, '$PhoneP')) AS BIGINT) AS n_phone,
+                 regexp_replace(t3, '$PhoneP', '\\1[PHONE]', 'g') AS scrubbed
+          FROM p3)"""
+  }
+
   /** Constructed-container headers for the REAL-decode rows
     * (llm_image_decode / llm_audio_decode): the fixture corpus carries no
     * media payloads, so each row BUILDS a valid container in-query from
@@ -289,7 +449,7 @@ object TextQueries {
     * uncompressed, so the JDK decode is byte-transparent and DuckDB can
     * compute the SAME features arithmetically from the hex digest with no
     * codec — the only way a real ImageIO/javax.sound decode can face a
-    * driver-grade oracle in this sandbox (round-11 verdict #3).
+    * hash-exact DuckDB oracle.
     */
   private val BmpHeader: Array[Byte] = {
     val o = new java.io.ByteArrayOutputStream()
@@ -312,6 +472,16 @@ object TextQueries {
     le32(8000); le32(16000); le16(2); le16(16)              // 8kHz, 16-bit
     dd.writeBytes("data"); le32(8)                          // 4 frames
     o.toByteArray
+  }
+
+  /** The image rows' output, (doc_id, img_w, img_h, aspect, mean_r/g/b,
+    * l_min, l_max), from decoding the BMP `bmp` over `df`.
+    */
+  private def imageFeatures(df: DataFrame, bmp: Column): DataFrame = {
+    val out = Seq(0 -> "img_w", 1 -> "img_h", 2 -> "aspect", 3 -> "mean_r",
+      4 -> "mean_g", 5 -> "mean_b", 8 -> "l_min", 9 -> "l_max")
+    df.select(col("doc_id"), graft.operators.Multimodal.imageFeatures(bmp).as("f"))
+      .select(col("doc_id") +: out.map { case (i, n) => col("f").getItem(i).as(n) }: _*)
   }
 
   /** DuckDB: byte j (0-based) of the sha256 hex string `h`, as INTEGER. */
@@ -398,16 +568,12 @@ object TextQueries {
     Q(
       "llm_neardup_shingle",
       (s, d) => {
-        // spread (round 22, profiled): the pair join + shingle intersect
-        // ran as one 700 ms task (the probe side scans as 1 partition).
-        val t = Tables.spread(s, Tables.documents(s, d)
+        // spread (profiled): without it the pair join and shingle
+        // intersect ran as one 700 ms task (the probe side scans as 1
+        // partition).
+        val t = shingles(Tables.spread(s, Tables.documents(s, d)
             .where(col("doc_id") < 150)
-            .select(col("doc_id"), col("text")), col("doc_id"))
-          .select(col("doc_id"), toksAll(col("text")).as("toks"))
-          .where(size(col("toks")) >= 3)
-          .select(col("doc_id"),
-            array_distinct(transform(expr("sequence(1, size(toks) - 2)"),
-              i => array_join(slice(col("toks"), i, lit(3)), " "))).as("sh"))
+            .select(col("doc_id"), col("text")), col("doc_id")), "sh")
         val a = t.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
         val b = t.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
         val inter = size(array_intersect(col("a_sh"), col("b_sh")))
@@ -419,13 +585,7 @@ object TextQueries {
           .orderBy(col("a_id"), col("b_id"))
       },
       oracle = Some(s"""
-        WITH t AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(range(1, len(toks) - 1),
-                   i -> array_to_string(toks[i:i+2], ' '))) AS sh
-          FROM (SELECT doc_id, $toksAllDuck AS toks
-                FROM documents WHERE doc_id < 150)
-          WHERE len(toks) >= 3),
+        WITH t AS (${shinglesSql("documents WHERE doc_id < 150", "sh")}),
         p AS (
           SELECT a.doc_id AS a_id, b.doc_id AS b_id,
                  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -436,7 +596,7 @@ object TextQueries {
         WHERE jac >= 0.3
         ORDER BY a_id, b_id""")),
 
-    // H: ASYMMETRIC containment near-dup (round 14) — the quote/subset
+    // H: ASYMMETRIC containment near-dup — the quote/subset
     // duplication detector the symmetric rows cannot be: C(a→b) =
     // |sh(a) ∩ sh(b)| / |sh(a)| over the same 3-gram shingles as
     // llm_neardup_shingle. When a short doc is quoted inside a much
@@ -452,18 +612,13 @@ object TextQueries {
     Q(
       "llm_neardup_containment",
       (s, d) => {
-        // spread (round 21): parallelize the tokenize/gram map work over
-        // the 1-partition fixture scan (Tables.spread doc; no-op at
-        // production scan widths).
-        val t = Tables.spread(s, Tables.documents(s, d)
+        // spread: parallelizes the tokenize/gram map work over a
+        // 1-partition scan (Tables.spread doc; a no-op at production scan
+        // widths).
+        val t = shingles(Tables.spread(s, Tables.documents(s, d)
             .where(col("doc_id") < 300)
             .select(col("doc_id"), col("text")), col("doc_id"),
-          Tables.SpreadTargetBytesHeavy)
-          .select(col("doc_id"), toksAll(col("text")).as("toks"))
-          .where(size(col("toks")) >= 3)
-          .select(col("doc_id"),
-            array_distinct(transform(expr("sequence(1, size(toks) - 2)"),
-              i => array_join(slice(col("toks"), i, lit(3)), " "))).as("sh"))
+          Tables.SpreadTargetBytesHeavy), "sh")
         val a = t.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
         val b = t.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
         a.join(b, col("a_id") =!= col("b_id"))
@@ -473,29 +628,14 @@ object TextQueries {
           .where(col("cont") >= 0.5)
           .orderBy(col("a_id"), col("b_id"))
       },
-      oracle = Some(s"""
-        WITH t AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(range(1, len(toks) - 1),
-                   i -> array_to_string(toks[i:i+2], ' '))) AS sh
-          FROM (SELECT doc_id, $toksAllDuck AS toks
-                FROM documents WHERE doc_id < 300)
-          WHERE len(toks) >= 3),
-        p AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                   / CAST(len(a.sh) AS DOUBLE) AS cont
-          FROM t a JOIN t b ON a.doc_id <> b.doc_id)
-        SELECT a_id, b_id, cont FROM p
-        WHERE cont >= 0.5
-        ORDER BY a_id, b_id""")),
+      oracle = Some(containmentSql("documents WHERE doc_id < 300"))),
 
-    // H (scale form, round 15 — r14 verdict #5): FULL-CORPUS directional
+    // H (scale form): FULL-CORPUS directional
     // containment — llm_neardup_containment's exact contract (3-gram
     // shingles, C(a→b) = |sh(a)∩sh(b)| / |sh(a)| ≥ 0.5, ordered pairs)
     // with a linear-shaped candidate generator instead of the bounded
-    // all-pairs probe. The r14 verdict suggested reusing the MINHASH
-    // BANDING for candidates; rejected on correctness grounds: banding
+    // all-pairs probe. MINHASH BANDING for candidates is rejected on
+    // correctness grounds: banding
     // approximates JACCARD, and the pairs this operator exists for (a
     // short doc quoted inside a much longer one) have high containment
     // with arbitrarily LOW Jaccard — |a∩b|/|a∪b| ≈ |a|/|b| — so a
@@ -521,14 +661,14 @@ object TextQueries {
     //      two-column distinct (hot shingles stay out of rare-first
     //      prefixes, the standard PPJoin skew control);
     //   5. verify once per ORDERED rep pair on sorted 64-bit shingle ids
-    //      (sortedIntersectCount; reps joins unhinted = shuffle, the
-    //      round-9 corpus-bound-broadcast rule);
+    //      (sortedIntersectCount; reps joins unhinted = shuffle: a
+    //      corpus-bound side never broadcasts);
     //   6. member expansion (RepGraph.memberPairs, ordered): cross pairs
     //      keep their (a→b) direction, intra pairs of multi-member groups
     //      emit both directions at cont = 1.0 (identical sets, |a∩a|/|a|
     //      exact).
     //
-    // Measured (round 15, warmed medians, healthy window): sf0.1 6.8 s
+    // Measured (warmed medians, healthy window): sf0.1 6.8 s
     // (4992 reps, 27.2k distinct shingles, ~919k distinct candidates from
     // the prefix join, 482 verified rep pairs); 10× staging 13.1 s —
     // 1.93× wall at 10× data, because the staged clones collapse in the
@@ -548,22 +688,7 @@ object TextQueries {
             intra = lit(1.0), tau = 0.5)
           .orderBy(col("a_id"), col("b_id"))
       },
-      oracle = Some(s"""
-        WITH t AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(range(1, len(toks) - 1),
-                   i -> array_to_string(toks[i:i+2], ' '))) AS sh
-          FROM (SELECT doc_id, $toksAllDuck AS toks
-                FROM documents)
-          WHERE len(toks) >= 3),
-        p AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                   / CAST(len(a.sh) AS DOUBLE) AS cont
-          FROM t a JOIN t b ON a.doc_id <> b.doc_id)
-        SELECT a_id, b_id, cont FROM p
-        WHERE cont >= 0.5
-        ORDER BY a_id, b_id""")),
+      oracle = Some(containmentSql("documents"))),
 
     // H: token counting two ways — whitespace tokens (the cheap LLM-data
     // heuristic) and a BPE-ish regex segmentation (`\w+` runs plus single
@@ -773,19 +898,7 @@ object TextQueries {
       "llm_image_decode",
       (s, d) => {
         val px = substring(unhex(sha2(col("text").cast("binary"), 256)), 1, 24)
-        Tables.documents(s, d)
-          .select(col("doc_id"),
-            graft.operators.Multimodal.imageFeatures(
-              concat(lit(BmpHeader), px)).as("f"))
-          .select(col("doc_id"),
-            col("f").getItem(0).as("img_w"),
-            col("f").getItem(1).as("img_h"),
-            col("f").getItem(2).as("aspect"),
-            col("f").getItem(3).as("mean_r"),
-            col("f").getItem(4).as("mean_g"),
-            col("f").getItem(5).as("mean_b"),
-            col("f").getItem(8).as("l_min"),
-            col("f").getItem(9).as("l_max"))
+        imageFeatures(Tables.documents(s, d), concat(lit(BmpHeader), px))
           .orderBy(col("doc_id"))
       },
       oracle = Some {
@@ -815,7 +928,7 @@ object TextQueries {
     // H (multimodal, REAL decode, VARIABLE geometry): llm_image_decode
     // fixes a 4×2 raster, so stride padding (BMP rows align to 4 bytes)
     // is constant-zero there and the padding arithmetic never faces the
-    // driver oracle (round-12 verdict #5). This row derives w ∈ {1..4} and
+    // DuckDB oracle. This row derives w ∈ {1..4} and
     // h ∈ {1,2} PER DOC from the first two sha256 bytes — across any
     // corpus all four padding lengths {1,2,3,0} and both row counts occur
     // — and builds each BMP header + bottom-up pixel rows + computed
@@ -858,17 +971,7 @@ object TextQueries {
                 "ELSE CAST('' AS BINARY) END"),
               expr("substring(px, 1, 3*w)"),
               expr("substring(X'000000', 1, npad)")).as("bmp"))
-          .select(col("doc_id"),
-            graft.operators.Multimodal.imageFeatures(col("bmp")).as("f"))
-          .select(col("doc_id"),
-            col("f").getItem(0).as("img_w"),
-            col("f").getItem(1).as("img_h"),
-            col("f").getItem(2).as("aspect"),
-            col("f").getItem(3).as("mean_r"),
-            col("f").getItem(4).as("mean_g"),
-            col("f").getItem(5).as("mean_b"),
-            col("f").getItem(8).as("l_min"),
-            col("f").getItem(9).as("l_max"))
+          .transform(imageFeatures(_, col("bmp")))
           .orderBy(col("doc_id"))
       },
       oracle = Some {
@@ -915,7 +1018,7 @@ object TextQueries {
     // container trick as llm_image_decode: a 4-frame mono 16-bit/8kHz PCM
     // WAV from sha256 bytes 24..31. 16-bit samples are v/2^15 — dyadic
     // EXACT in double, so sums need no order replication; sqrt is IEEE
-    // correctly-rounded on both engines (unlike ln/exp — fn_math R2). The
+    // correctly-rounded on both engines (unlike ln/exp). The
     // zero-crossing feature is the one output whose zero-sample-skipping
     // chain SQL can't unroll cleanly, so it stays spec-pinned
     // (MultimodalSpec) rather than declared.
@@ -1005,7 +1108,7 @@ object TextQueries {
         // explode_outer + null guard: plain explode gets an inferred
         // size(toks)>0 filter that re-runs the split+filter tokenize per
         // doc (2× CPU on the corpus pass — the llm_contamination
-        // pathology, SURVEY §6 r8). The isNotNull evaluates on the
+        // pathology, SURVEY §6). The isNotNull evaluates on the
         // exploded column, not the pipeline.
         Tables.documents(s, d)
           .select(col("doc_id"), explode_outer(toksAll(col("text"))).as("tok"))
@@ -1035,7 +1138,7 @@ object TextQueries {
     // full of rare/garbled tokens score low, boilerplate scores high —
     // the same ranking an LM-perplexity filter produces, WITHOUT
     // transcendentals: ln/exp differ from DuckDB's libm in the last ulp
-    // (fn_math, [MEASURED] r2), so the score is an exact-BIGINT token-
+    // (fn_math, [MEASURED]), so the score is an exact-BIGINT token-
     // frequency sum with ONE double division at the end (the agg_corr_cov
     // discipline) — order-independent and hash-verifiable.
     //
@@ -1062,7 +1165,7 @@ object TextQueries {
           .limit(UnigramVocabK)
         val total = toks.agg(count(lit(1)).cast("bigint").as("n_total"))
         // Two sequential double divisions, NOT a BIGINT n_toks*n_total
-        // product first (round-11 ADVICE): at real corpus sizes
+        // product first: at real corpus sizes
         // (n_total ~1e13 tokens) that product can exceed 2^63, where
         // non-ANSI Spark wraps silently while DuckDB errors — the engines
         // would diverge exactly at the scale the query targets. Division
@@ -1120,7 +1223,7 @@ object TextQueries {
     Q(
       "llm_seq_pack",
       (s, d) => {
-            // NULL-text guard (round-12 review): under the pinned non-ANSI
+        // NULL-text guard: under the pinned non-ANSI
         // config Spark's size(NULL) is -1, which would silently shift every
         // later doc's offset while DuckDB's len(NULL) = NULL drops the row
         // from its prefix sum — both engines must agree a NULL-text doc has
@@ -1134,10 +1237,9 @@ object TextQueries {
           .agg(sum(col("n_toks")).as("bkt_toks"))
           .select(col("bkt"), col("bkt_toks"),
             expr(s"bkt div $PackBucketWidth").as("sbkt"))
-        // Round 21 (r20 verdict #2a): SECOND scan level. The bucket table
-        // is N/W rows, so the previous single unpartitioned window over it
-        // was the one structure in the tree whose single-partition input
-        // grew with N. Super-bucket totals (N/W² rows) take the only
+        // SECOND scan level. The bucket table is N/W rows, so a single
+        // unpartitioned window over it would be a single-partition input
+        // that grows with N. Super-bucket totals (N/W² rows) take the only
         // remaining unpartitioned window — ≤W rows until N > W³ (10¹⁸
         // docs at the production W = 10⁶) — and the per-bucket exclusive
         // cumsum windows BY super-bucket (≤W rows per partition, parallel
@@ -1205,7 +1307,7 @@ object TextQueries {
     // log(n_docs/df): within one document the log variant ranks identically
     // whenever tf ordering and df ordering agree, and the raw ratio keeps
     // the score transcendental-free (ln differs from DuckDB's libm in the
-    // last ulp — fn_math [MEASURED] r2), so the whole row stays
+    // last ulp — fn_math [MEASURED]), so the whole row stays
     // hash-verifiable: exact BIGINT counts, then one fixed-order double
     // mul/div (IEEE-identical in both engines).
     //
@@ -1221,8 +1323,8 @@ object TextQueries {
     Q(
       "llm_tfidf_topk",
       (s, d) => {
-            val docs = Tables.documents(s, d)
-        // spread (round 21): see Tables.spread (the n_docs count below
+        val docs = Tables.documents(s, d)
+        // spread: see Tables.spread (the n_docs count below
         // keeps the plain scan — it reads no text).
         def toks = Tables.spread(s,
             docs.select(col("doc_id"), col("text")), col("doc_id"),
@@ -1287,54 +1389,14 @@ object TextQueries {
     Q(
       "llm_contamination",
       (s, d) => {
-        // spread (round 21): see Tables.spread — gram explode otherwise
-        // single-task on the 1-partition fixture scan.
-        val docs = Tables.spread(s, Tables.documents(s, d)
-            .select(col("doc_id"), col("text")), col("doc_id"),
-          Tables.SpreadTargetBytesHeavy)
-          .select(col("doc_id"), toksAll(col("text")).as("toks"))
-          .where(size(col("toks")) >= 3)
-          .select(col("doc_id"),
-            array_distinct(transform(expr("sequence(1, size(toks) - 2)"),
-              i => array_join(slice(col("toks"), i, lit(3)), " "))).as("grams"))
-        // explode_OUTER, deliberately: plain explode lets Catalyst's
-        // InferFiltersFromGenerate push an implicit `size(grams) > 0`
-        // below this projection, substituting the whole (interpreted,
-        // triple-nested) gram pipeline into the Filter — every doc then
-        // pays the gram computation TWICE (measured 3.1 s → 1.0 s at
-        // sf0.1). Outer is semantics-neutral here: `size(toks) >= 3`
-        // guarantees non-empty grams, and a null `g` could never match
-        // the equi-join anyway.
-        val bench = docs.where(col("doc_id") % 20 === 0)
-          .select(col("doc_id").as("bench_id"), explode_outer(col("grams")).as("g"))
-        val corpus = docs.where(col("doc_id") % 20 =!= 0)
-          .select(col("doc_id"), explode_outer(col("grams")).as("g"))
-        corpus.join(broadcast(bench), "g")
-          .groupBy(col("doc_id"), col("bench_id"))
-          .agg(count(lit(1)).cast("bigint").as("shared_grams"))
-          .where(col("shared_grams") >= 3)
-          .orderBy(col("doc_id"), col("bench_id"))
+        val (bench, corpus) = contaminationSides(s, d)
+        sharedGrams(corpus.join(broadcast(bench), "g"))
       },
       oracle = Some(s"""
-        WITH docs AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(range(1, len(toks) - 1),
-                   i -> array_to_string(toks[i:i+2], ' '))) AS grams
-          FROM (SELECT doc_id, $toksAllDuck AS toks FROM documents)
-          WHERE len(toks) >= 3),
-        bench AS (
-          SELECT doc_id AS bench_id, unnest(grams) AS g
-          FROM docs WHERE doc_id % 20 = 0),
-        corpus AS (
-          SELECT doc_id, unnest(grams) AS g
-          FROM docs WHERE doc_id % 20 <> 0)
-        SELECT doc_id, bench_id, CAST(count(*) AS BIGINT) AS shared_grams
-        FROM corpus JOIN bench USING (g)
-        GROUP BY doc_id, bench_id
-        HAVING count(*) >= 3
-        ORDER BY doc_id, bench_id""")),
+        WITH $contaminationSidesSql
+        ${sharedGramsSql("corpus JOIN bench USING (g)")}""")),
 
-    // H: DF-capped decontamination (round-8 verdict #5) — identical to
+    // H: DF-capped decontamination — identical to
     // llm_contamination but grams whose CORPUS document frequency exceeds
     // DfCap are dropped before counting overlap. That is the web-scale
     // operating mode: stopword-like trigrams ("of the same") hit most of
@@ -1355,60 +1417,26 @@ object TextQueries {
     Q(
       "llm_contamination_capped",
       (s, d) => {
-        // spread (round 21): see llm_contamination.
-        val docs = Tables.spread(s, Tables.documents(s, d)
-            .select(col("doc_id"), col("text")), col("doc_id"),
-          Tables.SpreadTargetBytesHeavy)
-          .select(col("doc_id"), toksAll(col("text")).as("toks"))
-          .where(size(col("toks")) >= 3)
-          .select(col("doc_id"),
-            array_distinct(transform(expr("sequence(1, size(toks) - 2)"),
-              i => array_join(slice(col("toks"), i, lit(3)), " "))).as("grams"))
-        val bench = docs.where(col("doc_id") % 20 === 0)
-          .select(col("doc_id").as("bench_id"), explode_outer(col("grams")).as("g"))
-        val corpus = docs.where(col("doc_id") % 20 =!= 0)
-          .select(col("doc_id"), explode_outer(col("grams")).as("g"))
+        val (bench, corpus) = contaminationSides(s, d)
         // `matched` is consumed twice (DF agg + final count) and NOT
-        // persisted — adjudicated round 10 (r9 verdict "next round" #7):
-        // an interleaved same-boot TimeQuery A/B at sf0.1 read recompute
-        // 3.43/2.76/2.90 s vs persist 2.64/2.76/3.17 s — a wash (medians
-        // 2.90 vs 2.76, winners flipping across pairs), so the persist
-        // buys nothing at bench SF, while at 100 TB the PRE-cap matched
-        // stream is the one stage stopword grams can inflate far beyond
-        // the answer — exactly what should not be pinned into executor
-        // storage. Recompute keeps both consumptions map-side scans.
+        // persisted: an interleaved A/B at sf0.1 read a wash, while at
+        // 100 TB the PRE-cap matched stream is the one stage stopword grams
+        // can inflate far beyond the answer — exactly what should not be
+        // pinned into executor storage. Recompute keeps both consumptions
+        // map-side scans.
         val matched = corpus.join(broadcast(bench.select(col("g")).distinct()), Seq("g"))
         val keep = matched.groupBy(col("g"))
           .agg(count(lit(1)).as("df")) // corpus grams are per-doc distinct
           .where(col("df") <= DfCap)
           .select(col("g"))
-        matched.join(broadcast(keep), Seq("g"))
-          .join(broadcast(bench), Seq("g"))
-          .groupBy(col("doc_id"), col("bench_id"))
-          .agg(count(lit(1)).cast("bigint").as("shared_grams"))
-          .where(col("shared_grams") >= 3)
-          .orderBy(col("doc_id"), col("bench_id"))
+        sharedGrams(matched.join(broadcast(keep), Seq("g"))
+          .join(broadcast(bench), Seq("g")))
       },
       oracle = Some(s"""
-        WITH docs AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(range(1, len(toks) - 1),
-                   i -> array_to_string(toks[i:i+2], ' '))) AS grams
-          FROM (SELECT doc_id, $toksAllDuck AS toks FROM documents)
-          WHERE len(toks) >= 3),
-        bench AS (
-          SELECT doc_id AS bench_id, unnest(grams) AS g
-          FROM docs WHERE doc_id % 20 = 0),
-        corpus AS (
-          SELECT doc_id, unnest(grams) AS g
-          FROM docs WHERE doc_id % 20 <> 0),
+        WITH $contaminationSidesSql,
         keep AS (
           SELECT g FROM corpus GROUP BY g HAVING count(*) <= $DfCap)
-        SELECT doc_id, bench_id, CAST(count(*) AS BIGINT) AS shared_grams
-        FROM corpus JOIN keep USING (g) JOIN bench USING (g)
-        GROUP BY doc_id, bench_id
-        HAVING count(*) >= 3
-        ORDER BY doc_id, bench_id""")),
+        ${sharedGramsSql("corpus JOIN keep USING (g) JOIN bench USING (g)")}""")),
 
     // H: PII redaction — the scrub stage every production curation
     // pipeline runs before training (C4 removed lines with PII patterns;
@@ -1428,46 +1456,15 @@ object TextQueries {
     Q(
       "llm_pii_scrub",
       (s, d) => {
-        Tables.documents(s, d)
-          .withColumn("n_email",
-            size(regexp_extract_all(col("text"), lit(EmailP), lit(0))).cast("bigint"))
-          .withColumn("t1", regexp_replace(col("text"), EmailP, "[EMAIL]"))
-          .withColumn("n_ip",
-            size(regexp_extract_all(col("t1"), lit(IpP), lit(0))).cast("bigint"))
-          .withColumn("t2", regexp_replace(col("t1"), IpP, "[IP]"))
-          .withColumn("n_ssn",
-            size(regexp_extract_all(col("t2"), lit(SsnP), lit(0))).cast("bigint"))
-          .withColumn("t3", regexp_replace(col("t2"), SsnP, "[SSN]"))
-          .withColumn("n_phone",
-            size(regexp_extract_all(col("t3"), lit(PhoneP), lit(0))).cast("bigint"))
-          .select(col("doc_id"),
-            // $1 restores the non-digit guard character (Java backref form;
-            // the DuckDB oracle's \1 is the RE2 spelling of the same thing).
-            regexp_replace(col("t3"), PhoneP, "$1[PHONE]").as("text_scrubbed"),
+        piiScrub(Tables.documents(s, d))
+          .select(col("doc_id"), scrubbed.as("text_scrubbed"),
             col("n_email"), col("n_ip"), col("n_ssn"), col("n_phone"))
           .orderBy(col("doc_id"))
       },
       oracle = Some(s"""
-        WITH s1 AS (
-          SELECT doc_id,
-                 CAST(len(regexp_extract_all(text, '$EmailP')) AS BIGINT) AS n_email,
-                 regexp_replace(text, '$EmailP', '[EMAIL]', 'g') AS t1
-          FROM documents),
-        s2 AS (
-          SELECT doc_id, n_email,
-                 CAST(len(regexp_extract_all(t1, '$IpP')) AS BIGINT) AS n_ip,
-                 regexp_replace(t1, '$IpP', '[IP]', 'g') AS t2
-          FROM s1),
-        s3 AS (
-          SELECT doc_id, n_email, n_ip,
-                 CAST(len(regexp_extract_all(t2, '$SsnP')) AS BIGINT) AS n_ssn,
-                 regexp_replace(t2, '$SsnP', '[SSN]', 'g') AS t3
-          FROM s2)
-        SELECT doc_id,
-               regexp_replace(t3, '$PhoneP', '\\1[PHONE]', 'g') AS text_scrubbed,
-               n_email, n_ip, n_ssn,
-               CAST(len(regexp_extract_all(t3, '$PhoneP')) AS BIGINT) AS n_phone
-        FROM s3
+        WITH ${piiScrubSql("documents")}
+        SELECT doc_id, scrubbed AS text_scrubbed, n_email, n_ip, n_ssn, n_phone
+        FROM p4
         ORDER BY doc_id""")),
 
     // H: deterministic stratified sampling — the data-mixing primitive
@@ -1501,7 +1498,7 @@ object TextQueries {
               < (CASE WHEN lang = 'en' THEN 0.5 ELSE 0.2 END)
         ORDER BY doc_id""")),
 
-    // H: per-source quota sampling (round 14) — the CAP-based half of
+    // H: per-source quota sampling — the CAP-based half of
     // data mixing whose RATE-based half is llm_sample_stratified and
     // whose planning half is llm_mix_weights: keep at most K = 10 docs
     // per `source` (the RefinedWeb/Gopher "no domain dominates" curation
@@ -1618,16 +1615,10 @@ object TextQueries {
     Q(
       "llm_repetition",
       (s, d) => {
-        def topFrac(arr: Column): Column =
-          array_max(transform(array_distinct(arr),
-            u => size(filter(arr, x => x === u)))).cast("double") / size(arr)
-        val bgs = transform(expr("sequence(1, size(toks) - 1)"),
-          i => concat(element_at(col("toks"), i), lit(" "),
-            element_at(col("toks"), i + lit(1))))
         Tables.documents(s, d)
           .select(col("doc_id"), toksAll(col("text")).as("toks"))
           .where(size(col("toks")) >= 2)
-          .select(col("doc_id"), col("toks"), bgs.as("bgs"))
+          .select(col("doc_id"), col("toks"), bigrams.as("bgs"))
           .select(
             col("doc_id"),
             topFrac(col("toks")).as("top_tok_frac"),
@@ -1642,18 +1633,12 @@ object TextQueries {
         WITH t AS (
           SELECT doc_id, $toksAllDuck AS toks FROM documents),
         b AS (
-          SELECT doc_id, toks,
-                 list_transform(range(1, len(toks)),
-                   i -> toks[i] || ' ' || toks[i+1]) AS bgs
+          SELECT doc_id, toks, $bigramsSql AS bgs
           FROM t WHERE len(toks) >= 2),
         m AS (
           SELECT doc_id,
-                 CAST(list_max(list_transform(list_distinct(toks),
-                   u -> len(list_filter(toks, x -> x = u)))) AS DOUBLE)
-                   / len(toks) AS top_tok_frac,
-                 CAST(list_max(list_transform(list_distinct(bgs),
-                   u -> len(list_filter(bgs, x -> x = u)))) AS DOUBLE)
-                   / len(bgs) AS top_bigram_frac,
+                 ${topFracSql("toks")} AS top_tok_frac,
+                 ${topFracSql("bgs")} AS top_bigram_frac,
                  CAST(len(list_distinct(toks)) AS DOUBLE)
                    / len(toks) AS distinct_ratio
           FROM b)
@@ -1662,7 +1647,7 @@ object TextQueries {
         FROM m
         ORDER BY doc_id""")),
 
-    // H (round 18, r16 verdict #5): END-TO-END CURATION PIPELINE — the
+    // H: END-TO-END CURATION PIPELINE — the
     // composition a real training run executes, as ONE declared query:
     // normalized dedup → PII scrub → quality + repetition keep-flags →
     // stratified sampling, emitting per-doc final keep/drop with FIRST-
@@ -1690,7 +1675,7 @@ object TextQueries {
     // driver gate [MEASURED sf0.01: 24/32/74/238 dropped, 132 kept].
     //
     // Scale shape (the realistic multi-stage plan, pinned): ONE corpus
-    // scan feeds the whole pipeline; the dedup verdict is a min-over-key
+    // scan feeds the whole pipeline; the dedup decision is a min-over-key
     // window — the single corpus-scale Exchange — and the scrub, token
     // metrics, and sample predicate are per-row lambdas stacked on the
     // same pass, so the full pipeline shuffles the corpus ONCE (plus the
@@ -1700,12 +1685,6 @@ object TextQueries {
     Q(
       "llm_pipeline_curate",
       (s, d) => {
-        def topFrac(arr: Column): Column =
-          array_max(transform(array_distinct(arr),
-            u => size(filter(arr, x => x === u)))).cast("double") / size(arr)
-        val bgs = transform(expr("sequence(1, size(toks) - 1)"),
-          i => concat(element_at(col("toks"), i), lit(" "),
-            element_at(col("toks"), i + lit(1))))
         val n = size(col("toks")).cast("double")
         val types = size(array_distinct(col("toks"))).cast("double")
         val stops = size(filter(col("toks"),
@@ -1716,32 +1695,20 @@ object TextQueries {
         val u = skey.cast("double") / lit(1152921504606846976L) // 2^60
         val rate = when(col("lang") === "en", 0.5).otherwise(0.2)
         val wKey = Window.partitionBy(col("key"))
-        // NULL text coalesces to '' BEFORE the PII stage (round 18 review):
+        // NULL text coalesces to '' BEFORE the PII stage:
         // size(regexp_extract_all(NULL)) is -1 under the pinned non-ANSI
         // config while DuckDB's len(NULL) is NULL — n_pii would read -4 vs
         // NULL cross-engine. normKey already folds NULL to '' (its own
         // coalesce), so the dedup key is unchanged by the fold and every
         // downstream stage (scrub counts, tokens, quality) sees the same
         // empty document in both engines.
-        Tables.documents(s, d)
+        piiScrub(Tables.documents(s, d)
           .select(col("doc_id"), col("lang"),
             coalesce(col("text"), lit("")).as("text"),
             LlmQueries.normKey(col("text")).as("key"))
           .select(col("doc_id"), col("lang"), col("text"),
-            (col("doc_id") === min(col("doc_id")).over(wKey)).as("dedup_keep"))
-          .withColumn("n_email",
-            size(regexp_extract_all(col("text"), lit(EmailP), lit(0))).cast("bigint"))
-          .withColumn("t1", regexp_replace(col("text"), EmailP, "[EMAIL]"))
-          .withColumn("n_ip",
-            size(regexp_extract_all(col("t1"), lit(IpP), lit(0))).cast("bigint"))
-          .withColumn("t2", regexp_replace(col("t1"), IpP, "[IP]"))
-          .withColumn("n_ssn",
-            size(regexp_extract_all(col("t2"), lit(SsnP), lit(0))).cast("bigint"))
-          .withColumn("t3", regexp_replace(col("t2"), SsnP, "[SSN]"))
-          .withColumn("n_phone",
-            size(regexp_extract_all(col("t3"), lit(PhoneP), lit(0))).cast("bigint"))
-          .withColumn("toks",
-            toksAll(regexp_replace(col("t3"), PhoneP, "$1[PHONE]")))
+            (col("doc_id") === min(col("doc_id")).over(wKey)).as("dedup_keep")))
+          .withColumn("toks", toksAll(scrubbed))
           .withColumn("n_pii",
             col("n_email") + col("n_ip") + col("n_ssn") + col("n_phone"))
           .withColumn("quality",
@@ -1753,7 +1720,7 @@ object TextQueries {
           // branch below never reads bgs for those docs, but the column
           // itself must not evaluate the explode-free bigram lambda on
           // them either.
-          .withColumn("bgs", when(size(col("toks")) >= 2, bgs))
+          .withColumn("bgs", when(size(col("toks")) >= 2, bigrams))
           .withColumn("repetitive",
             when(size(col("toks")) < 2, lit(false))
               .otherwise(topFrac(col("bgs")) > 0.08 ||
@@ -1779,25 +1746,8 @@ object TextQueries {
           SELECT doc_id, lang, text,
                  doc_id = min(doc_id) OVER (PARTITION BY key) AS dedup_keep
           FROM nk),
-        p1 AS (
-          SELECT *, CAST(len(regexp_extract_all(text, '$EmailP')) AS BIGINT) AS n_email,
-                 regexp_replace(text, '$EmailP', '[EMAIL]', 'g') AS t1
-          FROM dd),
-        p2 AS (
-          SELECT *, CAST(len(regexp_extract_all(t1, '$IpP')) AS BIGINT) AS n_ip,
-                 regexp_replace(t1, '$IpP', '[IP]', 'g') AS t2
-          FROM p1),
-        p3 AS (
-          SELECT *, CAST(len(regexp_extract_all(t2, '$SsnP')) AS BIGINT) AS n_ssn,
-                 regexp_replace(t2, '$SsnP', '[SSN]', 'g') AS t3
-          FROM p2),
-        p4 AS (
-          SELECT doc_id, lang, dedup_keep, n_email, n_ip, n_ssn,
-                 CAST(len(regexp_extract_all(t3, '$PhoneP')) AS BIGINT) AS n_phone,
-                 list_filter(string_split(
-                   regexp_replace(t3, '$PhoneP', '\\1[PHONE]', 'g'), ' '),
-                   x -> x <> '') AS toks
-          FROM p3),
+        ${piiScrubSql("dd")},
+        p5 AS (SELECT *, ${toksAllDuckOn("scrubbed")} AS toks FROM p4),
         m AS (
           SELECT doc_id, lang, dedup_keep,
                  n_email + n_ip + n_ssn + n_phone AS n_pii,
@@ -1809,18 +1759,9 @@ object TextQueries {
                    + least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) * 0.3
                  END AS quality,
                  CASE WHEN len(toks) < 2 THEN FALSE ELSE
-                   (CAST(list_max(list_transform(list_distinct(
-                      list_transform(range(1, len(toks)),
-                        i -> toks[i] || ' ' || toks[i+1])),
-                      u -> len(list_filter(
-                        list_transform(range(1, len(toks)),
-                          i -> toks[i] || ' ' || toks[i+1]),
-                        x -> x = u)))) AS DOUBLE)
-                      / (len(toks) - 1) > 0.08
-                    OR CAST(list_max(list_transform(list_distinct(toks),
-                      u -> len(list_filter(toks, x -> x = u)))) AS DOUBLE)
-                      / len(toks) > 0.12) END AS repetitive
-          FROM p4),
+                   (${topFracSql(bigramsSql)} > 0.08
+                    OR ${topFracSql("toks")} > 0.12) END AS repetitive
+          FROM p5),
         f AS (
           SELECT doc_id, n_pii, quality,
                  CASE WHEN NOT dedup_keep THEN 'dedup'
@@ -1839,7 +1780,7 @@ object TextQueries {
         FROM f
         ORDER BY doc_id""")),
 
-    // H: corpus duplicate-shingle audit (round 18) — for every document,
+    // H: corpus duplicate-shingle audit — for every document,
     // the share of its DISTINCT 3-token shingles that also occur in at
     // least one OTHER document, plus the dup_heavy flag at the
     // DupFracFlag threshold. This is the "how duplicated is my corpus"
@@ -1861,22 +1802,15 @@ object TextQueries {
     Q(
       "llm_dupgram_fraction",
       (s, d) => {
-        // Persisted (round-18 review): u feeds BOTH the df aggregation
-        // and the probe side of the join back — without the persist the
-        // corpus scan + 3-gram explode run twice (the containment
-        // `ranked` persist's exact argument). Corpus-gram-scale rows,
-        // MEMORY_AND_DISK by default, released by Cleanup with the other
-        // corpus intermediates.
-        // spread (round 22, profiled): the shingle explode into the cache
-        // ran as one 780 ms task on the narrow fixture scan.
-        val u = Tables.spread(s,
+        // Persisted: u feeds BOTH the df aggregation and the probe side of
+        // the join back — without the persist the corpus scan + 3-gram
+        // explode run twice. Corpus-gram-scale rows, MEMORY_AND_DISK by
+        // default, released by Cleanup with the other corpus
+        // intermediates. spread (profiled): without it the shingle
+        // explode into the cache ran as one 780 ms task on a narrow scan.
+        val u = shingles(Tables.spread(s,
             Tables.documents(s, d).select(col("doc_id"), col("text")),
-            col("doc_id"))
-          .select(col("doc_id"), toksAll(col("text")).as("toks"))
-          .where(size(col("toks")) >= 3)
-          .select(col("doc_id"), explode(array_distinct(
-            expr("transform(sequence(1, size(toks) - 2), " +
-              "i -> array_join(slice(toks, i, 3), ' '))"))).as("gram"))
+            col("doc_id")), "gram", explode)
           .persist()
         val df = u.groupBy(col("gram")).agg(count(lit(1)).as("gdf"))
         val frac = col("n_dup").cast("double") /
@@ -1891,13 +1825,9 @@ object TextQueries {
           .orderBy(col("doc_id"))
       },
       oracle = Some(s"""
-        WITH t AS (
-          SELECT doc_id, $toksAllDuck AS toks FROM documents),
-        u AS (
-          SELECT doc_id, unnest(list_distinct(list_transform(
-                   range(1, len(toks) - 1),
-                   i -> array_to_string(toks[i:i+2], ' ')))) AS gram
-          FROM t WHERE len(toks) >= 3),
+        WITH u AS (
+          SELECT doc_id, unnest(sh) AS gram
+          FROM (${shinglesSql("documents", "sh")})),
         df AS (SELECT gram, count(*) AS gdf FROM u GROUP BY gram),
         per AS (
           SELECT u.doc_id,
@@ -1912,7 +1842,7 @@ object TextQueries {
         FROM per
         ORDER BY doc_id""")),
 
-    // H (round 19): DUPLICATED-SPAN AUDIT — the token-POSITION quantity
+    // H: DUPLICATED-SPAN AUDIT — the token-POSITION quantity
     // behind exact-substring dedup (Lee et al. 2022, "Deduplicating
     // Training Data Makes Language Models Better": remove every span
     // that occurs verbatim elsewhere in the corpus), at k-gram
@@ -1991,7 +1921,7 @@ object TextQueries {
         FROM t LEFT JOIN cov c USING (doc_id)
         ORDER BY t.doc_id""")),
 
-    // H: bigram LM training (round 18) — the count half of a CCNet/
+    // H: bigram LM training — the count half of a CCNet/
     // KenLM-style fluency filter: corpus bigram transition counts with
     // Laplace smoothing, P(w2|w1) = (c12 + 1)/(c1 + V) where c1 is w1's
     // total successor count and V the successor vocabulary — all exact
@@ -2023,7 +1953,7 @@ object TextQueries {
         ORDER BY c12 DESC, w1, w2
         LIMIT 20""")),
 
-    // H: bigram fluency scoring (round 18) — the APPLY half of the
+    // H: bigram fluency scoring — the APPLY half of the
     // CCNet-style filter trained by llm_bigram_lm (the model is the
     // shared bigramLm table — verbatim-shared machinery, so the
     // smoothing cannot fork between train and apply): per document the
@@ -2080,7 +2010,7 @@ object TextQueries {
         FROM per
         ORDER BY doc_id""")),
 
-    // H: BM25 retrieval (round 18) — rank the corpus against a literal
+    // H: BM25 retrieval — rank the corpus against a literal
     // 3-term query and keep the top-10, the classic lexical-search
     // primitive (and the retrieval half of contamination/quality
     // tooling: "which training docs look most like this probe"). The
@@ -2102,76 +2032,19 @@ object TextQueries {
     Q(
       "llm_bm25_search",
       (s, d) => {
-        val terms = Seq("dup", "vector", "batch")
-        // NULL text folds to '' (round 18 review): size(toksAll(NULL)) is
-        // -1 under the pinned non-ANSI config and would enter Σdl, while
-        // DuckDB's sum skips NULL — one NULL doc would shift avgdl and
-        // hash-poison EVERY document's score. '' scores dl = 0, tf = 0 in
-        // both engines.
-        val toks = toksAll(coalesce(col("text"), lit("")))
-        val t = Tables.documents(s, d)
-          .select(col("doc_id") +: size(toks).cast("bigint").as("dl") +:
-            terms.zipWithIndex.map { case (w, i) =>
-              size(filter(toks, x => x === w)).cast("bigint").as(s"tf$i")
-            }: _*)
-        val aggs = sum(col("dl")).as("sumdl") +:
-          terms.indices.map(i =>
-            sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
-        val stats = t.agg(count(lit(1)).as("n"), aggs: _*)
-        val nD = col("n").cast("double")
-        val avgdl = col("sumdl").cast("double") / nD
-        def w(i: Int): Column = {
-          val tf = col(s"tf$i").cast("double")
-          val df = col(s"df$i").cast("double")
-          val idf = (nD - df + lit(0.5)) / (df + lit(0.5))
-          idf * (tf * lit(2.2)) / (tf + lit(1.2) *
-            (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
-        }
-        t.crossJoin(broadcast(stats))
-          .select(col("doc_id"), col("dl"),
-            (w(0) + w(1) + w(2)).as("score"))
+        bm25Stats(s, d)
+          .select(col("doc_id"), col("dl"), bm25Score.as("score"))
           .orderBy(col("score").desc, col("doc_id"))
           .limit(10)
       },
       oracle = Some(s"""
-        WITH t AS (
-          SELECT doc_id,
-                 len($toksAllDuck) AS dl,
-                 len(list_filter($toksAllDuck, x -> x = 'dup')) AS tf0,
-                 len(list_filter($toksAllDuck, x -> x = 'vector')) AS tf1,
-                 len(list_filter($toksAllDuck, x -> x = 'batch')) AS tf2
-          FROM (SELECT doc_id, coalesce(text, '') AS text FROM documents)),
-        s AS (
-          SELECT count(*) AS n, sum(dl) AS sumdl,
-                 sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                 sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-                 sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-          FROM t)
-        SELECT doc_id, dl,
-               (CAST(n AS DOUBLE) - CAST(df0 AS DOUBLE) + 0.5)
-                 / (CAST(df0 AS DOUBLE) + 0.5)
-                 * (CAST(tf0 AS DOUBLE) * 2.2)
-                 / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75
-                     * (CAST(dl AS DOUBLE)
-                        / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE)))))
-               + (CAST(n AS DOUBLE) - CAST(df1 AS DOUBLE) + 0.5)
-                 / (CAST(df1 AS DOUBLE) + 0.5)
-                 * (CAST(tf1 AS DOUBLE) * 2.2)
-                 / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75
-                     * (CAST(dl AS DOUBLE)
-                        / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE)))))
-               + (CAST(n AS DOUBLE) - CAST(df2 AS DOUBLE) + 0.5)
-                 / (CAST(df2 AS DOUBLE) + 0.5)
-                 * (CAST(tf2 AS DOUBLE) * 2.2)
-                 / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75
-                     * (CAST(dl AS DOUBLE)
-                        / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE)))))
-               AS score
+        WITH $bm25StatsSql
+        SELECT doc_id, dl, $bm25ScoreSql AS score
         FROM t, s
         ORDER BY score DESC, doc_id
         LIMIT 10""")),
 
-    // H (round 18, second session): COUNT-MIN FREQUENCY SKETCH — the
+    // H: COUNT-MIN FREQUENCY SKETCH — the
     // third sketch family member (HLL cardinality ✅, GK percentiles ✅,
     // CMS point frequency ← this row): estimate any token's corpus
     // frequency from a d×w counter matrix instead of a vocab-sized
@@ -2239,7 +2112,7 @@ object TextQueries {
         GROUP BY pe.token
         ORDER BY pe.token""")),
 
-    // H (round 18, second session): ROBUST LENGTH-OUTLIER FILTER — the
+    // H: ROBUST LENGTH-OUTLIER FILTER — the
     // per-language percentile trim every curation pipeline applies before
     // the content heuristics: a doc whose length falls outside its
     // LANGUAGE's [p05, p95] band is flagged (absolute thresholds misfire
@@ -2273,8 +2146,8 @@ object TextQueries {
           -- The NOT NULL filter mirrors the Spark counts CTE exactly: a
           -- lang whose docs ALL have NULL n_chars gets no bounds row in
           -- EITHER engine, so the inner join drops its docs consistently
-          -- (r18 ADVICE: without it DuckDB kept the group with NULL
-          -- quantiles while Spark dropped it). quantile_cont already
+          -- (without it DuckDB would keep the group with NULL
+          -- quantiles while Spark drops it). quantile_cont already
           -- ignores NULLs, so mixed-NULL langs are unaffected.
           FROM documents WHERE n_chars IS NOT NULL GROUP BY lang)
         SELECT d.doc_id, d.lang, d.n_chars,
@@ -2283,7 +2156,7 @@ object TextQueries {
         FROM documents d JOIN b USING (lang)
         ORDER BY d.doc_id""")),
 
-    // H (round 18, second session): BPE MERGE TRAINING — the first
+    // H: BPE MERGE TRAINING — the first
     // iteration of byte-pair-encoding tokenizer training (Sennrich et al.
     // 2016; the algorithm behind GPT-2/RoBERTa vocabularies): count
     // adjacent symbol pairs over the corpus and rank merge candidates.
@@ -2295,51 +2168,15 @@ object TextQueries {
     // is alphabet²-bound, and the top-20 plans as TakeOrderedAndProject
     // heaps. One corpus-scale shuffle total. Production iterates this row
     // with the winning pair merged into the symbol table; each iteration
-    // is this same vocab-bound shape.
-    //
-    // The pair enumeration guards 0/1-char words explicitly: Spark's
-    // sequence(1, 0) is a DESCENDING sequence (not empty!), so the
-    // transform sits behind an if(length < 2) — DuckDB's range(1, 1) is
-    // genuinely empty and needs no guard.
+    // is this same vocab-bound shape (see bpeTopPairs).
     Q(
       "llm_bpe_merges",
-      (s, d) => {
-        val words = Tables.documents(s, d)
-          .select(explode(filter(split(lower(col("text")), " "),
-            t => t =!= "")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("n"))
-        words
-          .select(col("n"), explode(expr(
-            """if(length(w) < 2, array(),
-              |   transform(sequence(1, length(w) - 1),
-              |     i -> struct(substring(w, i, 1) AS a,
-              |                 substring(w, i + 1, 1) AS b)))"""
-              .stripMargin)).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("n")).cast("bigint").as("cnt"))
-          .orderBy(col("cnt").desc, col("a"), col("b"))
-          .limit(20)
-      },
-      oracle = Some("""
-        WITH w AS (
-          SELECT w, count(*) AS n FROM (
-            SELECT unnest(list_filter(string_split(lower(text), ' '),
-                     t -> t <> '')) AS w
-            FROM documents) GROUP BY w),
-        -- scalar range() + select-list unnest: DuckDB's range TABLE
-        -- function rejects lateral column parameters.
-        p AS (
-          SELECT substr(w, i, 1) AS a, substr(w, i + 1, 1) AS b, n
-          FROM (
-            SELECT w.w AS w, w.n AS n,
-                   CAST(unnest(range(1, length(w.w))) AS INTEGER) AS i
-            FROM w))
-        SELECT a, b, CAST(sum(n) AS BIGINT) AS cnt
-        FROM p GROUP BY a, b
-        ORDER BY cnt DESC, a, b
-        LIMIT 20""")),
+      (s, d) => bpeTopPairs(s, d),
+      oracle = Some(s"""
+        WITH $bpePairCtes
+        $bpeTopPairsSql""")),
 
-    // H (round 19): BPE MERGE APPLICATION — the apply half of the
+    // H: BPE MERGE APPLICATION — the apply half of the
     // llm_bpe_merges train/apply pair (the bigram-LM precedent): tokenize
     // the corpus WITH the trained merge table. Each merge (a, b), taken
     // in rank order (cnt DESC, a, b), is one greedy left-to-right
@@ -2397,15 +2234,11 @@ object TextQueries {
                    |  acc2 + ((length(s2) - length(replace(s2, char(1), '')))
                    |          div 2) - 1), 0L)""".stripMargin)
               .as("n_tokens"))
-          .select(col("doc_id"), col("n_sym_before"), col("n_tokens"),
-            when(col("n_tokens") > 0,
-              col("n_sym_before").cast("double") / col("n_tokens"))
-              .as("chars_per_tok"))
-          .orderBy(col("doc_id"))
+          .transform(charsPerTok)
       },
       oracle = Some(bpeApplyOracleSql)),
 
-    // H (round 20): VOCAB-CACHED BPE APPLICATION — the production
+    // H: VOCAB-CACHED BPE APPLICATION — the production
     // tokenizer form of llm_bpe_apply at 100 TB: the greedy merge fold
     // runs once per DISTINCT word (the llm_bpe_merges histogram trick —
     // at web scale words repeat heavily, Zipf, so the fold work drops
@@ -2425,7 +2258,7 @@ object TextQueries {
     // cached 0.83 s; 100× staged (500k docs) map-only 18.3 s vs cached
     // 18.5 s — a wash on THIS fixture, whose 31-word vocabulary makes
     // the per-word fold trivial on both paths, so the A/B prices the
-    // shuffle tax against the fold alone [MEASURED r20]. The production
+    // shuffle tax against the fold alone [MEASURED]. The production
     // argument is structural, not fixture-local: fold work is
     // per-OCCURRENCE in the map-only form and per-DISTINCT-WORD here, so
     // at a real corpus's Zipf vocab/occurrence ratio (and a real ~50k
@@ -2453,15 +2286,11 @@ object TextQueries {
               .cast("long").as("n_sym_before"),
             sum(coalesce(col("n_occ") * col("w_tok"), lit(0L)))
               .cast("long").as("n_tokens"))
-          .select(col("doc_id"), col("n_sym_before"), col("n_tokens"),
-            when(col("n_tokens") > 0,
-              col("n_sym_before").cast("double") / col("n_tokens"))
-              .as("chars_per_tok"))
-          .orderBy(col("doc_id"))
+          .transform(charsPerTok)
       },
       oracle = Some(bpeApplyOracleSql)),
 
-    // H (round 20): TOKENIZER FERTILITY BY LANGUAGE — the multilingual
+    // H: TOKENIZER FERTILITY BY LANGUAGE — the multilingual
     // training-mix diagnostic (tokens emitted per whitespace word, and
     // chars per token) computed against the trained BPE merge table: a
     // language the tokenizer fragments (high fertility) costs
@@ -2484,10 +2313,7 @@ object TextQueries {
     Q(
       "llm_tokenizer_fertility",
       (s, d) => {
-        // spread (round 22): parallelize the tokenize/explode map work
-        // over the narrow fixture scan (profiled single-task stages).
-        val occ = Tables.spread(s, Tables.documents(s, d)
-            .select(col("doc_id"), col("lang"), col("text")), col("doc_id"))
+        val occ = Tables.documents(s, d)
           .select(col("lang"),
             explode(filter(split(lower(col("text")), " "),
               t => t =!= "")).as("w"))
@@ -2555,7 +2381,7 @@ object TextQueries {
         FROM da LEFT JOIN wa ON da.lang IS NOT DISTINCT FROM wa.lang
         ORDER BY da.lang NULLS FIRST""")),
 
-    // H: deterministic train/valid/test split assignment (round 18) —
+    // H: deterministic train/valid/test split assignment —
     // the last step of every curation pipeline before tokenization:
     // every document lands in exactly one of train/valid/test at 90/5/5
     // by the salted-md5 uniform key (llm_sample_stratified's exact
@@ -2579,7 +2405,7 @@ object TextQueries {
         FROM documents
         ORDER BY doc_id""")),
 
-    // H (round 18, second session): CROSS-SPLIT LEAKAGE AUDIT — the
+    // H: CROSS-SPLIT LEAKAGE AUDIT — the
     // decontamination check every training run performs AFTER splitting:
     // an eval (valid/test) document whose normalized text also appears in
     // train is leaked — its eval loss measures memorization, not
@@ -2649,7 +2475,7 @@ object TextQueries {
       "llm_pagerank",
       (s, d) => {
         val docs = Tables.documents(s, d).select(col("doc_id").as("node"))
-        // persist() on edges too (round 21, r20 ADVICE): the degree
+        // persist() on edges too: the degree
         // self-join below consumes `edges` twice, so without its own cache
         // entry the corpus scan + explode ran twice during edgesDeg's
         // one-time build — the edgesDeg persist only saved the per-round
@@ -2746,37 +2572,15 @@ object TextQueries {
     Q(
       "llm_hybrid_rrf",
       (s, d) => {
-        val terms = Seq("dup", "vector", "batch")
-        // NULL text folds to '' — the llm_bm25_search discipline: a NULL
-        // doc entering Σdl would shift avgdl and hash-poison every score.
-        val toks = toksAll(coalesce(col("text"), lit("")))
-        val t = Tables.documents(s, d)
-          .select(col("doc_id") +: size(toks).cast("bigint").as("dl") +:
-            terms.zipWithIndex.map { case (w, i) =>
-              size(filter(toks, x => x === w)).cast("bigint").as(s"tf$i")
-            }: _*)
-        val aggs = sum(col("dl")).as("sumdl") +:
-          terms.indices.map(i =>
-            sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
-        val stats = t.agg(count(lit(1)).as("n"), aggs: _*)
-        val nD = col("n").cast("double")
-        val avgdl = col("sumdl").cast("double") / nD
-        def bm(i: Int): Column = {
-          val tf = col(s"tf$i").cast("double")
-          val df = col(s"df$i").cast("double")
-          val idf = (nD - df + lit(0.5)) / (df + lit(0.5))
-          idf * (tf * lit(2.2)) / (tf + lit(1.2) *
-            (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
-        }
         def ti(i: Int): Column = {
           val tf = col(s"tf$i").cast("double")
           val df = col(s"df$i").cast("double")
-          when(col(s"df$i") > 0, tf * (nD / df)).otherwise(lit(0.0))
+          when(col(s"df$i") > 0, tf * (col("n").cast("double") / df))
+            .otherwise(lit(0.0))
         }
-        val scored = t.crossJoin(broadcast(stats))
-          .select(col("doc_id"),
-            (bm(0) + bm(1) + bm(2)).as("s_bm"),
-            (ti(0) + ti(1) + ti(2)).as("s_ti"))
+        val scored = bm25Stats(s, d)
+          .select(col("doc_id"), bm25Score.as("s_bm"),
+            Bm25Terms.indices.map(ti).reduce(_ + _).as("s_ti"))
           .persist() // two ranker consumers — one corpus pass, not two
         def ranked(scoreCol: String, rankName: String) =
           scored.orderBy(col(scoreCol).desc, col("doc_id")).limit(100)
@@ -2795,50 +2599,12 @@ object TextQueries {
           .limit(10)
       },
       oracle = Some(s"""
-        WITH t AS (
-          SELECT doc_id,
-                 len($toksAllDuck) AS dl,
-                 len(list_filter($toksAllDuck, x -> x = 'dup')) AS tf0,
-                 len(list_filter($toksAllDuck, x -> x = 'vector')) AS tf1,
-                 len(list_filter($toksAllDuck, x -> x = 'batch')) AS tf2
-          FROM (SELECT doc_id, coalesce(text, '') AS text FROM documents)),
-        s AS (
-          SELECT count(*) AS n, sum(dl) AS sumdl,
-                 sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                 sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-                 sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-          FROM t),
+        WITH $bm25StatsSql,
         sc AS (
-          SELECT doc_id,
-                 (CAST(n AS DOUBLE) - CAST(df0 AS DOUBLE) + 0.5)
-                   / (CAST(df0 AS DOUBLE) + 0.5)
-                   * (CAST(tf0 AS DOUBLE) * 2.2)
-                   / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75
-                       * (CAST(dl AS DOUBLE)
-                          / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE)))))
-                 + (CAST(n AS DOUBLE) - CAST(df1 AS DOUBLE) + 0.5)
-                   / (CAST(df1 AS DOUBLE) + 0.5)
-                   * (CAST(tf1 AS DOUBLE) * 2.2)
-                   / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75
-                       * (CAST(dl AS DOUBLE)
-                          / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE)))))
-                 + (CAST(n AS DOUBLE) - CAST(df2 AS DOUBLE) + 0.5)
-                   / (CAST(df2 AS DOUBLE) + 0.5)
-                   * (CAST(tf2 AS DOUBLE) * 2.2)
-                   / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75
-                       * (CAST(dl AS DOUBLE)
-                          / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE)))))
-                 AS s_bm,
-                 CASE WHEN df0 > 0 THEN CAST(tf0 AS DOUBLE)
-                      * (CAST(n AS DOUBLE) / CAST(df0 AS DOUBLE))
-                      ELSE 0 END
-                 + CASE WHEN df1 > 0 THEN CAST(tf1 AS DOUBLE)
-                      * (CAST(n AS DOUBLE) / CAST(df1 AS DOUBLE))
-                      ELSE 0 END
-                 + CASE WHEN df2 > 0 THEN CAST(tf2 AS DOUBLE)
-                      * (CAST(n AS DOUBLE) / CAST(df2 AS DOUBLE))
-                      ELSE 0 END
-                 AS s_ti
+          SELECT doc_id, $bm25ScoreSql AS s_bm,
+                 ${Bm25Terms.indices.map(i => s"""CASE WHEN df$i > 0
+                   THEN CAST(tf$i AS DOUBLE) * (CAST(n AS DOUBLE) / CAST(df$i AS DOUBLE))
+                   ELSE 0 END""").mkString("\n                 + ")} AS s_ti
           FROM t, s),
         b AS (
           SELECT doc_id, r AS bm25_rank FROM (
@@ -2859,9 +2625,72 @@ object TextQueries {
         ORDER BY rrf_q DESC, doc_id
         LIMIT 10""")))
 
+  /** Per-doc BM25 inputs crossed with the corpus stats row: (doc_id, dl,
+    * tf0…) for [[Bm25Terms]] and (n, sumdl, df0…), the stats being ONE
+    * scalar aggregation broadcast back as a single row.
+    */
+  private def bm25Stats(s: SparkSession, d: String): DataFrame = {
+    // NULL text folds to '': size(toksAll(NULL)) is -1 under the pinned
+    // non-ANSI config and would enter Σdl, while DuckDB's sum skips NULL —
+    // one NULL doc would shift avgdl and hash-poison EVERY document's
+    // score. '' scores dl = 0, tf = 0 in both engines.
+    val toks = toksAll(coalesce(col("text"), lit("")))
+    val t = Tables.documents(s, d)
+      .select(col("doc_id") +: size(toks).cast("bigint").as("dl") +:
+        Bm25Terms.zipWithIndex.map { case (w, i) =>
+          size(filter(toks, x => x === w)).cast("bigint").as(s"tf$i")
+        }: _*)
+    val aggs = sum(col("dl")).as("sumdl") +:
+      Bm25Terms.indices.map(i =>
+        sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
+    t.crossJoin(broadcast(t.agg(count(lit(1)).as("n"), aggs: _*)))
+  }
+
+  /** BM25 (k1 = 1.2, b = 0.75) over [[bm25Stats]]' columns with the
+    * rational idf (N − df + ½)/(df + ½), summed over the terms in order.
+    */
+  private def bm25Score: Column = {
+    val nD = col("n").cast("double")
+    val avgdl = col("sumdl").cast("double") / nD
+    Bm25Terms.indices.map { i =>
+      val tf = col(s"tf$i").cast("double")
+      val df = col(s"df$i").cast("double")
+      val idf = (nD - df + lit(0.5)) / (df + lit(0.5))
+      idf * (tf * lit(2.2)) / (tf + lit(1.2) *
+        (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
+    }.reduce(_ + _)
+  }
+
+  /** The DuckDB spellings of [[bm25Stats]] (CTEs t and s) and of
+    * [[bm25Score]] over them, generated per term index.
+    */
+  private def bm25StatsSql: String = {
+    val tfs = Bm25Terms.zipWithIndex.map { case (w, i) =>
+      s"len(list_filter($toksAllDuck, x -> x = '$w')) AS tf$i" }
+    val dfs = Bm25Terms.indices.map(i =>
+      s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i")
+    s"""t AS (
+          SELECT doc_id, len($toksAllDuck) AS dl,
+                 ${tfs.mkString(",\n                 ")}
+          FROM (SELECT doc_id, coalesce(text, '') AS text FROM documents)),
+        s AS (
+          SELECT count(*) AS n, sum(dl) AS sumdl,
+                 ${dfs.mkString(",\n                 ")}
+          FROM t)"""
+  }
+
+  private def bm25ScoreSql: String = Bm25Terms.indices.map { i =>
+    s"""(CAST(n AS DOUBLE) - CAST(df$i AS DOUBLE) + 0.5)
+                 / (CAST(df$i AS DOUBLE) + 0.5)
+                 * (CAST(tf$i AS DOUBLE) * 2.2)
+                 / (CAST(tf$i AS DOUBLE) + 1.2 * (0.25 + 0.75
+                     * (CAST(dl AS DOUBLE)
+                        / (CAST(sumdl AS DOUBLE) / CAST(n AS DOUBLE)))))"""
+  }.mkString("\n               + ")
+
   /** llm_split_assign's deterministic 90/5/5 split — the salted-md5
     * uniform key mapped through the fixed thresholds, factored out
-    * (round 18, second session) so the leakage audit cannot fork from
+    * so the leakage audit cannot fork from
     * the assignment it audits. NOT rand(): retries keep assignments,
     * adding documents never moves existing ones, the oracle agrees
     * bit-for-bit.
@@ -2933,10 +2762,8 @@ object TextQueries {
     * folded separators exactly as the map-only row does. Input and output
     * are VOCABULARY-bound; the only broadcast is the 1-row merge array.
     */
-  private def bpeWordTokens(s: org.apache.spark.sql.SparkSession,
-      d: String,
-      distinctWords: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private def bpeWordTokens(s: SparkSession, d: String,
+      distinctWords: DataFrame): DataFrame = {
     distinctWords
       .crossJoin(broadcast(bpeMergeArray(s, d)))
       .withColumn("enc", expr(
@@ -2954,6 +2781,16 @@ object TextQueries {
                | div 2) - 1""".stripMargin).cast("long").as("w_tok"))
   }
 
+  /** The BPE apply rows' output over (doc_id, n_sym_before, n_tokens):
+    * adds chars_per_tok, NULL for a token-less doc.
+    */
+  private def charsPerTok(counts: DataFrame): DataFrame =
+    counts.select(col("doc_id"), col("n_sym_before"), col("n_tokens"),
+        when(col("n_tokens") > 0,
+          col("n_sym_before").cast("double") / col("n_tokens"))
+          .as("chars_per_tok"))
+      .orderBy(col("doc_id"))
+
   /** The trained-merge-table construction shared by the BPE apply pair
     * (llm_bpe_apply / llm_bpe_apply_cached — single-sourced so the two
     * rows cannot drift): word histogram -> adjacent-pair counts weighted
@@ -2963,13 +2800,25 @@ object TextQueries {
     * is <= alphabet-squared rows collapsed to one row: broadcast BY
     * CONSTRUCTION at any corpus size.
     */
-  private def bpeMergeArray(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val words = Tables.documents(s, d)
+  private def bpeMergeArray(s: SparkSession, d: String): DataFrame =
+    bpeTopPairs(s, d)
+      .agg(transform(
+        sort_array(collect_list(struct((-col("cnt")).as("nc"),
+          col("a"), col("b")))),
+        m => struct(m.getField("a").as("a"), m.getField("b").as("b")))
+        .as("ml"))
+
+  /** llm_bpe_merges' answer and the merge table's source: the word
+    * histogram, adjacent symbol pairs weighted by word frequency, top-20 by
+    * (cnt DESC, a, b). The pair enumeration guards 0/1-char words: Spark's
+    * sequence(1, 0) is a DESCENDING sequence (not empty), while DuckDB's
+    * range(1, 1) is genuinely empty and needs no guard.
+    */
+  private def bpeTopPairs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
       .select(explode(filter(split(lower(col("text")), " "),
         t => t =!= "")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-    words
       .select(col("n"), explode(expr(
         """if(length(w) < 2, array(),
           |   transform(sequence(1, length(w) - 1),
@@ -2980,30 +2829,13 @@ object TextQueries {
       .agg(sum(col("n")).cast("bigint").as("cnt"))
       .orderBy(col("cnt").desc, col("a"), col("b"))
       .limit(20)
-      .agg(transform(
-        sort_array(collect_list(struct((-col("cnt")).as("nc"),
-          col("a"), col("b")))),
-        m => struct(m.getField("a").as("a"), m.getField("b").as("b")))
-        .as("ml"))
-  }
 
-  /** The DuckDB oracle shared verbatim by the BPE apply pair: both rows
-    * declare the IDENTICAL output contract, so one oracle hash-pins both
-    * (and thereby pins the rows equal to each other at every gate SF).
+  /** The DuckDB spelling of [[bpeTopPairs]]: the w → p CTEs, then the
+    * top-20 query over p. The pair CTE unnests a scalar range() in the
+    * select list: DuckDB's range TABLE function rejects lateral column
+    * parameters.
     */
-  /** The trained-merge-table CTE prefix (w → p → m → ml) shared by the BPE
-    * apply oracle and the tokenizer-fertility oracle — the DuckDB spelling
-    * of [[bpeMergeArray]], single-sourced for the same no-drift reason.
-    *
-    * Merges are encoded as 'pattern\2replacement' strings so the reduce
-    * list stays VARCHAR-uniform with the prepended init word. The coalesce
-    * guards the no-merges corpus (every word 1 char): list() over zero rows
-    * is NULL in DuckDB where Spark's collect_list is [], and a NULL merge
-    * list would NULL the whole fold — n_tokens would read 0 against
-    * Spark's real symbol count (r19 ADVICE).
-    */
-  private def bpeMergeCtes: String = """
-        w AS (
+  private def bpePairCtes: String = """w AS (
           SELECT w, count(*) AS n FROM (
             SELECT unnest(list_filter(string_split(lower(text), ' '),
                      t -> t <> '')) AS w
@@ -3013,18 +2845,36 @@ object TextQueries {
           FROM (
             SELECT w.w AS w, w.n AS n,
                    CAST(unnest(range(1, length(w.w))) AS INTEGER) AS i
-            FROM w)),
-        m AS (
-          SELECT a, b, CAST(sum(n) AS BIGINT) AS cnt
+            FROM w))"""
+
+  private def bpeTopPairsSql: String = """SELECT a, b, CAST(sum(n) AS BIGINT) AS cnt
           FROM p GROUP BY a, b
           ORDER BY cnt DESC, a, b
-          LIMIT 20),
+          LIMIT 20"""
+
+  /** The trained-merge-table CTE prefix (w → p → m → ml) shared by the BPE
+    * apply oracle and the tokenizer-fertility oracle — the DuckDB spelling
+    * of [[bpeMergeArray]], single-sourced for the same no-drift reason.
+    *
+    * Merges are encoded as 'pattern\2replacement' strings so the reduce
+    * list stays VARCHAR-uniform with the prepended init word. The coalesce
+    * guards the no-merges corpus (every word 1 char): list() over zero rows
+    * is NULL in DuckDB where Spark's collect_list is [], and a NULL merge
+    * list would NULL the whole fold — n_tokens would read 0 against
+    * Spark's real symbol count.
+    */
+  private def bpeMergeCtes: String = s"""$bpePairCtes,
+        m AS ($bpeTopPairsSql),
         ml AS (
           SELECT coalesce(list(chr(1) || a || chr(1) || chr(1) || b || chr(1)
                       || chr(2) || chr(1) || a || b || chr(1)
                       ORDER BY cnt DESC, a, b), []) AS merges
           FROM m)"""
 
+  /** The DuckDB oracle shared verbatim by the BPE apply pair: both rows
+    * declare the IDENTICAL output contract, so one oracle hash-pins both
+    * (and thereby pins the rows equal to each other at every gate SF).
+    */
   private def bpeApplyOracleSql: String = s"""
         WITH $bpeMergeCtes,
         enc AS (

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -25,24 +25,66 @@ import graft.functions.VectorOps
   *     probed fraction of the corpus instead of all of it;
   *   - llm_knn_bucketed: llm_knn_per_vector's contract over the same IVF
   *     cell assignment as candidate generator — the realized "replace
-  *     `base` with bucketed candidates" scale path (round-7 verdict #4).
+  *     `base` with bucketed candidates" scale path.
   *
   * All dot products use the native codegen DotProduct expression, whose
   * left-to-right accumulation is bit-identical to DuckDB list_dot_product.
   */
 object VectorQueries {
 
-  private def vecs(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"),
+  private def vecs(s: SparkSession, d: String): DataFrame =
+    doubles(Tables.embeddings(s, d))
+
+  /** embeddings → (vec_id, v), the FLOAT components widened to DOUBLE. */
+  private def doubles(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
 
-  /** vecs with the round-21 parallelism floor (Tables.spread): the
+  /** The DuckDB spelling of [[vecs]], the `e` CTE every oracle opens with. */
+  private val vecsSql = """e AS (
+          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"""
+
+  /** Symmetric int8 quantization of `v`: max-abs scaling to [-127, 127]
+    * with round-half-up encoded as floor(x/scale·127 + ½) — NOT the
+    * engines' round() (HALF_UP vs banker's tie policies differ; floor(+½)
+    * is the identical IEEE op in both). A zero vector (scale = 0) takes
+    * the q ≡ 0 branch.
+    */
+  private def int8Scale(v: Column): Column = array_max(transform(v, x => abs(x)))
+
+  private def int8Codes(v: Column, scale: Column): Column =
+    when(scale > 0, transform(v, x => floor(x / scale * 127d + 0.5d).cast("bigint")))
+      .otherwise(transform(v, _ => lit(0L)))
+
+  /** (vec_id, v) → (vec_id, q), the int8 codes of each vector. */
+  private def quantize(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("v"), int8Scale(col("v")).as("scale"))
+      .select(col("vec_id"), int8Codes(col("v"), col("scale")).as("q"))
+
+  /** The DuckDB spellings of [[int8Scale]] and [[int8Codes]], and of
+    * [[quantize]] as the sc → qv CTEs over `e`.
+    */
+  private def int8ScaleSql(v: String) = s"list_aggregate(list_transform($v, x -> abs(x)), 'max')"
+
+  private def int8CodesSql(v: String, scale: String) = s"""CASE WHEN $scale > 0
+                   THEN list_transform($v,
+                     x -> CAST(floor(x / $scale * 127 + 0.5) AS BIGINT))
+                   ELSE list_transform($v, x -> CAST(0 AS BIGINT))
+                 END"""
+
+  private val quantizeSql = s"""sc AS (
+          SELECT vec_id, ${int8ScaleSql("v")} AS scale FROM e),
+        qv AS (
+          SELECT e.vec_id, ${int8CodesSql("e.v", "sc.scale")} AS q
+          FROM e JOIN sc USING (vec_id))"""
+
+  /** vecs with the parallelism floor (Tables.spread): the
     * embeddings fixture is a single-row-group file, so every assignment /
     * signature / dot pipeline fused above its first exchange otherwise
     * runs as ONE task (llm_knn_graph's bucket join profiled at 2.0 s
     * single-task on 32 cores). Used ONLY where the fused map work is
     * heavy enough to pay for the extra exchange — measured per site in
-    * the round-21 filtered A/B: pqIndex (llm_pq_search 2.7→1.7 s),
+    * a filtered A/B: pqIndex (llm_pq_search 2.7→1.7 s),
     * srpRepGraph, llm_knn_graph (4.5→2.8 s), llm_neardup_cosine. The
     * map-only rows (llm_emb_quant etc.) keep the plain reader and their
     * pinned zero-corpus-shuffle plans, and ivfIndex/hierIndex REVERTED
@@ -51,14 +93,26 @@ object VectorQueries {
     * per-task overhead than the parallelism returns (ann_hier 1.4→1.8 s,
     * knn_hier 1.2→1.6 s with spread — a measured loss).
     */
-  private def vecsSpread(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    Tables.spread(s, Tables.embeddings(s, d), col("vec_id"))
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+  private def vecsSpread(s: SparkSession, d: String): DataFrame =
+    doubles(Tables.spread(s, Tables.embeddings(s, d), col("vec_id")))
 
-  /** Shared IVF machinery (round-7 verdict "next round" #4 factored it out
-    * of llm_ann_ivf so the cell assignment doubles as the bucketed-kNN
-    * candidate generator): returns (e, cents, cell, nprobe) where
+  /** The sizing both IVF indexes derive from count(): (e, cents, stride,
+    * ncells, nprobe) — see [[ivfIndex]].
+    */
+  private def ivfBase(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, Long, Long, Long) = {
+    val e = vecs(s, d).persist()
+    val n = e.count()
+    val stride = math.max(1L, n / math.ceil(math.sqrt(n.toDouble)).toLong)
+    val ncells = (n + stride - 1) / stride
+    val nprobe = math.max(2L, math.ceil(ncells / 4.0).toLong)
+    val cents = e.where(col("vec_id") % stride === 0)
+      .select(col("vec_id").as("c_id"), col("v").as("cv"))
+    (e, cents, stride, ncells, nprobe)
+  }
+
+  /** Shared IVF machinery (the cell assignment doubles as the
+    * bucketed-kNN candidate generator): returns (e, cents, cell, nprobe) where
     *
     *   e      = persisted (vec_id, v) projection — the quantizer-sizing
     *            count() and every downstream use share ONE materialization
@@ -77,15 +131,9 @@ object VectorQueries {
     *            cells grow, so recall is scale-stable instead of
     *            collapsing as 2/ncells.
     */
-  private def ivfIndex(s: org.apache.spark.sql.SparkSession, d: String)
+  private def ivfIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Long) = {
-    val e = vecs(s, d).persist()
-    val n = e.count()
-    val stride = math.max(1L, n / math.ceil(math.sqrt(n.toDouble)).toLong)
-    val ncells = (n + stride - 1) / stride
-    val nprobe = math.max(2L, math.ceil(ncells / 4.0).toLong)
-    val cents = e.where(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"))
+    val (e, cents, _, _, nprobe) = ivfBase(s, d)
     val cell = e.crossJoin(broadcast(cents))
       .groupBy(col("vec_id"))
       .agg(max_by(col("c_id"),
@@ -94,8 +142,8 @@ object VectorQueries {
     (e, cents, cell, nprobe)
   }
 
-  /** Hierarchical (two-level) variant of the IVF cell assignment — the
-    * round-12 30× probe showed the flat √N-cell argmax sitting exactly on
+  /** Hierarchical (two-level) variant of the IVF cell assignment — a
+    * 30× probe showed the flat √N-cell argmax sitting exactly on
     * its documented O(N·√N) curve (158× wall at 30× data ≈ F^1.5 = 164×),
     * so this is the realized next rung: assign each vector to one of
     * ≈N^(1/4) SUPER-cells first (the super-centroids are every sfac-th
@@ -112,7 +160,7 @@ object VectorQueries {
     * cell), which is the standard IVF trade and is floor-pinned in
     * AnnRecallSpec like the others.
     *
-    * MULTI-PROBE routing (round 18, r16 verdict #4): the recall the
+    * MULTI-PROBE routing: the recall the
     * two-level assignment gives up is entirely boundary loss — a vector
     * whose globally-best centroid maps to super-cell s* but whose own
     * top-1 super is some other s gets argmax'd over the wrong centroid
@@ -133,7 +181,7 @@ object VectorQueries {
     */
   private[graft] val HierSupProbe = 4
   /** Shared quantize + assign + centroid + score stages for
-    * llm_cluster_sample / llm_diversity_prune (round-18 review): the
+    * llm_cluster_sample / llm_diversity_prune: the
     * per-vector (c_id, vec_id, dist2) table — persisted q ⋈ cell (the
     * two consumers share ONE assignment+quantization pass), centroid-
     * update means re-assembled dim-ordered, dist² via the bit-identical
@@ -142,7 +190,7 @@ object VectorQueries {
     * CacheManager persist sharing when both run in a session) are now
     * structural, not textual luck.
     */
-  private def quantizedDist2(s: org.apache.spark.sql.SparkSession,
+  private def quantizedDist2(s: SparkSession,
       d: String): DataFrame = {
     val (q, cents) = quantizedQC(s, d)
     q.join(broadcast(cents), "c_id")
@@ -157,22 +205,15 @@ object VectorQueries {
     * convergence row (llm_kmeans_shift) shares the identical quantize /
     * assign / centroid arithmetic instead of re-spelling it.
     */
-  private def quantizedQC(s: org.apache.spark.sql.SparkSession,
+  private def quantizedQC(s: SparkSession,
       d: String): (DataFrame, DataFrame) = {
     val (e, _, cell, _) = hierIndex(s, d)
-    // spread (round 22, profiled): the quantize + cell-attach pass into
+    // spread (profiled): without it the quantize + cell-attach pass into
     // the persisted q ran as one 790 ms task off hierIndex's narrow
     // cache. Floor only this pipeline's input — hierIndex's own cache
-    // stays at scan width (the r21 measured revert: spreading IT fed
-    // many tiny index-scale stages).
-    val q = Tables.spread(s, e, col("vec_id"))
-      .select(col("vec_id"), col("v"),
-        array_max(transform(col("v"), x => abs(x))).as("scale"))
-      .select(col("vec_id"),
-        when(col("scale") > 0,
-          transform(col("v"),
-            x => floor(x / col("scale") * 127d + 0.5d).cast("bigint")))
-          .otherwise(transform(col("v"), _ => lit(0L))).as("q"))
+    // stays at scan width (spreading IT fed many tiny index-scale stages,
+    // a measured loss).
+    val q = quantize(Tables.spread(s, e, col("vec_id")))
       // Consumed twice (centroid build + scoring pass) — persist so
       // the two-level assignment and the quantization run ONCE;
       // released by Cleanup like the other corpus-scale intermediates.
@@ -197,18 +238,7 @@ object VectorQueries {
     * open with.
     */
   private def quantizedDist2Sql = s"""$hierCellsSql,
-        sc AS (
-          SELECT vec_id,
-                 list_aggregate(list_transform(v, x -> abs(x)), 'max') AS scale
-          FROM e),
-        qv AS (
-          SELECT e.vec_id,
-                 CASE WHEN sc.scale > 0
-                   THEN list_transform(e.v,
-                     x -> CAST(floor(x / sc.scale * 127 + 0.5) AS BIGINT))
-                   ELSE list_transform(e.v, x -> CAST(0 AS BIGINT))
-                 END AS q
-          FROM e JOIN sc USING (vec_id)),
+        $quantizeSql,
         x AS (
           SELECT cell.c_id, qv.vec_id, r.i AS dim, qv.q[r.i + 1] AS qc
           FROM qv JOIN cell USING (vec_id), range(0, 64) r(i)),
@@ -229,17 +259,11 @@ object VectorQueries {
             JOIN cell USING (vec_id)
             JOIN cma ON cma.c_id = cell.c_id) qv2)"""
 
-  private def hierIndex(s: org.apache.spark.sql.SparkSession, d: String)
+  private def hierIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Long) = {
-    val e = vecs(s, d).persist()
-    val n = e.count()
-    val stride = math.max(1L, n / math.ceil(math.sqrt(n.toDouble)).toLong)
-    val ncells = (n + stride - 1) / stride
-    val nprobe = math.max(2L, math.ceil(ncells / 4.0).toLong)
+    val (e, cents, stride, ncells, nprobe) = ivfBase(s, d)
     val sfac = math.max(1L, math.ceil(math.sqrt(ncells.toDouble)).toLong)
     val sstride = stride * sfac
-    val cents = e.where(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"))
     val sups = e.where(col("vec_id") % sstride === 0)
       .select(col("vec_id").as("s_id"), col("v").as("sv"))
     // centroid → super-cell: √N × N^(1/4) — tiny both sides.
@@ -273,6 +297,27 @@ object VectorQueries {
     (e, cents, cell, nprobe)
   }
 
+  /** The probe-bound query vectors (q_id, qv): vec_id < probeMax. */
+  private def queryVecs(e: DataFrame, probeMax: Long): DataFrame =
+    e.where(col("vec_id") < probeMax)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+
+  /** Each query's top-`nprobe` cells by (dot DESC, c_id) joined to their
+    * residents `cell(vec_id, c_id)`, the query itself excluded: rows
+    * (c_id, q_id, vec_id).
+    */
+  private def probedResidents(qa: DataFrame, cents: DataFrame,
+      cell: DataFrame, nprobe: Long): DataFrame = {
+    val probeW = Window.partitionBy(col("q_id"))
+      .orderBy(VectorOps.dot(col("qv"), col("cv")).desc, col("c_id"))
+    qa.crossJoin(broadcast(cents))
+      .withColumn("rn", row_number().over(probeW))
+      .where(col("rn") <= nprobe)
+      .select(col("q_id"), col("c_id"))
+      .join(cell, "c_id")
+      .where(col("vec_id") =!= col("q_id"))
+  }
+
   /** Probe → candidate → exact-re-rank tail shared by both IVF queries:
     * top-`nprobe` cells per query vector, candidates = residents of the
     * probed cells (self excluded), exact top-k by dot with the same
@@ -280,28 +325,19 @@ object VectorQueries {
     */
   private def ivfKnn(e: DataFrame, cents: DataFrame, cell: DataFrame,
       nprobe: Long, probeMax: Long, k: Int): DataFrame = {
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(VectorOps.dot(col("qv"), col("cv")).desc, col("c_id"))
     // THE probe-bound projection: every probe-side use below derives from
-    // this single definition (round-10 review), so the `vec_id < probeMax`
-    // bound that licenses the qa broadcast cannot drift apart from the
-    // probe generation under refactoring.
-    val qa = e.where(col("vec_id") < probeMax)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val probes = qa
-      .crossJoin(broadcast(cents))
-      .withColumn("rn", row_number().over(probeW))
-      .where(col("rn") <= nprobe)
-      .select(col("q_id"), col("c_id"))
-    val cand = probes.join(cell, "c_id")
-      .where(col("vec_id") =!= col("q_id"))
+    // this single definition, so the `vec_id < probeMax` bound that
+    // licenses the qa broadcast cannot drift apart from the probe
+    // generation.
+    val qa = queryVecs(e, probeMax)
+    val cand = probedResidents(qa, cents, cell, nprobe)
       .select(col("q_id"), col("vec_id").as("n_id"))
-    // Query-vector re-attachment reuses `qa` — EXPLICITLY probe-bound
-    // (round-9 verdict #1: the boundedness must not hang on constraint
-    // inference surviving a refactor): ≤ probeMax rows, safe to broadcast
-    // at any corpus size. Candidate-vector re-attachment (`nb`) is the
-    // FULL corpus — candidates span every probed cell's residents — so it
-    // carries NO hint and shuffle-joins on n_id; a broadcast hint there
+    // Query-vector re-attachment reuses `qa` — EXPLICITLY probe-bound (the
+    // boundedness must not hang on constraint inference): ≤ probeMax rows,
+    // safe to broadcast at any corpus size. Candidate-vector re-attachment
+    // (`nb`) is the FULL corpus — candidates span every probed cell's
+    // residents — so it carries NO hint and shuffle-joins on n_id; a
+    // broadcast hint there
     // was a multi-TB driver OOM at 10¹⁰ × 64-d vectors, invisible at sf0.1
     // where auto-broadcast picks BHJ anyway. Pinned by PlanAuditSpec under
     // autoBroadcastJoinThreshold=-1.
@@ -317,67 +353,14 @@ object VectorQueries {
       .orderBy(col("q_id"), col("nn_rank"))
   }
 
-  /** The DuckDB replay of the identical quantize→probe→rerank pipeline,
-    * parameterized on the probe range/k so both IVF queries share it.
+  /** The sizing CTEs both IVF replays open with (e → s0 → s → c): the
+    * same stride/nprobe/sfac arithmetic from count(*) as [[ivfBase]] and
+    * [[hierIndex]].
     */
-  private def ivfOracle(probeMax: Long, k: Int): String = s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  private val ivfBaseSql: String = s"""
+        WITH $vecsSql,
         s0 AS (
           -- NB: // is DuckDB integer division; / would be float division
-          SELECT greatest(1, CAST(count(*) AS BIGINT)
-                   // CAST(ceil(sqrt(count(*))) AS BIGINT)) AS stride,
-                 count(*) AS n
-          FROM embeddings),
-        s AS (
-          SELECT stride,
-                 greatest(2, CAST(ceil(
-                   ceil(CAST(n AS DOUBLE) / stride) / 4.0) AS BIGINT)) AS nprobe
-          FROM s0),
-        c AS (
-          SELECT vec_id AS c_id, v AS cv FROM e
-          WHERE vec_id % (SELECT stride FROM s) = 0),
-        assign AS (
-          SELECT e.vec_id, c.c_id,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_dot_product(e.v, c.cv) DESC, c.c_id) AS rn
-          FROM e CROSS JOIN c),
-        cell AS (SELECT vec_id, c_id FROM assign WHERE rn = 1),
-        probe AS (
-          SELECT e.vec_id AS q_id, c.c_id,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_dot_product(e.v, c.cv) DESC, c.c_id) AS rn
-          FROM e CROSS JOIN c WHERE e.vec_id < $probeMax),
-        probes AS (SELECT q_id, c_id FROM probe
-                   WHERE rn <= (SELECT nprobe FROM s)),
-        cand AS (
-          SELECT p.q_id, cl.vec_id AS n_id
-          FROM probes p JOIN cell cl ON p.c_id = cl.c_id
-          WHERE cl.vec_id <> p.q_id),
-        scored AS (
-          SELECT cd.q_id, cd.n_id, list_dot_product(a.v, b.v) AS dot,
-                 row_number() OVER (PARTITION BY cd.q_id
-                   ORDER BY list_dot_product(a.v, b.v) DESC, cd.n_id) AS nn_rank
-          FROM cand cd
-          JOIN e a ON a.vec_id = cd.q_id
-          JOIN e b ON b.vec_id = cd.n_id)
-        SELECT q_id, nn_rank, n_id, dot FROM scored
-        WHERE nn_rank <= $k
-        ORDER BY q_id, nn_rank"""
-
-  /** DuckDB replay of the hierarchical quantize→probe→rerank pipeline —
-    * ivfOracle with the two-level cell assignment spliced in (same
-    * dot-DESC-then-id tiebreaks at every level).
-    */
-  /** The two-level cell-assignment CTE chain (e → s → c/sup → c2s/v2s →
-    * cell), shared verbatim by the probe-contract oracle (hierOracle) and
-    * the round-14 kNN-graph oracle so the assignment arithmetic cannot
-    * fork between the two replays.
-    */
-  private val hierCellsSql: String = s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        s0 AS (
           SELECT greatest(1, CAST(count(*) AS BIGINT)
                    // CAST(ceil(sqrt(count(*))) AS BIGINT)) AS stride,
                  count(*) AS n
@@ -391,7 +374,56 @@ object VectorQueries {
           FROM s0),
         c AS (
           SELECT vec_id AS c_id, v AS cv FROM e
-          WHERE vec_id % (SELECT stride FROM s) = 0),
+          WHERE vec_id % (SELECT stride FROM s) = 0)"""
+
+  /** The flat cell assignment ([[ivfIndex]]'s `cell`), ending in `cell`. */
+  private val ivfCellsSql: String = s"""$ivfBaseSql,
+        assign AS (
+          SELECT e.vec_id, c.c_id,
+                 row_number() OVER (PARTITION BY e.vec_id
+                   ORDER BY list_dot_product(e.v, c.cv) DESC, c.c_id) AS rn
+          FROM e CROSS JOIN c),
+        cell AS (SELECT vec_id, c_id FROM assign WHERE rn = 1)"""
+
+  /** probe → probes → cand over the query relation `queries(q_id, qv)`:
+    * each query's top-nprobe cells by (dot DESC, c_id), and their residents
+    * other than the query itself as n_id ([[probedResidents]]).
+    */
+  private def probeCandSql(queries: String): String = s"""
+        probe AS (
+          SELECT q.q_id, c.c_id,
+                 row_number() OVER (PARTITION BY q.q_id
+                   ORDER BY list_dot_product(q.qv, c.cv) DESC, c.c_id) AS rn
+          FROM $queries q CROSS JOIN c),
+        probes AS (SELECT q_id, c_id FROM probe
+                   WHERE rn <= (SELECT nprobe FROM s)),
+        cand AS (
+          SELECT p.q_id, cl.vec_id AS n_id
+          FROM probes p JOIN cell cl ON p.c_id = cl.c_id
+          WHERE cl.vec_id <> p.q_id)"""
+
+  /** The DuckDB replay of [[ivfKnn]] over a cell-assignment chain `cells`
+    * (flat or hierarchical), parameterized on the probe range and k.
+    */
+  private def ivfKnnSql(cells: String, probeMax: Long, k: Int): String = s"""$cells,
+        ${probeCandSql(s"(SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < $probeMax)")},
+        scored AS (
+          SELECT cd.q_id, cd.n_id, list_dot_product(a.v, b.v) AS dot,
+                 row_number() OVER (PARTITION BY cd.q_id
+                   ORDER BY list_dot_product(a.v, b.v) DESC, cd.n_id) AS nn_rank
+          FROM cand cd
+          JOIN e a ON a.vec_id = cd.q_id
+          JOIN e b ON b.vec_id = cd.n_id)
+        SELECT q_id, nn_rank, n_id, dot FROM scored
+        WHERE nn_rank <= $k
+        ORDER BY q_id, nn_rank"""
+
+  /** The two-level cell-assignment CTE chain (e → s → c/sup → c2s/v2s →
+    * cell), shared verbatim by the probe-contract oracles and the
+    * quantized-cell oracles so the assignment arithmetic cannot fork
+    * between the replays (same dot-DESC-then-id tiebreaks at every level).
+    */
+  private val hierCellsSql: String = s"""$ivfBaseSql,
         sup AS (
           SELECT vec_id AS s_id, v AS sv FROM e
           WHERE vec_id % ((SELECT stride FROM s) * (SELECT sfac FROM s)) = 0),
@@ -417,7 +449,7 @@ object VectorQueries {
           JOIN c ON c.c_id = m.c_id),
         cell AS (SELECT vec_id, c_id FROM cell_r WHERE rn = 1)"""
 
-  // ── Product quantization (round 18, second leg) ──────────────────────
+  // ── Product quantization ─────────────────────────────────────────────
   //
   // PQ (Jégou/Douze/Schmid, "Product Quantization for Nearest Neighbor
   // Search", TPAMI 2011) is the memory-scale lever behind every
@@ -451,6 +483,12 @@ object VectorQueries {
   private def pqSub(v: Column, m: Column): Column =
     slice(v, (m * PqDsub + 1).cast("int"), lit(PqDsub))
 
+  /** The fixed-order M-term sum of `ds`: a DotProduct against a ones
+    * vector, the accumulation both engines evaluate bit-identically.
+    */
+  private def pqSum(ds: Column): Column =
+    VectorOps.dot(ds, array(Seq.fill(PqM)(lit(1.0d)): _*))
+
   private def pqD2(a: Column, b: Column): Column =
     VectorOps.dot(zip_with(a, b, (x, y) => x - y),
       zip_with(a, b, (x, y) => x - y))
@@ -462,17 +500,15 @@ object VectorQueries {
     * collapses map-side to PqM rows per vector BEFORE any exchange (a
     * window argmin would shuffle and sort all N·M·K scored rows).
     */
-  private def pqIndex(s: org.apache.spark.sql.SparkSession, d: String)
+  private def pqIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    // Round 22 (r21 verdict #2): the r21 form spread the PERSISTED e to
-    // defaultParallelism — every index-scale consumer of the cache (the
-    // sizing count, cb's seed filter, the trio's tiny aggs) then paid 32
-    // near-empty tasks per stage, the measured pq_codes/pack/recon
-    // 1.3-1.5× regressions. The cache now stays at the scan's own width
-    // (data-sized: one block at sf0.1, already-wide at production) and
-    // ONLY the N·M·K scoring expansion — the one genuinely CPU-heavy
-    // stage, and the win behind llm_pq_search's r21 improvement — gets
-    // the size-derived parallelism floor on its input.
+    // The cache stays at the scan's own width (data-sized: one block at
+    // sf0.1, already-wide at production): spreading the PERSISTED e made
+    // every index-scale consumer of the cache (the sizing count, cb's seed
+    // filter, the trio's tiny aggs) pay 32 near-empty tasks per stage, a
+    // measured 1.3-1.5× loss on pq_codes/pack/recon. ONLY the N·M·K
+    // scoring expansion — the one genuinely CPU-heavy stage — gets the
+    // size-derived parallelism floor on its input.
     val e = vecs(s, d).persist()
     val n = e.count()
     val sstride = math.max(1L, n / PqK)
@@ -496,8 +532,7 @@ object VectorQueries {
     * construction like ivfKnn's qa.
     */
   private def pqDistTable(e: DataFrame, cb: DataFrame): DataFrame =
-    e.where(col("vec_id") < PqProbeMax)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    queryVecs(e, PqProbeMax)
       .crossJoin(broadcast(cb))
       .select(col("q_id"), col("m").as("dm"), col("k").as("dk"),
         pqD2(pqSub(col("qv"), col("m")), col("cvec")).as("dq"))
@@ -519,8 +554,7 @@ object VectorQueries {
       .agg(transform(sort_array(collect_list(struct(col("m"), col("dq")))),
         p => p.getField("dq")).as("ds"))
       .select(col("q_id"), col("vec_id"),
-        VectorOps.dot(col("ds"),
-          array(Seq.fill(PqM)(lit(1.0d)): _*)).as("adist"))
+        pqSum(col("ds")).as("adist"))
       .withColumn("nn_rank", row_number().over(rankW))
       .where(col("nn_rank") <= PqTopK)
       .select(col("q_id"), col("nn_rank"), col("vec_id"), col("adist"))
@@ -580,31 +614,22 @@ object VectorQueries {
   private val pqOnesSql: String =
     "[" + Seq.fill(PqM)("1.0").mkString(", ") + "]"
 
-  private def hierOracle(probeMax: Long, k: Int): String = s"""$hierCellsSql,
-        probe AS (
-          SELECT e.vec_id AS q_id, c.c_id,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_dot_product(e.v, c.cv) DESC, c.c_id) AS rn
-          FROM e CROSS JOIN c WHERE e.vec_id < $probeMax),
-        probes AS (SELECT q_id, c_id FROM probe
-                   WHERE rn <= (SELECT nprobe FROM s)),
-        cand AS (
-          SELECT p.q_id, cl.vec_id AS n_id
-          FROM probes p JOIN cell cl ON p.c_id = cl.c_id
-          WHERE cl.vec_id <> p.q_id),
-        scored AS (
-          SELECT cd.q_id, cd.n_id, list_dot_product(a.v, b.v) AS dot,
-                 row_number() OVER (PARTITION BY cd.q_id
-                   ORDER BY list_dot_product(a.v, b.v) DESC, cd.n_id) AS nn_rank
-          FROM cand cd
-          JOIN e a ON a.vec_id = cd.q_id
-          JOIN e b ON b.vec_id = cd.n_id)
-        SELECT q_id, nn_rank, n_id, dot FROM scored
-        WHERE nn_rank <= $k
+  /** The rank tail of both ADC search oracles over ds(q_id, vec_id, dl),
+    * the DuckDB spelling of [[pqAdcTopK]]'s ranking.
+    */
+  private val pqTopKSql: String = s"""ranked AS (
+          SELECT q_id, vec_id,
+                 list_dot_product(dl, $pqOnesSql) AS adist,
+                 row_number() OVER (PARTITION BY q_id
+                   ORDER BY list_dot_product(dl, $pqOnesSql), vec_id)
+                   AS nn_rank
+          FROM ds)
+        SELECT q_id, nn_rank, vec_id, adist FROM ranked
+        WHERE nn_rank <= $PqTopK
         ORDER BY q_id, nn_rank"""
 
   /** Deterministic signed-random-projection hyperplanes for the cosine
-    * LSH row (round 14): 16 planes × 64 dims, every coefficient derived
+    * LSH row: 16 planes × 64 dims, every coefficient derived
     * from md5("graft-srp-v1:j:k") exactly as the DuckDB oracle re-derives
     * it (first 8 hex chars → BIGINT → % 1000001 → centered → / 500000.0 —
     * the llm_sample_stratified salted-md5 idiom), so both engines hold
@@ -627,10 +652,10 @@ object VectorQueries {
 
   private lazy val srpPlanes: Array[Array[Double]] = srpPlanesN(16)
 
-  /** llm_knn_graph's occupancy knobs (round 15): 8 SRP bands of
+  /** llm_knn_graph's occupancy knobs: 8 SRP bands of
     * ⌈log2(⌈N/64⌉)⌉ bits — bucket count ∝ N, expected occupancy ≈ the
     * constant 64 target at any corpus size, so the bucket self-join is
-    * linear (the r14 √N-cell sizing made it N^1.5 — 43× wall at 30×).
+    * linear (a √N-cell sizing made it N^1.5 — 43× wall at 30×).
     */
   private val GraphBands = 8
   private val GraphBucket = 64L
@@ -650,7 +675,7 @@ object VectorQueries {
     *   verified = exact-verified REP pairs at cos ≥ 0.3:
     *              (a_rep, b_rep, cos), a_rep < b_rep.
     *
-    * Plan shape of the verify (round-14 A/B, measured): rep vectors and
+    * Plan shape of the verify (A/B, measured): rep vectors and
     * their precomputed norms are CARRIED through the band-key bucket join
     * and the cosine is verified INLINE; only the verified ANSWER is
     * distinct'd (a pair that collides in k ≤ 4 bands is verified k times —
@@ -661,13 +686,13 @@ object VectorQueries {
     * 0.83 s and 10× staging 60.4 vs 2.35 s — the carried form is 25×
     * faster exactly where the candidate set outgrows the answer, because
     * the shuffled bytes track the ANSWER, not the collision count.
-    * ADOPTED. With the round-15 rep collapse in front, the bucket join is
+    * With the rep collapse in front, the bucket join is
     * additionally answer-bound on clone-dense corpora: a hot bucket of m
     * identical vectors is ONE rep row, not m. Still zero corpus-bound
     * broadcasts, no cartesian (pinned).
     */
   private[graft] def srpRepGraph(
-      s: org.apache.spark.sql.SparkSession, d: String)
+      s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val e = vecsSpread(s, d)
     // Stage 0: collapse byte-identical vectors (RepGraph.chunks).
@@ -719,9 +744,8 @@ object VectorQueries {
     * `vp(a_id, b_id, cos)` — shared by the cosine_lsh and dedup_semantic
     * oracles.
     */
-  private val srpPairsSql: String = """
-        e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  private val srpPairsSql: String = s"""
+        $vecsSql,
         h AS (
           SELECT j, list_transform(range(0, 64), k ->
             ((('0x' || substr(md5('graft-srp-v1:' || j || ':' || k), 1, 8))::BIGINT
@@ -773,9 +797,8 @@ object VectorQueries {
           .where(col("cos") >= 0.3)
           .orderBy(col("a_id"), col("b_id"))
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+      oracle = Some(s"""
+        WITH $vecsSql
         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
                list_dot_product(a.v, b.v)
                  / (sqrt(list_dot_product(a.v, a.v))
@@ -804,7 +827,7 @@ object VectorQueries {
     // literals — zero joins, zero count() passes); pair generation is the
     // LSH family's linear groupBy-shape join on the (band_idx, band_val)
     // bucket key, CARRYING each vector + precomputed norm so the cosine
-    // verifies inline and only the answer is distinct'd (the round-14
+    // verifies inline and only the answer is distinct'd (the
     // A/B in srpRepGraph's comment — 25× over distinct-then-attach
     // at 10× staging); corpus-bound sides pinned never-broadcast under
     // auto-broadcast-off. Bits-per-band is the occupancy knob: at 10¹⁰
@@ -846,15 +869,15 @@ object VectorQueries {
         val (e, cents, cell, nprobe) = ivfIndex(s, d)
         ivfKnn(e, cents, cell, nprobe, probeMax = 50, k = 3)
       },
-      oracle = Some(ivfOracle(probeMax = 50, k = 3))),
+      oracle = Some(ivfKnnSql(ivfCellsSql, probeMax = 50, k = 3))),
 
     // H (scale form): bucketed per-vector kNN — llm_knn_per_vector's exact
     // contract (probe set vec_id < 100, k = 3, same output schema and
     // deterministic tiebreaks) with the IVF cell assignment as the
-    // candidate generator instead of the full-corpus join (round-7 verdict
-    // "next round" #4 made the promise at llm_knn_per_vector's definition
-    // real). Per probe the scored set is the probed fraction of the corpus
-    // (≈ nprobe·N/ncells rows) instead of all N, so the probe×base stage
+    // candidate generator instead of the full-corpus join (the promise
+    // made at llm_knn_per_vector's definition). Per probe the scored set
+    // is the probed fraction of the corpus (≈ nprobe·N/ncells rows)
+    // instead of all N, so the probe×base stage
     // drops from O(P·N) to O(P·N/4) dot products while assignment stays
     // the shared O(N·√N) map-side argmax — sub-quadratic end to end, and
     // directly diffable against the brute-force row for recall.
@@ -864,7 +887,7 @@ object VectorQueries {
         val (e, cents, cell, nprobe) = ivfIndex(s, d)
         ivfKnn(e, cents, cell, nprobe, probeMax = 100, k = 3)
       },
-      oracle = Some(ivfOracle(probeMax = 100, k = 3))),
+      oracle = Some(ivfKnnSql(ivfCellsSql, probeMax = 100, k = 3))),
 
     // H (scale form, next rung): HIERARCHICAL IVF — llm_ann_ivf's contract
     // (probeMax = 50, k = 3, same probing/rerank tail) over the two-level
@@ -877,14 +900,14 @@ object VectorQueries {
         val (e, cents, cell, nprobe) = hierIndex(s, d)
         ivfKnn(e, cents, cell, nprobe, probeMax = 50, k = 3)
       },
-      oracle = Some(hierOracle(probeMax = 50, k = 3))),
+      oracle = Some(ivfKnnSql(hierCellsSql, probeMax = 50, k = 3))),
 
     // H (scale form): hierarchical bucketed kNN — llm_knn_bucketed's exact
     // contract (probe set vec_id < 100, k = 3, same output schema and
     // deterministic tiebreaks) over the two-level O(N·N^(1/4)) assignment,
     // so BOTH kNN contracts (the 50-probe ANN row and the 100-probe
-    // per-vector row) have a ≥10×-scale-safe variant (round-12 verdict #3:
-    // the 30× probe measured the flat assignment at 136–158× wall — the
+    // per-vector row) have a ≥10×-scale-safe variant (a
+    // 30× probe measured the flat assignment at 136–158× wall — the
     // documented N^1.5 curve — while the hier assignment ran the same data
     // 39× faster). Shares ivfKnn's probe/rerank tail, the
     // no-corpus-broadcast pins, and the AnnRecallSpec floor.
@@ -894,9 +917,9 @@ object VectorQueries {
         val (e, cents, cell, nprobe) = hierIndex(s, d)
         ivfKnn(e, cents, cell, nprobe, probeMax = 100, k = 3)
       },
-      oracle = Some(hierOracle(probeMax = 100, k = 3))),
+      oracle = Some(ivfKnnSql(hierCellsSql, probeMax = 100, k = 3))),
 
-    // H (scale form, round 14; re-celled round 15): full-corpus kNN GRAPH
+    // H (scale form): full-corpus kNN GRAPH
     // — the semantic-dedup primitive none of the probe-contract rows are:
     // EVERY vector's exact top-3 among its SRP-band bucket-mates (the
     // SNN/kNN-graph build step that embedding-cluster dedup and graph ANN
@@ -904,17 +927,16 @@ object VectorQueries {
     // (vec_id < 50/100) and broadcast it; here the query side IS the
     // corpus, so the plan is the LSH bucket-key shape: candidates come
     // from the signature table's SELF-join on (band_idx, band_val), rep
-    // vectors are CARRIED through the bucket join (the round-14
-    // carried-verify mechanics) so the dot scores inline with zero
+    // vectors are CARRIED through the bucket join (the
+    // carried-verify mechanics of srpRepGraph) so the dot scores inline with zero
     // re-attach joins, multi-band duplicate candidates collapse in ONE
     // linear (q_id, n_id) aggregation, and the per-q top-3 plans as
     // WindowGroupLimit heaps (pinned) so no bucket's full candidate list
     // survives to the sort.
     //
-    // Cell sizing (round 15, r14 verdict #2): the r14 version reused
-    // hierIndex's probe-contract ≈√N cells, so the candidate phase
-    // totaled Σ|cell|² ≈ N^1.5 scored pairs — measured 43× wall at 30×
-    // staging. This row now has its OWN occupancy-targeted cells: 8
+    // Cell sizing: hierIndex's probe-contract ≈√N cells would make the
+    // candidate phase total Σ|cell|² ≈ N^1.5 scored pairs — measured 43×
+    // wall at 30× staging. This row has its OWN occupancy-targeted cells: 8
     // independent SRP bands of ⌈log2(⌈N/64⌉)⌉ sign bits each (the
     // bits-per-band knob the LSH rows document), so bucket count ∝ N and
     // expected occupancy stays ≈ the constant target 64 at every corpus
@@ -961,7 +983,7 @@ object VectorQueries {
           // One linear shuffle collapses the ≤8× per-band candidate
           // multiplicity (all copies carry the identical dot, so max is
           // a value no-op); a distinct-then-attach form would pay two
-          // corpus-wide re-attach joins instead (rejected in the r14
+          // corpus-wide re-attach joins instead (rejected in the
           // carried-verify A/B, 25× at 10× staging).
           .groupBy(col("q_id"), col("n_id"))
           .agg(max(col("dot")).as("dot"))
@@ -971,8 +993,7 @@ object VectorQueries {
           .orderBy(col("q_id"), col("nn_rank"))
       },
       oracle = Some(s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH $vecsSql,
         s0 AS (SELECT count(*) AS n FROM embeddings),
         -- bits/band = ⌈log2(⌈N/64⌉)⌉ via exact integer binary-string
         -- length (float log2 could straddle a ulp boundary between
@@ -1013,7 +1034,7 @@ object VectorQueries {
         WHERE nn_rank <= 3
         ORDER BY q_id, nn_rank""")),
 
-    // H (pipeline capstone, round 14): SEMANTIC dedup — SemDeDup-shaped:
+    // H (pipeline capstone): SEMANTIC dedup — SemDeDup-shaped:
     // connect the SRP-LSH verified cosine pair set (the exact set
     // llm_neardup_cosine_lsh emits) into connected components
     // and assign every vector keep_id = min id of its component
@@ -1067,7 +1088,7 @@ object VectorQueries {
         ORDER BY vec_id""")),
 
 
-    // H (round 15): QUANTIZED K-MEANS CENTROID UPDATE — one exact Lloyd
+    // H: QUANTIZED K-MEANS CENTROID UPDATE — one exact Lloyd
     // iteration, the clustering primitive SemDeDup-style diversity
     // pruning and IVF index builds iterate at scale: assign every vector
     // to its cell (the shared two-level hier assignment — deterministic,
@@ -1093,15 +1114,7 @@ object VectorQueries {
       "llm_kmeans_update",
       (s, d) => {
         val (e, _, cell, _) = hierIndex(s, d)
-        val q = e
-          .select(col("vec_id"), col("v"),
-            array_max(transform(col("v"), x => abs(x))).as("scale"))
-          .select(col("vec_id"),
-            when(col("scale") > 0,
-              transform(col("v"),
-                x => floor(x / col("scale") * 127d + 0.5d).cast("bigint")))
-              .otherwise(transform(col("v"), _ => lit(0L))).as("q"))
-        q.join(cell, "vec_id")
+        quantize(e).join(cell, "vec_id")
           .select(col("c_id"), posexplode(col("q")).as(Seq("dim", "qc")))
           .groupBy(col("c_id"), col("dim"))
           .agg(count(lit(1)).as("n"), sum(col("qc")).as("qsum"))
@@ -1111,18 +1124,7 @@ object VectorQueries {
           .orderBy(col("c_id"), col("dim"))
       },
       oracle = Some(s"""$hierCellsSql,
-        sc AS (
-          SELECT vec_id,
-                 list_aggregate(list_transform(v, x -> abs(x)), 'max') AS scale
-          FROM e),
-        qv AS (
-          SELECT e.vec_id,
-                 CASE WHEN sc.scale > 0
-                   THEN list_transform(e.v,
-                     x -> CAST(floor(x / sc.scale * 127 + 0.5) AS BIGINT))
-                   ELSE list_transform(e.v, x -> CAST(0 AS BIGINT))
-                 END AS q
-          FROM e JOIN sc USING (vec_id)),
+        $quantizeSql,
         x AS (
           SELECT cell.c_id, r.i AS dim, qv.q[r.i + 1] AS qc
           FROM qv JOIN cell USING (vec_id), range(0, 64) r(i))
@@ -1133,7 +1135,7 @@ object VectorQueries {
         FROM x GROUP BY c_id, dim
         ORDER BY c_id, dim""")),
 
-    // H (round 15): CLUSTER-PROXIMITY SAMPLING — the third leg of the
+    // H: CLUSTER-PROXIMITY SAMPLING — the third leg of the
     // SemDeDup-style trilogy (semantic dedup → quantized Lloyd update →
     // THIS): per hier cell keep the K=8 vectors closest to the cell's
     // quantized centroid (the "most central exemplars" selection that
@@ -1173,7 +1175,7 @@ object VectorQueries {
         WHERE rk <= 8
         ORDER BY c_id, rk""")),
 
-    // H (round 18, r17 verdict #5): DIVERSITY PRUNING — SemDeDup's final
+    // H: DIVERSITY PRUNING — SemDeDup's final
     // keep-list given a per-cluster budget: within each hier cell, keep
     // the ⌈30%·|cell|⌉ vectors FARTHEST from the quantized centroid (the
     // SemDeDup paper's choice — for semantically clustered near-dups the
@@ -1184,7 +1186,7 @@ object VectorQueries {
     //
     // Shares llm_cluster_sample's quantize+assign+centroid stages via
     // quantizedDist2 (one definition — identical plans and the
-    // CacheManager-shared persist are structural, round-18 review);
+    // CacheManager-shared persist are structural);
     // dist² is DotProduct(diff, diff) — the accumulation PROVEN
     // bit-identical across engines — and the rank orders (dist2 DESC,
     // vec_id) so ties are deterministic. The budget ⌈0.3·n⌉ uses one
@@ -1241,14 +1243,10 @@ object VectorQueries {
       (s, d) => {
         val scaled = vecs(s, d).select(col("vec_id"), col("v"),
           sqrt(VectorOps.dot(col("v"), col("v"))).as("l2_norm"),
-          array_max(transform(col("v"), x => abs(x))).as("scale"))
+          int8Scale(col("v")).as("scale"))
         scaled
           .select(col("vec_id"), col("l2_norm"), col("scale"),
-            when(col("scale") > 0,
-              transform(col("v"),
-                x => floor(x / col("scale") * 127d + 0.5d).cast("bigint")))
-              .otherwise(transform(col("v"), _ => lit(0L))).as("q"),
-            col("v"))
+            int8Codes(col("v"), col("scale")).as("q"), col("v"))
           .select(col("vec_id"),
             size(col("v")).cast("bigint").as("dim"),
             col("l2_norm"),
@@ -1261,21 +1259,15 @@ object VectorQueries {
               .otherwise(lit(0d)).as("max_abs_err"))
           .orderBy(col("vec_id"))
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      oracle = Some(s"""
+        WITH $vecsSql,
         s AS (
           SELECT vec_id, v,
                  sqrt(list_dot_product(v, v)) AS l2_norm,
-                 list_aggregate(list_transform(v, x -> abs(x)), 'max') AS scale
+                 ${int8ScaleSql("v")} AS scale
           FROM e),
         q AS (
-          SELECT vec_id, v, l2_norm, scale,
-                 CASE WHEN scale > 0
-                   THEN list_transform(v,
-                     x -> CAST(floor(x / scale * 127 + 0.5) AS BIGINT))
-                   ELSE list_transform(v, x -> CAST(0 AS BIGINT))
-                 END AS qv
+          SELECT vec_id, v, l2_norm, scale, ${int8CodesSql("v", "scale")} AS qv
           FROM s)
         SELECT vec_id,
                CAST(len(v) AS BIGINT) AS dim,
@@ -1283,8 +1275,8 @@ object VectorQueries {
                CAST(list_aggregate(qv, 'min') AS BIGINT) AS q_min,
                CAST(list_aggregate(qv, 'max') AS BIGINT) AS q_max,
                -- coalesce: DuckDB's list sum over an EMPTY list is NULL,
-               -- Spark's aggregate(q, 0L, +) is 0 — latent zero-length-
-               -- embedding divergence (round-12 ADVICE), normalized here.
+               -- Spark's aggregate(q, 0L, +) is 0 — a zero-length
+               -- embedding would diverge without it.
                CAST(coalesce(list_aggregate(qv, 'sum'), 0) AS BIGINT) AS q_sum,
                CASE WHEN scale > 0
                  THEN list_aggregate(
@@ -1295,7 +1287,7 @@ object VectorQueries {
         FROM q
         ORDER BY vec_id""")),
 
-    // H (round 18, second session): LLOYD CONVERGENCE SHIFT — the number
+    // H: LLOYD CONVERGENCE SHIFT — the number
     // an iterative k-means driver checks after every llm_kmeans_update
     // pass ("stop when max centroid shift < ε"): per cell, the quantized-
     // domain dist² between the cell's SEED centroid (its c_id IS the seed
@@ -1333,7 +1325,7 @@ object VectorQueries {
         FROM cma JOIN qv ON qv.vec_id = cma.c_id
         ORDER BY cma.c_id""")),
 
-    // H (round 18): PQ CODE ASSIGNMENT — the compression half of product
+    // H: PQ CODE ASSIGNMENT — the compression half of product
     // quantization (doc on pqIndex above): every vector becomes M=8
     // 4-bit codes, 64× smaller than its float32 form. Output is the
     // exploded (vec_id, m, code) table — the columnar layout the codes
@@ -1354,13 +1346,12 @@ object VectorQueries {
           .orderBy(col("vec_id"), col("m"))
       },
       oracle = Some(s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH $vecsSql,
         $pqCodesSql
         SELECT vec_id, m, code FROM codes
         ORDER BY vec_id, m""")),
 
-    // H (round 18): ADC SEARCH — the query half of PQ: each of the 32
+    // H: ADC SEARCH — the query half of PQ: each of the 32
     // probe-contract queries precomputes its EXACT M×K sub-distance
     // table once (dt — PqProbeMax·128 rows, broadcast-scale by
     // construction), then every corpus vector is scored from its CODES
@@ -1386,8 +1377,7 @@ object VectorQueries {
           .select(col("q_id"), col("vec_id"), col("m"), col("dq")))
       },
       oracle = Some(s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH $vecsSql,
         $pqCodesSql,
         $pqDistSql,
         ds AS (
@@ -1396,18 +1386,9 @@ object VectorQueries {
           FROM codes JOIN dt ON codes.m = dt.dm AND codes.code = dt.dk
           WHERE codes.vec_id <> dt.q_id
           GROUP BY dt.q_id, codes.vec_id),
-        ranked AS (
-          SELECT q_id, vec_id,
-                 list_dot_product(dl, $pqOnesSql) AS adist,
-                 row_number() OVER (PARTITION BY q_id
-                   ORDER BY list_dot_product(dl, $pqOnesSql), vec_id)
-                   AS nn_rank
-          FROM ds)
-        SELECT q_id, nn_rank, vec_id, adist FROM ranked
-        WHERE nn_rank <= $PqTopK
-        ORDER BY q_id, nn_rank""")),
+        $pqTopKSql""")),
 
-    // H (round 18): IVF-PQ — the production billion-scale ANN layout
+    // H: IVF-PQ — the production billion-scale ANN layout
     // (FAISS IVFADC): the hierarchical IVF assignment prunes the corpus
     // to the query's top-nprobe cells, then ADC scores ONLY those cells'
     // residents from their codes. Per query the work drops from N code
@@ -1427,16 +1408,7 @@ object VectorQueries {
         val (e, cents, cell, nprobe) = hierIndex(s, d)
         val (_, cb, codes) = pqIndex(s, d)
         val dt = pqDistTable(e, cb)
-        val probeW = Window.partitionBy(col("q_id"))
-          .orderBy(VectorOps.dot(col("qv"), col("cv")).desc, col("c_id"))
-        val probes = e.where(col("vec_id") < PqProbeMax)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"))
-          .crossJoin(broadcast(cents))
-          .withColumn("rn", row_number().over(probeW))
-          .where(col("rn") <= nprobe)
-          .select(col("q_id"), col("c_id"))
-        val cand = probes.join(cell, "c_id")
-          .where(col("vec_id") =!= col("q_id"))
+        val cand = probedResidents(queryVecs(e, PqProbeMax), cents, cell, nprobe)
           .select(col("q_id"), col("vec_id"))
         // dt's query key renamed so the equi-condition stays unambiguous
         // after cand contributes its own q_id through the codes join.
@@ -1451,38 +1423,18 @@ object VectorQueries {
       oracle = Some(s"""$hierCellsSql,
         $pqCodesSql,
         $pqDistSql,
-        probe AS (
-          SELECT qs.q_id, c.c_id,
-                 row_number() OVER (PARTITION BY qs.q_id
-                   ORDER BY list_dot_product(qs.qv, c.cv) DESC, c.c_id)
-                   AS rn
-          FROM qs CROSS JOIN c),
-        probes AS (SELECT q_id, c_id FROM probe
-                   WHERE rn <= (SELECT nprobe FROM s)),
-        cand AS (
-          SELECT p.q_id, cl.vec_id
-          FROM probes p JOIN cell cl ON p.c_id = cl.c_id
-          WHERE cl.vec_id <> p.q_id),
+        ${probeCandSql("qs")},
         ds AS (
-          SELECT cand.q_id, cand.vec_id,
+          SELECT cand.q_id, cand.n_id AS vec_id,
                  list(dt.dq ORDER BY codes.m) AS dl
           FROM cand
-          JOIN codes ON codes.vec_id = cand.vec_id
+          JOIN codes ON codes.vec_id = cand.n_id
           JOIN dt ON dt.dm = codes.m AND dt.dk = codes.code
                  AND dt.q_id = cand.q_id
-          GROUP BY cand.q_id, cand.vec_id),
-        ranked AS (
-          SELECT q_id, vec_id,
-                 list_dot_product(dl, $pqOnesSql) AS adist,
-                 row_number() OVER (PARTITION BY q_id
-                   ORDER BY list_dot_product(dl, $pqOnesSql), vec_id)
-                   AS nn_rank
-          FROM ds)
-        SELECT q_id, nn_rank, vec_id, adist FROM ranked
-        WHERE nn_rank <= $PqTopK
-        ORDER BY q_id, nn_rank""")),
+          GROUP BY cand.q_id, cand.n_id),
+        $pqTopKSql""")),
 
-    // H (round 18, second session): CLUSTERING PURITY — the standard
+    // H: CLUSTERING PURITY — the standard
     // EXTERNAL clustering evaluation, and the first row to touch the
     // fixture's ground-truth `label` column: per hier cell, the majority
     // true label and purity = majority/|cell| (ties break to the smallest
@@ -1534,7 +1486,7 @@ object VectorQueries {
         FROM p WHERE rn = 1
         ORDER BY c_id""")),
 
-    // H (round 18, second session): PQ CODE PACKING — the storage step
+    // H: PQ CODE PACKING — the storage step
     // that makes the 64× claim LITERAL: the M=8 4-bit codes bit-pack into
     // one 32-bit word per vector (code_m << 4m, summed — disjoint nibble
     // ranges, so integer addition IS concatenation and the sum is
@@ -1551,8 +1503,7 @@ object VectorQueries {
           .orderBy(col("vec_id"))
       },
       oracle = Some(s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH $vecsSql,
         $pqCodesSql
         SELECT vec_id,
                CAST(sum(code * (CAST(1 AS BIGINT)
@@ -1560,7 +1511,7 @@ object VectorQueries {
         FROM codes GROUP BY vec_id
         ORDER BY vec_id""")),
 
-    // H (round 18, second session): PQ DISTORTION AUDIT — the number a
+    // H: PQ DISTORTION AUDIT — the number a
     // production deployment reports before committing to a codebook (and
     // the llm_emb_quant twin for the PQ path): per-vector reconstruction
     // error ‖v − recon(codes)‖², which is exactly the sum of the
@@ -1590,14 +1541,12 @@ object VectorQueries {
               col("d2m").as("dq")))), p => p.getField("dq")).as("ds"),
             first(col("l2sq")).as("l2sq"))
           .select(col("vec_id"),
-            VectorOps.dot(col("ds"),
-              array(Seq.fill(PqM)(lit(1.0d)): _*)).as("recon_err"),
+            pqSum(col("ds")).as("recon_err"),
             col("l2sq"))
           .orderBy(col("vec_id"))
       },
       oracle = Some(s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH $vecsSql,
         $pqCodesSql,
         dm AS (
           SELECT vec_id, m, min(d2) AS d2m
@@ -1611,7 +1560,7 @@ object VectorQueries {
         FROM dv JOIN e ON e.vec_id = dv.vec_id
         ORDER BY dv.vec_id""")),
 
-    // H (round 19): PQ CODEBOOK TRAINING — one per-subspace Lloyd
+    // H: PQ CODEBOOK TRAINING — one per-subspace Lloyd
     // iteration over the seed codebook, the production training step the
     // PQ family documents as its stand-in's successor (doc above pqIndex:
     // "a production deployment would Lloyd-refine it with exactly
@@ -1640,15 +1589,7 @@ object VectorQueries {
       "llm_pq_train",
       (s, d) => {
         val (e, _, codes) = pqIndex(s, d)
-        val q = e
-          .select(col("vec_id"), col("v"),
-            array_max(transform(col("v"), x => abs(x))).as("scale"))
-          .select(col("vec_id"),
-            when(col("scale") > 0,
-              transform(col("v"),
-                x => floor(x / col("scale") * 127d + 0.5d).cast("bigint")))
-              .otherwise(transform(col("v"), _ => lit(0L))).as("q"))
-        q.join(codes, "vec_id")
+        quantize(e).join(codes, "vec_id")
           .select(col("m"), col("code").as("k"),
             posexplode(pqSub(col("q"), col("m"))).as(Seq("dim", "qc")))
           .groupBy(col("m"), col("k"), col("dim"))
@@ -1660,24 +1601,9 @@ object VectorQueries {
           .orderBy(col("m"), col("k"), col("dim"))
       },
       oracle = Some(s"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH $vecsSql,
         $pqCodesSql,
-        -- the llm_kmeans_update sc → qv quantization spelling (that
-        -- oracle embeds it after hierCellsSql; here the cells are the PQ
-        -- codes, so the chain stands alone).
-        sc AS (
-          SELECT vec_id,
-                 list_aggregate(list_transform(v, x -> abs(x)), 'max') AS scale
-          FROM e),
-        qv AS (
-          SELECT e.vec_id,
-                 CASE WHEN sc.scale > 0
-                   THEN list_transform(e.v,
-                     x -> CAST(floor(x / sc.scale * 127 + 0.5) AS BIGINT))
-                   ELSE list_transform(e.v, x -> CAST(0 AS BIGINT))
-                 END AS q
-          FROM e JOIN sc USING (vec_id)),
+        $quantizeSql,
         x AS (
           SELECT codes.m, codes.code AS k, r.i AS dim,
                  qv.q[codes.m * $PqDsub + r.i + 1] AS qc

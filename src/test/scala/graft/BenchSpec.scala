@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import graft.Bench.Sample
 
-/** Bench's pure rules: the median over successful samples, the per-query
-  * admissibility verdict and the total; and the one query timer that Bench,
-  * the probes and `Dev` share.
+/** Bench's pure rules: which rows are repeated, the median over successful
+  * samples, the per-query admissibility flag and the total; and the one
+  * query timer that Bench, the probes and `Dev` share.
   */
 class BenchSpec extends GraftSpec {
   private val healthy = 1.7e10
@@ -25,6 +25,18 @@ class BenchSpec extends GraftSpec {
   test("one dirty repeat, or one whose probes both failed, is not admissible") {
     assert(!Bench.admissible(Seq(first, repeat(2.0e10, 2.0e10), repeat(1.6e10, 1.5e10)), healthy))
     assert(!Bench.admissible(Seq(first, repeat(2.0e10, 2.0e10), repeat(-1.0, -1.0)), healthy))
+  }
+
+  test("the first declared row is always repeated, any other row only when its first sample is slow or failed") {
+    val fast = Sample(sec = 0.3, at = 0.0, ev = 0)
+    val failed = Sample(sec = -1.0, at = 0.0, ev = 0)
+    assert(Bench.repeated(0, fast))
+    assert(Bench.repeated(0, first))
+    assert(!Bench.repeated(1, fast))
+    assert(Bench.repeated(1, first))
+    assert(Bench.repeated(1, failed))
+    assert(!Bench.repeated(2, Sample(sec = Bench.RepeatFloorSec - 0.01, at = 0.0, ev = 0)))
+    assert(Bench.repeated(2, Sample(sec = Bench.RepeatFloorSec, at = 0.0, ev = 0)))
   }
 
   test("failed samples are left out of the median") {
